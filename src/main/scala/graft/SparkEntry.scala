@@ -79,14 +79,6 @@ object SparkEntry {
     graft.tools.FuzzEvalCrawl.specs
       .map(sp => sp.name -> sp.query).toMap ++
     graft.tools.FuzzTable.specs
-      .map(sp => sp.name -> sp.query).toMap ++
-    graft.tools.FuzzTable.specsV2
-      .map(sp => sp.name -> sp.query).toMap ++
-    graft.tools.FuzzTableV3.specs
-      .map(sp => sp.name -> sp.query).toMap ++
-    graft.tools.FuzzTableV4.specs
-      .map(sp => sp.name -> sp.query).toMap ++
-    graft.tools.FuzzTableV5.specs
       .map(sp => sp.name -> sp.query).toMap ++ Map(
 
     // O1/O5/O11/O18/O19-O20: row domain → two-level grouping → struct of
@@ -5801,14 +5793,6 @@ object SparkEntry {
     graft.tools.FuzzEvalCrawl.specs
       .map(sp => sp.name -> sp.sql).toMap ++
     graft.tools.FuzzTable.specs
-      .map(sp => sp.name -> sp.sql).toMap ++
-    graft.tools.FuzzTable.specsV2
-      .map(sp => sp.name -> sp.sql).toMap ++
-    graft.tools.FuzzTableV3.specs
-      .map(sp => sp.name -> sp.sql).toMap ++
-    graft.tools.FuzzTableV4.specs
-      .map(sp => sp.name -> sp.sql).toMap ++
-    graft.tools.FuzzTableV5.specs
       .map(sp => sp.name -> sp.sql).toMap ++ Map(
     "q20_dedup_exact" ->
       """SELECT array_to_string(list_slice(string_split(text,' '), 1, 8), ' ')

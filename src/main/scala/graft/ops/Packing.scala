@@ -167,24 +167,28 @@ object Packing {
     // the batch, or the pruned table scan, twice). The sampling pass
     // now fills this cache and the shuffle's map stage reads it; it
     // is released right after the totals job materializes the
-    // post-shuffle cache every later consumer uses.
+    // post-shuffle cache every later consumer uses. If the sampling or
+    // the totals job throws, both caches are released before rethrow.
     val pIn = withVals.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val p0 = (if (partitions > 0)
-        pIn.repartitionByRange(partitions, order)
-      else pIn.repartitionByRange(order))
-      .sortWithinPartitions(order)
-      .withColumn("__pid", spark_partition_id())
-    val p = p0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ONE job: per-partition totals (materializes the shared cache);
-    // exclusive prefix offsets and grand totals fall out driver-side
-    val totals = values.indices.map(i => sum(col(s"__v$i")).as(s"__t$i"))
-    val totRows = p.groupBy("__pid").agg(totals.head, totals.tail: _*)
-      .collect()
-      .map(r => r.getInt(0) -> values.indices.map(i =>
-        if (r.isNullAt(i + 1)) 0L else r.getLong(i + 1)))
-      .sortBy(_._1)
-    pIn.unpersist()
+    val (p, totRows) = try {
+      val sorted = (if (partitions > 0)
+          pIn.repartitionByRange(partitions, order)
+        else pIn.repartitionByRange(order))
+        .sortWithinPartitions(order)
+        .withColumn("__pid", spark_partition_id())
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // ONE job: per-partition totals (materializes the shared cache);
+      // exclusive prefix offsets and grand totals fall out driver-side
+      val totals = values.indices.map(i => sum(col(s"__v$i")).as(s"__t$i"))
+      val rows = try sorted.groupBy("__pid")
+        .agg(totals.head, totals.tail: _*).collect()
+        .map(r => r.getInt(0) -> values.indices.map(i =>
+          if (r.isNullAt(i + 1)) 0L else r.getLong(i + 1)))
+        .sortBy(_._1)
+      catch { case t: Throwable => sorted.unpersist(); throw t }
+      (sorted, rows)
+    } finally pIn.unpersist()
     val grand = values.indices.map(i => totRows.map(_._2(i)).sum)
     // exclusive running offsets in pid order
     var acc = values.indices.map(_ => 0L).toIndexedSeq

@@ -1640,6 +1640,10 @@ object Sources {
         .drop("__pos")
         .write.mode("overwrite")
         .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
+        // one part file per leaf is a commit invariant (checked below):
+        // a session-level spark.sql.files.maxRecordsPerFile must not
+        // split a leaf's file
+        .option("maxRecordsPerFile", "0")
         .partitionBy(partCols :+ "shard": _*).parquet(dataDir)
       val sr = cacheStatsThunk match {
         case _ if footerStatsSafe =>

@@ -4163,4 +4163,16 @@ class OpsSpec extends AnyFunSuite {
     assert(out(2).getLong(3) > 0L)
     assert(out(2).getString(1).startsWith("unique"))
   }
+
+  test("orderedCumsumsCounted releases its caches when the totals job fails") {
+    def pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = pinned
+    val df = spark.range(200).toDF("id")
+    intercept[Exception] {
+      Packing.orderedCumsumsCounted(df, col("id"),
+        Seq("c" -> raise_error(lit("forced totals failure"))), 0)
+    }
+    assert((pinned -- before).isEmpty,
+      s"left pinned: ${(pinned -- before).toSeq.sorted}")
+  }
 }

@@ -3266,4 +3266,28 @@ class SourcesSpec extends AnyFunSuite {
       s"corrupt tombstone not flagged: ${findings.toSeq}")
     Sources.dropShardedTable(spark, path)
   }
+
+  test("sharded write commits under a session maxRecordsPerFile of 1") {
+    import org.apache.spark.sql.functions._
+    val conf = "spark.sql.files.maxRecordsPerFile"
+    val prior = spark.conf.getOption(conf)
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_shmaxrec").toString
+    // 4 leaves of 100 rows each: a per-file cap of 1 would split every
+    // leaf into 100 part files if the writer honoured it
+    val in = spark.range(400)
+      .select(col("id").as("doc_id"), (col("id") % 7).as("v"))
+    spark.conf.set(conf, "1")
+    try {
+      Sources.writeShardedTable(in, col("doc_id"), col("doc_id"), path,
+        4, Seq("doc_id"))
+      val back = Sources.readShardedTable(spark, path)
+      assert(back.count() == 400L)
+      assert(rows(back.select("doc_id", "v")) == rows(in))
+      Sources.dropShardedTable(spark, path)
+    } finally prior match {
+      case Some(v) => spark.conf.set(conf, v)
+      case None => spark.conf.unset(conf)
+    }
+  }
 }

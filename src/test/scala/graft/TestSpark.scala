@@ -22,6 +22,12 @@ object TestSpark {
               s"/tmp/graft-warehouse-${System.nanoTime()}")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // "No Partition Defined for Window operation!" is logged once per
+    // planned window, thousands of times per run; only that logger is
+    // quieted, every other warning stays visible
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
