@@ -936,8 +936,7 @@ object Sources {
       dataRows.groupBy(_.getString(0)).toSeq.sortBy(_._1)
         .map { case (dDir, rs) =>
           val dirs = rs.map(r => s"$dDir/${r.getString(3)}").toSeq
-          val f = translateDir(
-            spark.read.option("basePath", dDir).parquet(dirs: _*),
+          val f = translateDir(readDir(spark, dDir, dirs: _*),
             rs.head.getLong(2), events, version)
           val v = (if (f.columns.contains(colName)) col(colName)
                    else lit(null)).cast(dt)
@@ -1505,12 +1504,12 @@ object Sources {
       : Long = {
     import org.apache.spark.sql.functions._
     require(numShards >= 1, s"writeShardedTable: numShards $numShards")
-    // `shard` is the partition column the writer OWNS and `__pos` is
-    // its position scaffolding: an input that already carries one
-    // would be silently clobbered (its `shard` even hijacked as the
-    // partition key and lost on readback) — the orderedCumsums clash
-    // contract.
-    val clash = df.columns.intersect(Seq("shard", "__pos"))
+    // `shard` is the partition column the writer OWNS and `__pos` /
+    // `__ord` are its position scaffolding: an input that already
+    // carries one would be silently clobbered (its `shard` even
+    // hijacked as the partition key and lost on readback) — the
+    // orderedCumsums clash contract.
+    val clash = df.columns.intersect(Seq("shard", "__pos", "__ord"))
     require(clash.isEmpty, s"writeShardedTable: reserved column(s) " +
       s"${clash.mkString(", ")} already exist in the input")
     val spark = df.sparkSession
@@ -1549,10 +1548,16 @@ object Sources {
     // the SAME per-partition-totals pass the prefix sum needs (r13:
     // the separate writer-side `df.count()` job — one full extra
     // evaluation of the input lineage per commit — is gone).
+    // The order key is MATERIALIZED as `__ord` before the cumsum: it
+    // is then computed once per row into the pre-shuffle cache, and
+    // the range sampler, the shuffle and every sort compare the stored
+    // value — a computed key (the z-order Morton interleave over
+    // per-dimension quantile buckets) was otherwise re-evaluated in
+    // every comparison. Same values, so the same positions.
     val (withPos, releaseCumsumCache, cumsumTotals) = graft.ops.Packing
-      .orderedCumsumsCounted(df,
-        org.apache.spark.sql.functions.struct(orderCol, id),
-        Seq("__pos" -> lit(1L)), partitions = 0)
+      .orderedCumsumsCounted(df.withColumn("__ord", orderCol),
+        struct(col("__ord"), id), Seq("__pos" -> lit(1L)),
+        partitions = 0)
     val n = cumsumTotals.head
     // An empty snapshot would write no part files, so the manifest
     // pass could not even infer a schema (and a versioned dir with no
@@ -1637,7 +1642,7 @@ object Sources {
       data.repartition(numShards, col("shard"))
         .sortWithinPartitions(col("shard") +:
           partCols.map(col) :+ col("__pos"): _*)
-        .drop("__pos")
+        .drop("__pos", "__ord")
         .write.mode("overwrite")
         .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
         // one part file per leaf is a commit invariant (checked below):
@@ -1714,7 +1719,7 @@ object Sources {
           // ASYNC listener bus, which lags multi-second behind rapid
           // action chains (measured 2-3x wall regressions on the fuzz
           // chains) — a small read-back job is strictly cheaper
-          val delN = spark.read.parquet(delDir).count()
+          val delN = readDir(spark, delDir).count()
           require(delN == n,
             s"mergeShardedTable: batch has ${n - delN} duplicate " +
               s"key(s) ($n rows, $delN distinct) — upsert needs " +
@@ -2287,8 +2292,11 @@ object Sources {
   // as the manifest rows.
   private val readSchemaCache = new java.util.concurrent
     .ConcurrentHashMap[(String, Long, String), StructType]()
-  // data-dir path -> physical schema. Data dirs carry a random token
-  // suffix and are immutable once referenced — safe to key by path.
+  // immutable dir path -> schema: a data or delete dir's FILE schema
+  // ([[fileSchema]]) keyed by the dir, the head leaf's physical schema
+  // ([[physHeadSchema]]) keyed by the leaf. Data dirs carry a random
+  // token suffix and are immutable once referenced — safe to key by
+  // path.
   private val dirSchemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
@@ -2365,13 +2373,77 @@ object Sources {
   }
 
   /** The head dir's PHYSICAL schema (partition columns typed by
-    * discovery, `shard` included) — one footer read, memoized by the
-    * immutable dir path. */
+    * discovery, `shard` included) — the head's [[fileSchema]] plus the
+    * discovered directory columns, memoized by the immutable leaf
+    * path. */
   private def physHeadSchema(spark: SparkSession, m: ShardedMeta)
+      : StructType = {
+    // resolved first: a mapping function must not update the map
+    val fileCols = fileSchema(spark, m.headDir)
+    dirSchemaCache.computeIfAbsent(s"${m.headDir}/${m.headLeaf}", leaf =>
+      spark.read.schema(fileCols).option("basePath", m.headDir)
+        .parquet(leaf).schema)
+  }
+
+  /** The FILE schema of a data or delete dir — the columns its part
+    * files store; partition and `shard` columns live in its directory
+    * names — from ONE footer read on the driver, memoized by the
+    * immutable dir path. It is the answer Spark's non-merge schema
+    * inference gives for the dir: the footer of the first part file
+    * (hidden and `_`-prefixed paths skipped, as Spark's file index
+    * does) through the same `ParquetFileFormat.readSchemaFromFooter`,
+    * minus the Spark job the inference pays per `spark.read.parquet`.
+    * Every part file of a dir comes from one write, so every footer
+    * carries the same schema. A dir with no part file is handed to
+    * Spark's inference, which fails the way it always has. */
+  private[graft] def fileSchema(spark: SparkSession, dir: String)
       : StructType =
-    dirSchemaCache.computeIfAbsent(m.headDir, _ =>
-      spark.read.option("basePath", m.headDir)
-        .parquet(s"${m.headDir}/${m.headLeaf}").schema)
+    dirSchemaCache.computeIfAbsent(dir, _ => {
+      import org.apache.spark.sql.execution.datasources.parquet.{
+        ParquetFileFormat, ParquetFooterReader,
+        ParquetToSparkSchemaConverter}
+      val hconf = spark.sparkContext.hadoopConfiguration
+      val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(hconf)
+      // qualified like the listed paths, so a relative dir strips too
+      val root = fs.makeQualified(new org.apache.hadoop.fs.Path(dir))
+      val rootPath = root.toUri.getPath
+      def hidden(seg: String): Boolean =
+        (seg.startsWith("_") && !seg.contains("=")) ||
+          seg.startsWith(".") || seg.endsWith("._COPYING_")
+      val parts = scala.collection.mutable.ArrayBuffer
+        .empty[org.apache.hadoop.fs.FileStatus]
+      if (fs.exists(root)) {
+        val it = fs.listFiles(root, true)
+        while (it.hasNext) {
+          val st = it.next()
+          if (!st.getPath.toUri.getPath.stripPrefix(rootPath)
+                .split('/').exists(s => s.nonEmpty && hidden(s)))
+            parts += st
+        }
+      }
+      parts.sortBy(_.getPath.toString).headOption match {
+        case Some(st) =>
+          val footer = new org.apache.parquet.hadoop.Footer(st.getPath,
+            ParquetFooterReader.readFooter(
+              org.apache.parquet.hadoop.util.HadoopInputFile
+                .fromStatus(st, hconf),
+              org.apache.parquet.format.converter.ParquetMetadataConverter
+                .SKIP_ROW_GROUPS))
+          ParquetFileFormat.readSchemaFromFooter(footer,
+            new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        case None => spark.read.parquet(dir).schema
+      }
+    })
+
+  /** Read a data or delete dir (or the given leaves of it, under the
+    * dir as `basePath`) with its [[fileSchema]]: partition discovery
+    * still types the directory columns, and no inference job runs. */
+  private def readDir(spark: SparkSession, dir: String,
+                      leaves: String*): DataFrame = {
+    val r = spark.read.schema(fileSchema(spark, dir))
+    if (leaves.isEmpty) r.parquet(dir)
+    else r.option("basePath", dir).parquet(leaves: _*)
+  }
 
   private def logicalHeadSchemaOf(spark: SparkSession, m: ShardedMeta)
       : StructType =
@@ -2491,8 +2563,14 @@ object Sources {
                        preds: Seq[(String, Long, Long)] = Nil,
                        version: Option[Long] = None,
                        partPreds: Seq[(String, String)] = Nil)
+      : DataFrame =
+    readAt(spark, resolveMeta(spark, path, version), preds, partPreds)
+
+  /** [[readShardedTable]] of an already-resolved snapshot. */
+  private def readAt(spark: SparkSession, meta: ShardedMeta,
+                     preds: Seq[(String, Long, Long)] = Nil,
+                     partPreds: Seq[(String, String)] = Nil)
       : DataFrame = {
-    val meta = resolveMeta(spark, path, version)
     // tombstones are never pruned: key-only files, metadata-scale —
     // and a pruned-away tombstone would RESURRECT rows.
     // Pruning runs DRIVER-SIDE over the memoized manifest rows (r13 —
@@ -2810,16 +2888,14 @@ object Sources {
       // specs and probes measure)
       val head = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        translateDir(
-          spark.read.option("basePath", headDir).parquet(headDir),
-          headSeq, events, readV).schema)
+        translateDir(readDir(spark, headDir), headSeq, events,
+          readV).schema)
       val headTagged =
         if (delRows.isEmpty) head else head.withColumn("__seq", lit(0L))
       val base = rows.groupBy(_.getString(0)).toSeq.sortBy(_._1).map {
         case (dDir, rs) =>
           val dirs = rs.map(r => s"$dDir/${r.getString(1)}").toSeq
-          val f = translateDir(
-            spark.read.option("basePath", dDir).parquet(dirs: _*),
+          val f = translateDir(readDir(spark, dDir, dirs: _*),
             rs.head.getLong(2), events, readV)
           if (delRows.isEmpty) f
           else f.withColumn("__seq", lit(rs.head.getLong(2)))
@@ -2829,9 +2905,7 @@ object Sources {
       else applyDeletes(spark, base, delRows, events, readV)
     }
     if (rows.isEmpty)
-      translateDir(
-        spark.read.option("basePath", headDir).parquet(headDir)
-          .filter(lit(false)),
+      translateDir(readDir(spark, headDir).filter(lit(false)),
         headSeq, events, readV)
     else if (rows.map(_.getString(0)).distinct.length >=
         FastReadDirThreshold) {
@@ -3028,7 +3102,7 @@ object Sources {
         s"(${delCols.mkString(", ")}) — unsupported")
     val idName = delCols.head
     val dels = delRows.map { r =>
-      spark.read.parquet(r.getString(0))
+      readDir(spark, r.getString(0))
         .select(col(r.getString(2)).as("__del_id"))
         .withColumn("__del_seq", lit(r.getLong(1)))
     }.reduce(_.unionByName(_))
@@ -3107,8 +3181,7 @@ object Sources {
     val events = meta.renames
     val headSchema = logicalHeadSchemaOf(spark, meta)
     val merged0 = small.toSeq.sorted.map { d =>
-      translateDir(spark.read.option("basePath", d).parquet(d),
-          dirSeq(d), events, current)
+      translateDir(readDir(spark, d), dirSeq(d), events, current)
         .withColumn("__seq", lit(dirSeq(d)))
     }.reduce(_.unionByName(_, allowMissingColumns = true))
     val merged1 = (if (delRows.isEmpty) merged0.drop("__seq")
@@ -3162,7 +3235,7 @@ object Sources {
       .parquet(delDir)
     // read-back count, NOT an Observation: obs.get blocks on the
     // async listener bus (see writeSnapshot's tombstone comment)
-    val n = spark.read.parquet(delDir).count()
+    val n = readDir(spark, delDir).count()
     // nothing-matched probe folded into THIS count (delete-where's
     // old isEmpty paid a full extra evaluation of the pruned read):
     // keep the current version, leave no trace
@@ -3212,9 +3285,12 @@ object Sources {
         .mkString(",")} != table columns ${tableSchema.fieldNames
         .sorted.mkString(",")}")
     val aligned = alignBatchTypes(df, tableSchema, "mergeShardedTable")
+    // an empty batch upserts nothing: keep the current version (the
+    // emptiness falls out of the commit's own row count, no extra job)
     writeSnapshot(aligned, col(idName), orderCol, path, numShards,
       statsCols, parent = LatestParent, batchId = batchId, op = "merge",
-      deleteKeyCol = Some(idName), meta = Some(meta))
+      deleteKeyCol = Some(idName), meta = Some(meta),
+      onEmpty = Some(meta.version))
   }
 
   // ---- COLUMN RENAME via a manifest-level mapping ------------------
@@ -3458,19 +3534,24 @@ object Sources {
   def rewriteShardedTable(spark: SparkSession, path: String, id: Column,
                           orderCol: Column, numShards: Int,
                           statsCols: Seq[String]): Long = {
-    // the rewritten manifest references no old dir, but the commit
-    // LOG must survive it: every committed batch id rides along as a
-    // zero-row ledger row, or a post-rewrite foreachBatch replay
-    // would re-apply its batch (see [[ledgerRows]])
     val meta = resolveMeta(spark, path)
-    val base = meta.version
-    val ids = meta.batchIds.toSeq.sorted
-    val cur = readShardedTable(spark, path).drop("shard")
-    writeSnapshot(cur, id, orderCol, path, numShards, statsCols,
-      parent = ledgerRows(spark, ids)
-        .map(l => FixedParent(l, base)).getOrElse(NoParent),
-      batchId = -1L, op = "rewrite", meta = Some(meta))
+    commitRewrite(meta, readAt(spark, meta).drop("shard"), id, orderCol,
+      numShards, statsCols)
   }
+
+  /** Commit `cur` — a read of the table at `meta.version` — as one
+    * rewrite snapshot derived from exactly that version. The rewritten
+    * manifest references no old dir, but the commit LOG must survive
+    * it: every committed batch id rides along as a zero-row ledger
+    * row, or a post-rewrite foreachBatch replay would re-apply its
+    * batch (see [[ledgerRows]]). */
+  private def commitRewrite(meta: ShardedMeta, cur: DataFrame, id: Column,
+                            orderCol: Column, numShards: Int,
+                            statsCols: Seq[String]): Long =
+    writeSnapshot(cur, id, orderCol, meta.path, numShards, statsCols,
+      parent = ledgerRows(cur.sparkSession, meta.batchIds.toSeq.sorted)
+        .map(l => FixedParent(l, meta.version)).getOrElse(NoParent),
+      batchId = -1L, op = "rewrite", meta = Some(meta))
 
   /** INCREMENTAL (CDC) read, insert side: the rows added to the table
     * in versions (`fromVersion`, `toVersion`] by write/append/merge —
@@ -3518,8 +3599,7 @@ object Sources {
     // rename history at the window's END version
     if (ins.isEmpty)
       translateDir(
-        spark.read.option("basePath", metas(toVersion).headDir)
-          .parquet(metas(toVersion).headDir).filter(lit(false)),
+        readDir(spark, metas(toVersion).headDir).filter(lit(false)),
         metas(toVersion).headSeq, events, toVersion)
     else
       ins.groupBy(_._1).toSeq.sortBy(_._1).map {
@@ -3527,7 +3607,7 @@ object Sources {
           // whole-dir read: every (shard, partition) leaf of a dir
           // new in the window is new (the diff is dir-grained), and
           // partition discovery recovers layout columns either way
-          translateDir(spark.read.parquet(dDir), rs.head._3, events,
+          translateDir(readDir(spark, dDir), rs.head._3, events,
             toVersion)
       }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
@@ -3574,7 +3654,7 @@ object Sources {
         .distinct
       require(names.length == 1,
         s"tombstones on different key columns: ${names.mkString(", ")}")
-      fresh.map(r => spark.read.parquet(r._1)
+      fresh.map(r => readDir(spark, r._1)
           .select(col(r._2).as(names.head)))
         .reduce(_.unionByName(_)).distinct()
     }
@@ -3596,60 +3676,54 @@ object Sources {
   def writeShardedTableZOrdered(df: DataFrame, id: Column,
                                 zCols: Seq[String], path: String,
                                 numShards: Int,
-                                bitsPerCol: Int = 8): Long = {
+                                bitsPerCol: Int = 8): Long =
+    writeShardedTable(df, id,
+      zOrderKey(df, zCols, bitsPerCol, "writeShardedTableZOrdered"),
+      path, numShards, statsCols = zCols)
+
+  /** Z-ORDER as MAINTENANCE: re-cluster the CURRENT table state along
+    * `zCols` in one rewrite snapshot — the post-hoc form of
+    * [[writeShardedTableZOrdered]] for a table that grew through
+    * appends and lost locality. Commits like [[rewriteShardedTable]],
+    * so the batch-id ledger survives and old versions stay readable
+    * until expiry. The table is read ONCE, at the resolved version:
+    * the quantile sketch and the rewrite consume the same frame. Cost:
+    * one sketch pass over all z columns + the rewrite itself (O(table)
+    * — that is what a re-cluster IS). */
+  def rewriteShardedTableZOrdered(spark: SparkSession, path: String,
+                                  idName: String, zCols: Seq[String],
+                                  numShards: Int,
+                                  bitsPerCol: Int = 8): Long = {
+    val meta = resolveMeta(spark, path)
+    val cur = readAt(spark, meta).drop("shard")
+    commitRewrite(meta, cur, org.apache.spark.sql.functions.col(idName),
+      zOrderKey(cur, zCols, bitsPerCol, "rewriteShardedTableZOrdered"),
+      numShards, (idName +: zCols).distinct)
+  }
+
+  /** The z-order key of `df` over `zCols`: each dimension
+    * rank-quantized to `bitsPerCol` bits by ONE multi-column
+    * approx-quantile sketch pass (driver state = 2^bits - 1 doubles
+    * per dimension), then Morton-interleaved by [[zValueK]]. Nulls
+    * land in bucket 0. */
+  private def zOrderKey(df: DataFrame, zCols: Seq[String],
+                        bitsPerCol: Int, caller: String): Column = {
     import org.apache.spark.sql.functions._
     require(zCols.size >= 2 && zCols.size <= 6,
-      s"writeShardedTableZOrdered: 2..6 z columns (got ${zCols.size})")
+      s"$caller: 2..6 z columns (got ${zCols.size})")
     require(bitsPerCol >= 1 && zCols.size * bitsPerCol <= 62,
       s"bitsPerCol x dims must fit a long, got " +
         s"${zCols.size} x $bitsPerCol")
     val nB = 1 << bitsPerCol
     val probs = (1 until nB).map(_.toDouble / nB).toArray
-    // ONE sketch pass for ALL dimensions (the multi-column
-    // approxQuantile shares the scan — r13: the per-column form paid
-    // one full pass per z column), driver state = nB-1 doubles each
     val allSplits = df.stat.approxQuantile(zCols.toArray, probs, 0.001)
     def bucket(c: String, splits: Array[Double]): Column = {
       val arr = array(splits.map(lit(_)): _*)
       aggregate(arr, lit(0L), (acc, x) =>
         acc + when(col(c).cast("double") >= x, 1L).otherwise(0L))
     }
-    val z = zValueK(zCols.zip(allSplits.toSeq).map {
+    zValueK(zCols.zip(allSplits.toSeq).map {
       case (c, s) => bucket(c, s) }, bitsPerCol)
-    writeShardedTable(df, id, z, path, numShards, statsCols = zCols)
-  }
-
-  /** Z-ORDER as MAINTENANCE: re-cluster the CURRENT table state along
-    * `zCols` in one rewrite snapshot — the post-hoc form of
-    * [[writeShardedTableZOrdered]] for a table that grew through
-    * appends and lost locality. Rides [[rewriteShardedTable]], so the
-    * batch-id ledger survives and old versions stay readable until
-    * expiry. Cost: one quantile sketch pass per z column + the
-    * rewrite itself (O(table) — that is what a re-cluster IS). */
-  def rewriteShardedTableZOrdered(spark: SparkSession, path: String,
-                                  idName: String, zCols: Seq[String],
-                                  numShards: Int,
-                                  bitsPerCol: Int = 8): Long = {
-    import org.apache.spark.sql.functions._
-    require(zCols.size >= 2 && zCols.size <= 6,
-      s"rewriteShardedTableZOrdered: 2..6 z columns (got ${zCols.size})")
-    require(bitsPerCol >= 1 && zCols.size * bitsPerCol <= 62,
-      s"bitsPerCol x dims must fit a long, got " +
-        s"${zCols.size} x $bitsPerCol")
-    val cur = readShardedTable(spark, path)
-    val nB = 1 << bitsPerCol
-    val probs = (1 until nB).map(_.toDouble / nB).toArray
-    // one sketch pass for all dimensions (see writeShardedTableZOrdered)
-    val allSplits = cur.stat.approxQuantile(zCols.toArray, probs, 0.001)
-    def bucket(c: String, splits: Array[Double]): Column = {
-      val arr = array(splits.map(lit(_)): _*)
-      aggregate(arr, lit(0L), (acc, x) =>
-        acc + when(col(c).cast("double") >= x, 1L).otherwise(0L))
-    }
-    val z = zValueK(zCols.zip(allSplits.toSeq).map {
-      case (c, s) => bucket(c, s) }, bitsPerCol)
-    rewriteShardedTable(spark, path, col(idName), z, numShards,
-      (idName +: zCols).distinct)
   }
 
   /** Snapshot expiry: keep the newest `keep` versions, delete the

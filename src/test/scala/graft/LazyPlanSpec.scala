@@ -108,4 +108,41 @@ class LazyPlanSpec extends AnyFunSuite {
       assert(got == want)
     } finally spark.conf.set("spark.sql.exchange.reuse", "true")
   }
+
+  /** A 3-dir sharded table (one write, two appends) — below the
+    * many-dir fast-read threshold, so reads take the per-dir union. */
+  private def threeDirTable(tag: String): String = {
+    import graft.sources.Sources
+    val path = java.nio.file.Files.createTempDirectory(tag).toString
+    def batch(lo: Long) = spark.range(lo, lo + 20)
+      .select(col("id").as("doc_id"), (col("id") * 3).as("v"))
+    Sources.writeShardedTable(batch(0), col("doc_id"), col("doc_id"),
+      path, 2, Seq("doc_id"))
+    Seq(20L, 40L).foreach(lo => Sources.appendShardedTable(batch(lo),
+      col("doc_id"), col("doc_id"), path, 2, Seq("doc_id")))
+    path
+  }
+
+  test("a sharded-table read plan builds without launching a job " +
+       "(data-dir schemas come from footers, not inference jobs)") {
+    import graft.sources.Sources
+    val path = threeDirTable("graft_lazy_read")
+    var read: org.apache.spark.sql.DataFrame = null
+    val n = jobsDuring { read = Sources.readShardedTable(spark, path) }
+    assert(n == 0, s"read plan build launched $n job(s)")
+    assert(read.select(sum("v")).head.getLong(0) == 3L * (0 until 60).sum)
+    Sources.dropShardedTable(spark, path)
+  }
+
+  test("a DSv2 table-schema memo miss launches no job") {
+    import graft.sources.{GraftSharded, Sources}
+    val path = threeDirTable("graft_lazy_schema")
+    var schema: org.apache.spark.sql.types.StructType = null
+    val n = jobsDuring {
+      schema = GraftSharded.tableSchema(spark, path, None)
+    }
+    assert(n == 0, s"schema memo miss launched $n job(s)")
+    assert(schema == Sources.readShardedTable(spark, path).schema)
+    Sources.dropShardedTable(spark, path)
+  }
 }

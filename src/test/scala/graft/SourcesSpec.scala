@@ -3290,4 +3290,119 @@ class SourcesSpec extends AnyFunSuite {
       case None => spark.conf.unset(conf)
     }
   }
+
+  test("an empty MERGE is a no-op: the initial change load of a fully " +
+       "tombstoned source leaves a non-empty replica untouched") {
+    import org.apache.spark.sql.functions._
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_emptymerge").toString
+    val src = s"$base/src"
+    val replica = s"$base/replica"
+    def docs(lo: Long, n: Long) = spark.range(lo, lo + n)
+      .select(col("id").as("doc_id"), concat(lit("d"), col("id")).as("t"))
+    Sources.writeShardedTable(docs(0, 30), col("doc_id"), col("doc_id"),
+      src, 2, Seq("doc_id"))
+    Sources.deleteFromShardedTable(spark, src, "doc_id",
+      docs(0, 30).select("doc_id"))
+    val rv = Sources.writeShardedTable(docs(100, 40), col("doc_id"),
+      col("doc_id"), replica, 2, Seq("doc_id"))
+    val before = rows(Sources.readShardedTable(spark, replica))
+    val batch = Sources.shardedTableChanges(spark, src,
+      s"$base/cursor")
+    // the initial load's emptiness is not known from the manifest
+    assert(batch.hasInserts)
+    assert(Sources.mergeShardedTable(batch.inserts, "doc_id",
+      col("doc_id"), replica, 2, Seq("doc_id")) == rv)
+    // an empty frame merged directly: same no-op
+    assert(Sources.mergeShardedTable(docs(0, 0), "doc_id", col("doc_id"),
+      replica, 2, Seq("doc_id")) == rv)
+    assert(Sources.shardedVersions(spark, replica) == Seq(rv))
+    assert(rows(Sources.readShardedTable(spark, replica)) == before)
+    Sources.dropShardedTable(spark, src)
+    Sources.dropShardedTable(spark, replica)
+  }
+
+  test("a computed order column is evaluated once per input row, and " +
+       "still lays shards out in key order") {
+    import org.apache.spark.sql.functions._
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_ordonce").toString
+    val evals = spark.sparkContext.longAccumulator("graft-order-evals")
+    val key = udf { (id: Long) => evals.add(1L); (id * 7919L) % 1000L }
+    val n = 2000L
+    Sources.writeShardedTable(
+      spark.range(n).select(col("id").as("doc_id")), col("doc_id"),
+      key(col("doc_id")), path, 4, Seq("doc_id"))
+    assert(evals.value == n,
+      s"order key evaluated ${evals.value} times for $n rows")
+    // shards are contiguous runs of (key, doc_id)
+    val byShard = Sources.readShardedTable(spark, path).collect()
+      .map(r => r.getAs[Int]("shard") ->
+        (((r.getAs[Long]("doc_id") * 7919L) % 1000L),
+          r.getAs[Long]("doc_id")))
+      .groupBy(_._1).toSeq.sortBy(_._1).map(_._2.map(_._2))
+    assert(byShard.map(_.length).sum == n)
+    byShard.sliding(2).foreach { case Seq(a, b) =>
+      assert(Ordering[(Long, Long)].lteq(a.max, b.min))
+    }
+    Sources.dropShardedTable(spark, path)
+  }
+
+  test("footer schemas equal Spark's inferred dir schemas on an " +
+       "evolved, widened, renamed, partitioned table, and its reads " +
+       "return every row") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.StructType
+    import spark.implicits._
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_footerparity").toString
+    Sources.writeShardedTable(
+      Seq((1L, "a", 10, "t1"), (2L, "b", 20, "t2"), (3L, "a", 30, "t3"))
+        .toDF("doc_id", "src", "score", "title"),
+      col("doc_id"), col("doc_id"), path, 2, Seq("doc_id"),
+      partitionCols = Seq("src"))
+    // evolved: adds `lang`
+    Sources.appendShardedTable(
+      Seq((4L, "b", 40, "t4", "en"), (5L, "c", 50, "t5", "de"))
+        .toDF("doc_id", "src", "score", "title", "lang"),
+      col("doc_id"), col("doc_id"), path, 2, Seq("doc_id"),
+      allowNewColumns = true)
+    // widened: score int -> long
+    Sources.appendShardedTable(
+      Seq((6L, "a", 6000000000L, "t6", "fr"))
+        .toDF("doc_id", "src", "score", "title", "lang"),
+      col("doc_id"), col("doc_id"), path, 2, Seq("doc_id"))
+    Sources.renameShardedTableColumn(spark, path, "title", "headline")
+    Sources.appendShardedTable(
+      Seq((7L, "c", 70L, "t7", "en"))
+        .toDF("doc_id", "src", "score", "headline", "lang"),
+      col("doc_id"), col("doc_id"), path, 2, Seq("doc_id"))
+    Sources.deleteFromShardedTable(spark, path, "doc_id",
+      Seq(2L).toDF("doc_id"))
+    val dirs = new java.io.File(path).listFiles().map(_.getName)
+      .filter(n => n.startsWith("data-v") || n.startsWith("del-v"))
+      .sorted.toSeq
+    assert(dirs.count(_.startsWith("data-v")) == 4 &&
+      dirs.count(_.startsWith("del-v")) == 1)
+    // a file-source relation marks every column nullable, whatever the
+    // footer (or a passed schema) says — compare modulo nullability
+    def nullable(s: StructType) =
+      StructType(s.fields.map(_.copy(nullable = true)))
+    dirs.foreach { d =>
+      val inferred = spark.read.parquet(s"$path/$d").schema
+      val want = StructType(inferred.fields
+        .filterNot(f => f.name == "shard" || f.name == "src"))
+      assert(nullable(Sources.fileSchema(spark, s"$path/$d")) == want, d)
+    }
+    val got = Sources.readShardedTable(spark, path)
+      .select("doc_id", "src", "score", "headline", "lang").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+        r.getString(3), Option(r.getString(4)))).toSet
+    assert(got == Set((1L, "a", 10L, "t1", None),
+      (3L, "a", 30L, "t3", None), (4L, "b", 40L, "t4", Some("en")),
+      (5L, "c", 50L, "t5", Some("de")),
+      (6L, "a", 6000000000L, "t6", Some("fr")),
+      (7L, "c", 70L, "t7", Some("en"))))
+    Sources.dropShardedTable(spark, path)
+  }
 }
