@@ -215,10 +215,6 @@ private[graft] class GraftShardedScanBuilder(path: String,
         Some(nr.fieldNames()(0))
       case _ => None
     }
-    def integral(dt: DataType): Boolean = dt match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
     def back(v: Long, dt: DataType): Any = dt match {
       case ByteType => v.toByte
       case ShortType => v.toShort
@@ -243,8 +239,9 @@ private[graft] class GraftShardedScanBuilder(path: String,
     // raw strings cannot be EXACTLY converted to must bail, never
     // silently drop groups.
     def rawOk(dt: DataType): Boolean = dt match {
-      case StringType => true
-      case t => integral(t)
+      case StringType | ByteType | ShortType | IntegerType | LongType =>
+        true
+      case _ => false
     }
     val partColsOfTable: Seq[String] =
       if (pushed.isEmpty) Seq.empty
@@ -343,7 +340,7 @@ private[graft] class GraftShardedScanBuilder(path: String,
           for {
             c <- colOf(m.column())
             f <- tschema.fields.find(_.name == c)
-            if integral(f.dataType)
+            if Sources.exactStatsType(f.dataType)
             // min over ZERO selected rows is exactly null; otherwise
             // a recorded bound on every contributing leaf is required
             b <- if (view.rowCount == 0L) Some(None)
@@ -354,7 +351,7 @@ private[graft] class GraftShardedScanBuilder(path: String,
           for {
             c <- colOf(m.column())
             f <- tschema.fields.find(_.name == c)
-            if integral(f.dataType)
+            if Sources.exactStatsType(f.dataType)
             b <- if (view.rowCount == 0L) Some(None)
                  else view.bounds.get(c).map(Some(_))
           } yield (StructField(s"max($c)", f.dataType),
@@ -512,7 +509,8 @@ object GraftSharded {
     * the `sources.Filter` twin of [[Sources.predicateBounds]], feeding
     * the same manifest pruning. Only top-level conjuncts contribute
     * (an OR can only widen, so it is skipped), and only integral
-    * literals (the manifest stores long-cast stats). */
+    * literals (the manifest records long bounds, for integral
+    * columns only). */
   private[graft] def filterBounds(filters: Seq[Filter])
       : Seq[(String, Long, Long)] = {
     def long(v: Any): Option[Long] = v match {

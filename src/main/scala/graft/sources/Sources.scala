@@ -488,7 +488,13 @@ object Sources {
     * changed). Claim files persist after publish (0-byte; expired
     * with their snapshots) — a claim with no published version marks
     * a crashed in-flight commit and blocks later writers until
-    * removed, which the audit reports. */
+    * removed, which the audit reports.
+    *
+    * `statsCols` name the columns whose per-leaf bounds the manifest
+    * records. One type rule ([[exactStatsType]]): Byte, Short, Int
+    * and Long columns get exact bounds from the part-file footers (a
+    * partition column, from its directory name); every other type
+    * records null bounds, which pruning treats as "keep". */
   def writeShardedTable(df: DataFrame, id: Column, orderCol: Column,
                         path: String, numShards: Int,
                         statsCols: Seq[String],
@@ -1169,6 +1175,14 @@ object Sources {
     val dataPairs = dataRows0.select("data_dir", "shard", "leaf")
       .collect().map(r => (r.getString(0), r.getLong(1),
         r.getString(2)))
+    // the stats columns whose bounds the audit can recompute, and the
+    // rest: a stats column ADDED by schema evolution does not exist in
+    // pre-evolution dirs, and one outside [[exactStatsType]] has no
+    // recorded bounds to check. Both get null actual bounds (the
+    // containment filter is null-tolerant).
+    def recomputable(f0: DataFrame): (Seq[String], Seq[String]) =
+      statCols.toSeq.partition(c => f0.schema.fields
+        .exists(f => f.name == c && exactStatsType(f.dataType)))
     // per-dir recompute fallback; a dir that cannot even be opened is
     // itself a finding, not an audit crash — this path also names the
     // unreadable dir, which the one-job fast path cannot
@@ -1180,12 +1194,7 @@ object Sources {
             val dirs = rs.map(r => s"$dDir/${r._3}").toSeq
             val f0 = spark.read.option("basePath", dDir)
               .parquet(dirs: _*)
-            // a stats column ADDED by schema evolution does not exist
-            // in pre-evolution dirs — recompute only what the dir has
-            // (its manifest rows carry null bounds for the rest, and
-            // the containment filter is null-tolerant)
-            val (have, miss) =
-              statCols.partition(f0.columns.contains)
+            val (have, miss) = recomputable(f0)
             val aggs = Seq(count(lit(1)).as("a_rows")) ++
               have.flatMap(c => Seq(
                 min(col(c)).cast("long").as(s"a_min_$c"),
@@ -1217,7 +1226,7 @@ object Sources {
       val f0 = spark.read.option("mergeSchema", "true")
         .parquet(scala.collection.immutable.ArraySeq
           .unsafeWrapArray(leaves): _*)
-      val (have, miss) = statCols.partition(f0.columns.contains)
+      val (have, miss) = recomputable(f0)
       val aggs = Seq(count(lit(1)).as("a_rows")) ++
         have.flatMap(c => Seq(
           min(col(c)).cast("long").as(s"a_min_$c"),
@@ -1480,6 +1489,23 @@ object Sources {
                                        baseVersion: Long)
     extends ParentMode
 
+  /** The ONE stats type rule: a stats column of this Spark type gets
+    * exact manifest `min_/max_` bounds. Integral types only — parquet
+    * int32/int64 column statistics are exact and the manifest stores
+    * bounds as longs. Every other type (fractional, decimal, string,
+    * date, timestamp, ...) records null bounds, which every reader,
+    * the manifest aggregate view and the audit treat as "keep". The
+    * writer, the audit's recompute and the connector's min/max
+    * pushdown all ask this predicate. */
+  private[sources] def exactStatsType(
+      dt: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+  }
+
   /** Shared snapshot writer: range-shard `df`, write the new data
     * dir (and, for MERGE, the delete-key file) under a random-token
     * name no concurrent writer can collide with, then commit the
@@ -1539,6 +1565,12 @@ object Sources {
       s"writeShardedTable: partition column(s) ${partCols
         .filterNot(df.columns.contains).mkString(",")} missing from " +
         "the input")
+    // checked BEFORE the cumsum persists its frame: a failure after
+    // it would leave that cache pinned
+    require(statsCols.forall(df.columns.contains),
+      s"writeShardedTable: stats column(s) ${statsCols
+        .filterNot(df.columns.contains).mkString(",")} missing from " +
+        "the input")
     // contiguous range shards: global position by (orderCol, id)
     // computed DIRECTLY on the frame (orderedCumsum carries every
     // input column through), never via a join back on the id — a
@@ -1578,59 +1610,13 @@ object Sources {
       s"write snapshot v$baseV at $path")
     val block = (n + numShards - 1) / numShards
     val data = withPos.withColumn("shard", expr(s"__pos div $block"))
-    // stats keyed on (shard, partition values AS STRING — cast with
-    // Spark semantics, so the strings match the Hive-escaped directory
-    // fragments the write lays down) — computable from the CACHED
-    // cumsum frame for string/integral partition types (every later
-    // job in this commit then reads the cache, never re-reads the
-    // files just written — at scale the re-read was a second full
-    // pass over the batch); exotic partition value types (double,
-    // timestamp) keep the read-back path whose raw on-disk strings
-    // are authoritative.
-    val partTypesSafe = {
-      import org.apache.spark.sql.types._
-      partCols.forall(c => df.schema(c).dataType match {
-        case StringType | LongType | IntegerType | ShortType |
-             ByteType => true
-        case _ => false
-      })
-    }
-    // FOOTER stats (r14): when every stats column is integral (the
-    // manifest stores long-cast bounds anyway, and parquet int32/int64
-    // column statistics are exact — binary stats can truncate, so
-    // strings stay on the agg path), per-leaf n_rows/min/max come from
-    // the parquet FOOTERS read driver-side during the byte-size
-    // listing this commit already does — the per-commit stats Spark
-    // job disappears, and the stats are by construction what readers
-    // will see (strictly stronger than the r13 cache-derived stats
-    // under committer v2). A stats column that is also a partition
-    // column takes its per-leaf value from the directory name.
-    val footerStatsSafe = partTypesSafe && {
-      import org.apache.spark.sql.types._
-      statsCols.forall(c => df.schema(c).dataType match {
-        case LongType | IntegerType | ShortType | ByteType => true
-        case _ => false
-      })
-    }
-    val cacheStatsThunk =
-      if (!partTypesSafe || footerStatsSafe) None
-      else {
-        val keys = Seq(col("shard")) ++ partCols.map(c =>
-          col(c).cast("string").as(s"__gk_$c"))
-        val aggs = Seq(count(lit(1)).as("n_rows")) ++
-          statsCols.flatMap(c => Seq(
-            min(col(c)).cast("long").as(s"min_$c"),
-            max(col(c)).cast("long").as(s"max_$c")))
-        Some(() => data.groupBy(keys: _*)
-          .agg(aggs.head, aggs.tail: _*).collect())
-      }
     // sort WITHIN each shard by the global position: parquet
     // row-group min/max stats on the order column stay tight, so a
     // reader's pushed-down predicate prunes row groups INSIDE the
     // shards the manifest could not exclude — the second level of
     // the same stats hierarchy, paid once at write as a per-
     // partition (spill-aware) sort, no extra shuffle
-    val (collectedStatRows, delInfo) =
+    val delInfo =
     try {
       // committer v2 (direct task-commit renames): the OUTPUT
       // committer's job-level atomicity is redundant here — the dir is
@@ -1650,42 +1636,6 @@ object Sources {
         // split a leaf's file
         .option("maxRecordsPerFile", "0")
         .partitionBy(partCols :+ "shard": _*).parquet(dataDir)
-      val sr = cacheStatsThunk match {
-        case _ if footerStatsSafe =>
-          // stats come from the written files' footers, collected
-          // driver-side in the listing walk below — no Spark job
-          Array.empty[org.apache.spark.sql.Row]
-        case Some(thunk) => thunk()
-        case None =>
-          // manifest from the FILES (read back what a reader will
-          // find). Partition columns (and shard) declared STRING — no
-          // type inference pass, the RAW on-disk value string comes
-          // back exactly. Stats on a partition column cast back to
-          // the input's type first (lexicographic string min/max
-          // would be wrong for numerics).
-          val written = {
-            import org.apache.spark.sql.types.{StringType, StructField}
-            val fileFields = df.schema.fields
-              .filterNot(f => partCols.contains(f.name))
-            spark.read.schema(StructType(fileFields.toSeq ++
-                partCols.map(c => StructField(c, StringType)) :+
-                StructField("shard", StringType)))
-              .parquet(dataDir)
-          }
-          val origType =
-            df.schema.fields.map(f => f.name -> f.dataType).toMap
-          def statExpr(c: String): Column =
-            if (partCols.contains(c)) col(c).cast(origType(c))
-            else col(c)
-          val aggs = Seq(count(lit(1)).as("n_rows")) ++
-            statsCols.flatMap(c =>
-              Seq(min(statExpr(c)).cast("long").as(s"min_$c"),
-                  max(statExpr(c)).cast("long").as(s"max_$c")))
-          val statKeys = Seq(col("shard").cast("long").as("shard")) ++
-            partCols.map(col)
-          written.groupBy(statKeys: _*)
-            .agg(aggs.head, aggs.tail: _*).collect()
-      }
       // MERGE tombstone AS A REFERENCE (r14): the merge batch's key
       // set IS the data dir's id column (unique keys are enforced
       // right below), so the manifest's delete row points at the
@@ -1698,7 +1648,7 @@ object Sources {
       // Gated on the key NOT being a partition column: a partition
       // key lives in directory names, and a tombstone reader's
       // partition-discovered type could diverge from the written one.
-      val di = deleteKeyCol.map { idName =>
+      deleteKeyCol.map { idName =>
         if (!partCols.contains(idName)) {
           val delN = data.agg(countDistinct(col(idName)))
             .head.getLong(0)
@@ -1727,200 +1677,135 @@ object Sources {
           (delDir, idName, delN)
         }
       }
-      (sr, di)
     // the cumsum's internal cache served its actions — drop it, or
     // a session issuing many snapshot commits (streaming sinks, fuzz
     // chains, any ingest loop) accumulates pinned full-frame cache
     // entries that strangle executor memory for every later query
     } finally releaseCumsumCache()
-    // per-leaf BYTE sizes (and FILE counts, for the commit invariant
-    // below) from one recursive listing of the dir just written — the
-    // manifest then answers "how big is this pruned read" without
-    // touching storage (join-planning statistics for the DSv2
-    // connector: a small table broadcasts)
-    // leaf -> (row count, per-stats-col bound, per-stats-col poison
-    // mark — a column with unusable file statistics keeps a null
-    // bound even if another file of the leaf has valid ones)
-    val footerLeafStats = scala.collection.mutable.Map
-      .empty[String, (Long, Array[Option[(Long, Long)]],
-        Array[Boolean])]
-    val (bytesByLeaf: Map[String, Long],
-         filesByLeaf: Map[String, Long]) = {
+    // MANIFEST STATS, one path for every commit: one recursive listing
+    // of the dir just written, reading each part file's FOOTER
+    // driver-side. Per leaf it yields the byte size (the manifest then
+    // answers "how big is this pruned read" without touching storage —
+    // join-planning statistics for the DSv2 connector: a small table
+    // broadcasts), the part-file count and row count (the commit
+    // invariants below), and the stats bounds. No Spark job computes
+    // stats and nothing re-reads the dir: the stats are by
+    // construction what readers will see. Bounds follow
+    // [[exactStatsType]]: an integral column takes the exact int32/
+    // int64 column statistics (a partition column, the value in its
+    // directory name); any other type records null bounds.
+    val exact = statsCols.map(c => exactStatsType(df.schema(c).dataType))
+    final class LeafStats {
+      var bytes, files, rows = 0L
+      val bounds = Array.fill[Option[(Long, Long)]](statsCols.size)(None)
+      // a column with unusable file statistics keeps a null bound even
+      // if another block or file of the leaf has valid ones
+      val bad = Array.fill(statsCols.size)(false)
+    }
+    val leaves = scala.collection.mutable.Map.empty[String, LeafStats]
+    locally {
+      import org.apache.parquet.column.statistics._
       val hconf = spark.sparkContext.hadoopConfiguration
-      val fsL = new org.apache.hadoop.fs.Path(dataDir)
-        .getFileSystem(hconf)
-      val it = fsL.listFiles(new org.apache.hadoop.fs.Path(dataDir),
-        true)
-      val acc = scala.collection.mutable.Map.empty[String, Long]
-      val cnt = scala.collection.mutable.Map.empty[String, Long]
+      val root = new org.apache.hadoop.fs.Path(dataDir)
+      val rootPath = root.toUri.getPath
+      val it = root.getFileSystem(hconf).listFiles(root, true)
       while (it.hasNext) {
         val st = it.next()
-        val rel = st.getPath.toUri.getPath
-          .stripPrefix(new org.apache.hadoop.fs.Path(dataDir)
-            .toUri.getPath).stripPrefix("/")
+        val rel = st.getPath.toUri.getPath.stripPrefix(rootPath)
+          .stripPrefix("/")
         val leafRel = rel.split('/').dropRight(1).mkString("/")
-        if (st.getPath.getName.endsWith(".parquet") &&
-            leafRel.nonEmpty) {
-          acc(leafRel) = acc.getOrElse(leafRel, 0L) + st.getLen
-          cnt(leafRel) = cnt.getOrElse(leafRel, 0L) + 1L
-          if (footerStatsSafe) {
-            // one footer read per file, driver-side: block row counts
-            // + exact int32/int64 column statistics per stats column.
-            // A block whose statistics are missing or invalid poisons
-            // that column's bound for the leaf (null = readers treat
-            // the leaf as unprunable — kept, never wrongly pruned).
-            val reader = org.apache.parquet.hadoop.ParquetFileReader
-              .open(org.apache.parquet.hadoop.util.HadoopInputFile
-                .fromStatus(st, hconf))
-            try {
-              val (pr, pstats, pbad) = footerLeafStats.getOrElse(
-                leafRel, (0L, Array.fill[Option[(Long, Long)]](
-                  statsCols.size)(None),
-                  Array.fill(statsCols.size)(false)))
-              var rows = 0L
-              val bounds = pstats.clone()
-              val bad = pbad.clone()
-              reader.getFooter.getBlocks.forEach { b =>
-                rows += b.getRowCount
-                b.getColumns.forEach { cc =>
-                  val i = statsCols.indexOf(cc.getPath.toDotString)
-                  if (i >= 0 && b.getRowCount > 0 && !bad(i)) {
-                    import org.apache.parquet.column.statistics._
-                    val mm: Either[Unit, Option[(Long, Long)]] =
-                      cc.getStatistics match {
-                        case s: LongStatistics if !s.isEmpty &&
-                              s.isNumNullsSet &&
-                              s.getNumNulls < b.getRowCount =>
-                          Right(Some((s.getMin, s.getMax)))
-                        case s: IntStatistics if !s.isEmpty &&
-                              s.isNumNullsSet &&
-                              s.getNumNulls < b.getRowCount =>
-                          Right(Some((s.getMin.toLong, s.getMax.toLong)))
-                        case s if s != null && !s.isEmpty &&
-                              s.isNumNullsSet &&
-                              s.getNumNulls == b.getRowCount =>
-                          Right(None) // all-null block: no bound
-                        case _ => Left(()) // unusable stats: poison
-                      }
-                    mm match {
-                      case Left(_) =>
-                        bad(i) = true; bounds(i) = None
-                      case Right(None) => ()
-                      case Right(Some((l2, h2))) =>
-                        bounds(i) = bounds(i) match {
-                          case Some((lo, hi)) =>
-                            Some((math.min(lo, l2), math.max(hi, h2)))
-                          case None => Some((l2, h2))
-                        }
-                    }
-                  }
+        if (st.getPath.getName.endsWith(".parquet") && leafRel.nonEmpty) {
+          val a = leaves.getOrElseUpdate(leafRel, new LeafStats)
+          a.bytes += st.getLen
+          a.files += 1L
+          def widen(i: Int, lo: Long, hi: Long): Unit =
+            a.bounds(i) = a.bounds(i) match {
+              case Some((l, h)) => Some((math.min(l, lo), math.max(h, hi)))
+              case None => Some((lo, hi))
+            }
+          // block row counts + exact int32/int64 column statistics. A
+          // block whose statistics are missing or invalid poisons that
+          // column's bound for the leaf (null = readers treat the leaf
+          // as unprunable — kept, never wrongly pruned).
+          val reader = org.apache.parquet.hadoop.ParquetFileReader
+            .open(org.apache.parquet.hadoop.util.HadoopInputFile
+              .fromStatus(st, hconf))
+          try reader.getFooter.getBlocks.forEach { b =>
+            val bRows = b.getRowCount
+            a.rows += bRows
+            b.getColumns.forEach { cc =>
+              val i = statsCols.indexOf(cc.getPath.toDotString)
+              if (i >= 0 && exact(i) && bRows > 0 && !a.bad(i))
+                cc.getStatistics match {
+                  case s: LongStatistics if !s.isEmpty &&
+                        s.isNumNullsSet && s.getNumNulls < bRows =>
+                    widen(i, s.getMin, s.getMax)
+                  case s: IntStatistics if !s.isEmpty &&
+                        s.isNumNullsSet && s.getNumNulls < bRows =>
+                    widen(i, s.getMin.toLong, s.getMax.toLong)
+                  case s if s != null && !s.isEmpty &&
+                        s.isNumNullsSet && s.getNumNulls == bRows =>
+                    () // all-null block: no bound
+                  case _ =>
+                    a.bad(i) = true; a.bounds(i) = None
                 }
-              }
-              bad.indices.foreach(i => if (bad(i)) bounds(i) = None)
-              footerLeafStats(leafRel) = (pr + rows, bounds, bad)
-            } finally reader.close()
-          }
+            }
+          } finally reader.close()
         }
       }
-      (acc.toMap, cnt.toMap)
     }
-    val statRowsFinal =
-      if (!footerStatsSafe) collectedStatRows
-      else {
-        val unesc = org.apache.spark.sql.catalyst.catalog
-          .ExternalCatalogUtils.unescapePathName _
-        footerLeafStats.toSeq.sortBy(_._1).map { case (leaf, (rows,
-            bounds, _)) =>
-          val segs = leaf.split('/')
-          val shard = segs.last.stripPrefix("shard=").toLong
-          val partVals = segs.dropRight(1).zip(partCols).map {
-            case (seg, c) =>
-              require(seg.startsWith(s"$c="),
-                s"writeShardedTable: unexpected leaf segment $seg " +
-                  s"under $dataDir")
-              val raw = seg.drop(c.length + 1)
-              // a null or empty partition value lands on disk as the
-              // default-partition directory — reject it as loudly as
-              // the cache/read-back paths do
-              require(raw != org.apache.spark.sql.catalyst.catalog
-                  .ExternalCatalogUtils.DEFAULT_PARTITION_NAME,
-                "writeShardedTable: partition column values must be " +
-                  "non-null and non-empty")
-              unesc(raw)
+    // one manifest row per on-disk leaf: (leaf, shard, raw partition
+    // values, its LeafStats, min/max per stats column)
+    val leafRows = {
+      val unesc = org.apache.spark.sql.catalyst.catalog
+        .ExternalCatalogUtils.unescapePathName _
+      leaves.toSeq.sortBy(_._1).map { case (leaf, a) =>
+        val segs = leaf.split('/')
+        val shard = segs.last.stripPrefix("shard=").toLong
+        val partVals = segs.dropRight(1).zip(partCols).map {
+          case (seg, c) =>
+            require(seg.startsWith(s"$c="),
+              s"writeShardedTable: unexpected leaf segment $seg " +
+                s"under $dataDir")
+            val raw = seg.drop(c.length + 1)
+            // a null or empty partition value lands on disk as the
+            // default-partition directory — reject it before publish
+            require(raw != org.apache.spark.sql.catalyst.catalog
+                .ExternalCatalogUtils.DEFAULT_PARTITION_NAME,
+              "writeShardedTable: partition column values must be " +
+                "non-null and non-empty")
+            unesc(raw)
+        }.toSeq
+        val statVals = statsCols.indices.flatMap { i =>
+          val b = statsCols(i) match {
+            case _ if !exact(i) => None
+            case c if partCols.contains(c) =>
+              scala.util.Try(partVals(partCols.indexOf(c)).trim.toLong)
+                .toOption.map(v => (v, v))
+            case _ => a.bounds(i)
           }
-          val statVals = statsCols.indices.flatMap { i =>
-            statsCols(i) match {
-              case c if partCols.contains(c) =>
-                // a stats column that is also a partition column:
-                // its per-leaf value is the directory name's
-                val v = scala.util.Try(partVals(
-                  partCols.indexOf(c)).trim.toLong).toOption
-                Seq(v.map(java.lang.Long.valueOf).orNull,
-                  v.map(java.lang.Long.valueOf).orNull)
-              case _ =>
-                Seq(bounds(i).map(b =>
-                    java.lang.Long.valueOf(b._1)).orNull,
-                  bounds(i).map(b =>
-                    java.lang.Long.valueOf(b._2)).orNull)
-            }
-          }
-          org.apache.spark.sql.Row.fromSeq(
-            Seq(shard: java.lang.Long) ++ partVals ++
-              Seq(rows: java.lang.Long) ++ statVals)
-        }.toArray
+          Seq(b.map(x => java.lang.Long.valueOf(x._1)).orNull,
+            b.map(x => java.lang.Long.valueOf(x._2)).orNull)
+        }
+        (leaf, shard, partVals, a, statVals)
       }
-    statRowsFinal.foreach { r =>
-      partCols.indices.foreach { i =>
-        require(!r.isNullAt(1 + i),
-          "writeShardedTable: partition column values must be non-null")
-        // an EMPTY string would be laid down on disk as the
-        // __HIVE_DEFAULT_PARTITION__ directory while the cache-derived
-        // leaf says `c=` — the manifest would point at a nonexistent
-        // path; reject it as loudly as the read-back path (which
-        // parses that directory back as null) used to
-        require(r.getString(1 + i).nonEmpty,
-          "writeShardedTable: partition column values must be " +
-            "non-empty")
-      }
-    }
-    val esc = org.apache.spark.sql.catalyst.catalog
-      .ExternalCatalogUtils.escapePathName _
-    def leafOf(r: org.apache.spark.sql.Row): String = {
-      val partVals = partCols.indices.map(i => r.getString(1 + i))
-      (partCols.zip(partVals).map { case (c, pv) =>
-        s"$c=${esc(pv)}" } :+ s"shard=${r.getLong(0)}").mkString("/")
     }
     // post-write COMMIT INVARIANTS (committer v2 ships without v1's
-    // job-commit safety net): exactly one part file per leaf — each
-    // leaf is written by exactly one task of the explicit shard
-    // repartition, so a retried or speculative task's duplicate v2
-    // output fails the commit loudly BEFORE the manifest publishes.
-    // Cache-stats path additionally checks the stats' leaf set equals
-    // the on-disk one (a diverged partition-value escaping); footer-
-    // stats path instead checks the files' TOTAL ROW COUNT equals the
-    // cumsum total (a torn/partial task left rows missing on disk).
-    if (cacheStatsThunk.isDefined || footerStatsSafe) {
-      val multi = filesByLeaf.filter(_._2 != 1L)
-      require(multi.isEmpty,
-        s"writeShardedTable: ${multi.size} leaf dir(s) at $dataDir " +
-          s"hold more than one part file (duplicate task commit?): " +
-          s"${multi.keys.toSeq.sorted.take(5).mkString(",")}")
-    }
-    if (cacheStatsThunk.isDefined) {
-      val claimed = statRowsFinal.map(leafOf).toSet
-      val onDisk = filesByLeaf.keySet
-      require(claimed == onDisk,
-        s"writeShardedTable: stats/files leaf mismatch at $dataDir — " +
-          s"stats-only: ${(claimed -- onDisk).toSeq.sorted.take(5)
-            .mkString(",")}; disk-only: ${(onDisk -- claimed).toSeq
-            .sorted.take(5).mkString(",")}")
-    }
-    if (footerStatsSafe) {
-      val total = footerLeafStats.valuesIterator.map(_._1).sum
-      require(total == n,
-        s"writeShardedTable: footer row total $total != cumsum " +
-          s"total $n at $dataDir — torn or duplicate task output")
-    }
+    // job-commit safety net), checked BEFORE the manifest publishes:
+    // exactly one part file per leaf — each leaf is written by exactly
+    // one task of the explicit shard repartition, so a retried or
+    // speculative task's duplicate v2 output fails the commit loudly —
+    // and the files' TOTAL ROW COUNT equals the cumsum total (a torn
+    // or partial task left rows missing on disk).
+    val multi = leaves.filter(_._2.files != 1L)
+    require(multi.isEmpty,
+      s"writeShardedTable: ${multi.size} leaf dir(s) at $dataDir " +
+        s"hold more than one part file (duplicate task commit?): " +
+        s"${multi.keys.toSeq.sorted.take(5).mkString(",")}")
+    val total = leaves.valuesIterator.map(_.rows).sum
+    require(total == n,
+      s"writeShardedTable: footer row total $total != cumsum " +
+        s"total $n at $dataDir — torn or duplicate task output")
     val newRowsSchema = {
       import org.apache.spark.sql.types.{LongType, StringType,
         StructField}
@@ -1941,19 +1826,10 @@ object Sources {
           StructField("del_col", StringType)))
     }
     def newRows(v: Long): DataFrame = {
-      val out = statRowsFinal.map { r =>
-        val shard = r.getLong(0)
-        val partVals = partCols.indices.map(i => r.getString(1 + i))
-        val leaf = leafOf(r)
-        val statVals = (0 until 2 * statsCols.size)
-          .map(j => r.get(2 + partCols.size + j))
+      val out = leafRows.map { case (leaf, shard, partVals, a, statVals) =>
         org.apache.spark.sql.Row.fromSeq(
-          Seq(leaf, shard, r.getLong(1 + partCols.size)) ++
-          statVals ++
-          Seq(bytesByLeaf.get(leaf)
-            .map(java.lang.Long.valueOf).orNull) ++
-          partVals ++
-          Seq(dataDir, batchId, "data", v, op, null))
+          Seq(leaf, shard, a.rows) ++ statVals ++ Seq(a.bytes) ++
+            partVals ++ Seq(dataDir, batchId, "data", v, op, null))
       }
       spark.createDataFrame(
         java.util.Arrays.asList(out: _*), newRowsSchema)
@@ -3670,9 +3546,10 @@ object Sources {
     * than one key (time × tenant, day × doc range), where a linear
     * sort keeps only its leading column's stats tight and every other
     * dimension spans every shard. Same superset-guarantee contract as
-    * [[readShardedTable]]'s pruning; zCols must be numeric (and
-    * integer-valued for exact stats bounds — the manifest stores
-    * long-cast min/max). Nulls land in bucket 0 deterministically. */
+    * [[readShardedTable]]'s pruning; zCols must be numeric, and only
+    * integral ones get manifest bounds ([[exactStatsType]] — any other
+    * type records null bounds, so the manifest never prunes on it).
+    * Nulls land in bucket 0 deterministically. */
   def writeShardedTableZOrdered(df: DataFrame, id: Column,
                                 zCols: Seq[String], path: String,
                                 numShards: Int,

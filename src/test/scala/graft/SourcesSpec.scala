@@ -3405,4 +3405,102 @@ class SourcesSpec extends AnyFunSuite {
       (7L, "c", 70L, "t7", Some("en"))))
     Sources.dropShardedTable(spark, path)
   }
+
+  private def persistedRdds =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("a stats column missing from the input fails before the cumsum: " +
+       "the error names it, nothing stays persisted, no data dir") {
+    import org.apache.spark.sql.functions._
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_missingstat").toString
+    val before = persistedRdds
+    val e = intercept[IllegalArgumentException] {
+      Sources.writeShardedTable(spark.range(20).toDF("doc_id"),
+        col("doc_id"), col("doc_id"), path, 2, Seq("doc_id", "nope"))
+    }
+    assert(e.getMessage.contains("nope"), e.getMessage)
+    assert((persistedRdds -- before).isEmpty,
+      s"left persisted: ${(persistedRdds -- before).toSeq.sorted}")
+    assert(!new java.io.File(path).listFiles()
+      .exists(_.getName.startsWith("data-v")))
+    Sources.dropShardedTable(spark, path)
+  }
+
+  test("non-integral stats columns record null bounds, so pruning keeps " +
+       "their leaves; exotic partition values keep their raw strings") {
+    import org.apache.spark.sql.functions._
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_statstypes").toString
+    val docs = spark.range(20).select(col("id").as("doc_id"),
+      (col("id") + 0.5).as("x"), concat(lit("d"), col("id")).as("t"),
+      timestamp_seconds(col("id")).as("ts"),
+      ((col("id") % 3) + 0.5).as("g"))
+    def write(name: String, statsCols: Seq[String],
+              partitionCols: Seq[String] = Nil): String = {
+      val path = s"$base/$name"
+      Sources.writeShardedTable(docs, col("doc_id"), col("doc_id"), path,
+        numShards = 4, statsCols = statsCols,
+        partitionCols = partitionCols)
+      path
+    }
+    def dataMf(path: String) = Sources.shardedManifest(spark, path)
+      .filter(col("kind") === "data").collect()
+    def assertNullBounds(path: String, c: String): Unit =
+      dataMf(path).foreach { r =>
+        assert(r.isNullAt(r.fieldIndex(s"min_$c")) &&
+          r.isNullAt(r.fieldIndex(s"max_$c")), s"$c bounds: $r")
+      }
+    // double: a long-cast bound [0, 4] on shard 0 would prune x = 4.5
+    val dbl = write("dbl", Seq("doc_id", "x"))
+    assert(Sources.readShardedTableWhere(spark, dbl, col("x") > 4)
+      .count() == 16L)
+    assertNullBounds(dbl, "x")
+    // integral columns keep exact bounds beside them
+    assert(dataMf(dbl)
+      .forall(r => !r.isNullAt(r.fieldIndex("min_doc_id"))))
+    val str = write("str", Seq("doc_id", "t"))
+    assertNullBounds(str, "t")
+    assert(Sources.readShardedTable(spark, str).count() == 20L)
+    val ts = write("ts", Seq("ts"))
+    assertNullBounds(ts, "ts")
+    // a double PARTITION column: raw on-disk value strings, and a
+    // stats column over it records null bounds like any double
+    val part = write("part", Seq("doc_id", "g"), partitionCols = Seq("g"))
+    assert(dataMf(part).map(_.getAs[String]("part_g")).toSet ==
+      Set("0.5", "1.5", "2.5"))
+    assertNullBounds(part, "g")
+    assert(Sources.readShardedTable(spark, part).count() == 20L)
+    Seq(dbl, str, ts, part).foreach { p =>
+      assert(Sources.auditShardedTable(spark, p).count() == 0L, p)
+    }
+    Seq(dbl, str, ts, part).foreach(Sources.dropShardedTable(spark, _))
+  }
+
+  test("a null or empty partition value fails the commit before " +
+       "publish, with nothing left persisted") {
+    import org.apache.spark.sql.functions._
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_nullpart").toString
+    def docs(p: org.apache.spark.sql.Column) = spark.range(12)
+      .select(col("id").as("doc_id"), p.as("p"))
+    val v1 = Sources.writeShardedTable(
+      docs(when(col("id") % 2 === 0, "a").otherwise("b")), col("doc_id"),
+      col("doc_id"), path, 2, Seq("doc_id"), partitionCols = Seq("p"))
+    Seq(when(col("id") < 3, lit(null).cast("string")).otherwise("a"),
+        when(col("id") < 3, lit("")).otherwise("a")).foreach { p =>
+      val before = persistedRdds
+      val e = intercept[IllegalArgumentException] {
+        Sources.appendShardedTable(docs(p), col("doc_id"), col("doc_id"),
+          path, 2, Seq("doc_id"))
+      }
+      assert(e.getMessage.contains("non-null and non-empty"),
+        e.getMessage)
+      assert(Sources.shardedVersions(spark, path) == Seq(v1))
+      assert((persistedRdds -- before).isEmpty,
+        s"left persisted: ${(persistedRdds -- before).toSeq.sorted}")
+    }
+    assert(Sources.readShardedTable(spark, path).count() == 12L)
+    Sources.dropShardedTable(spark, path)
+  }
 }
