@@ -67,12 +67,12 @@ object Packing {
     * cache. The persist is load-bearing while the returned frame is
     * being evaluated (one boundary sample pairs offsets with rows —
     * see above), but a long-lived session issuing MANY cumsum-backed
-    * writes (the sharded-table writer: every snapshot commit) must
-    * drop the entry once its terminal action has run, or the session
-    * cache accumulates pinned frames and strangles executor memory
-    * for every later query (measured: a 565-query bench pass ran
-    * ~1.3x slower with the leak than with per-write release). Call
-    * the handle only AFTER the caller's action completes. */
+    * actions must drop the entry once its terminal action has run, or
+    * the session cache accumulates pinned frames and strangles
+    * executor memory for every later query (measured: a 565-query
+    * bench pass ran ~1.3x slower with the leak than with per-write
+    * release). Call the handle only AFTER the caller's action
+    * completes. */
   def orderedCumsumsReleasable(df: DataFrame, order: Column,
                                values: Seq[(String, Column)],
                                partitions: Int)
@@ -122,98 +122,73 @@ object Packing {
     (out, () => { p.unpersist(); () })
   }
 
-  /** [[orderedCumsumsReleasable]] that ALSO returns each value's grand
-    * total, collected driver-side from the same per-partition-totals
-    * pass that the prefix offsets need anyway — so a caller that wants
-    * the row count (pass `lit(1L)`) or a column's sum alongside the
-    * cumsum pays ZERO extra jobs for it. The offsets are computed from
-    * the collected totals in plain driver arithmetic and re-broadcast
-    * as a local relation, which also removes the single-task
-    * no-partition window the lazy form runs over the totals frame.
+  /** Global row positions over the total order `order` — the
+    * sharded-table writer's primitive, a count-only relative of
+    * [[orderedCumsum]]. Output = input columns + `__pos`, the 0-based
+    * number of rows ordered before the row, plus a RELEASE handle for
+    * the internal caches and the row count.
     *
-    * EAGER (one collect job at call time, which also materializes the
-    * shared cache) — callers that must stay data-free at plan build
-    * (`LazyPlanSpec`) use the lazy [[orderedCumsums]] instead. The
-    * sharded-table writer is the intended consumer: it previously paid
-    * a separate full `df.count()` pass per snapshot commit just to
-    * size the shard blocks. */
-  /** partitions = 0 → SCALE-ADAPTIVE: the range shuffle takes the
-    * session's shuffle partition count and stays AQE-COALESCIBLE
-    * (no user-pinned count), so a KB-sized batch collapses to one or
-    * two tasks while a TB-sized batch sizes by the advisory partition
-    * bytes — the writer-path choice; a hard-coded count is wrong at
-    * both ends. Coalescing merges only ADJACENT range partitions, so
-    * pid order stays range order and the offset arithmetic is
-    * unaffected. */
-  def orderedCumsumsCounted(df: DataFrame, order: Column,
-                            values: Seq[(String, Column)],
-                            partitions: Int)
-      : (DataFrame, () => Unit, Seq[Long]) = {
-    import org.apache.spark.sql.expressions.Window
-    require(values.nonEmpty, "orderedCumsums: need at least one value")
-    val vCols = values.indices.map(i => s"__v$i")
-    val bCols = values.indices.map(i => s"__b$i")
-    val reserved = Seq("__pid") ++ vCols ++ bCols ++ values.map(_._1)
-    val clash = df.columns.intersect(reserved)
+    * EAGER: one count pass at call time. The range-partitioned,
+    * sorted frame is persisted with each row's partition (`__pid`) and
+    * its index inside that partition (`__idx`, the low 33 bits of
+    * `monotonically_increasing_id()`, taken in the same projection
+    * above the sort). One RDD pass over that cache counts the rows of
+    * each stored `__pid`; the exclusive prefix sums of those
+    * counts (`base`) are computed on the driver and the position is
+    * `base[__pid] + __idx` — one literal-array lookup per row, so no
+    * window, no second exchange and no broadcast join.
+    *
+    * SCALE-ADAPTIVE: the range shuffle takes the session's shuffle
+    * partition count and stays AQE-COALESCIBLE, so a KB-sized batch
+    * collapses to one or two tasks while a TB-sized batch sizes by the
+    * advisory partition bytes. Coalescing merges only ADJACENT range
+    * partitions, so pid order stays range order.
+    *
+    * The input is persisted before the shuffle as well: the range
+    * sampler runs a job over its input, and without this cache that
+    * job is a full second evaluation of the input lineage (for a
+    * merge or update, a second read of the batch or the pruned table
+    * scan). It is released as soon as the count pass has filled the
+    * sorted cache; if the pass throws, both caches are released before
+    * the rethrow. Call the handle only AFTER the caller's last action
+    * on the returned frame. */
+  def orderedPositions(df: DataFrame, order: Column)
+      : (DataFrame, () => Unit, Long) = {
+    val clash = df.columns.intersect(Seq("__pid", "__idx", "__pos"))
     require(clash.isEmpty,
-      s"orderedCumsums: column(s) ${clash.mkString(", ")} already exist")
-    val withVals = values.zipWithIndex
-      .foldLeft(df) { case (d, ((_, v), i)) =>
-        d.withColumn(s"__v$i", v.cast("long")) }
-    // PRE-SHUFFLE cache (r14): repartitionByRange runs a RANGE-
-    // PARTITIONER SAMPLING job over its input before the shuffle —
-    // without this cache that job is a FULL second evaluation of the
-    // input lineage per commit (for a merge/update that means reading
-    // the batch, or the pruned table scan, twice). The sampling pass
-    // now fills this cache and the shuffle's map stage reads it; it
-    // is released right after the totals job materializes the
-    // post-shuffle cache every later consumer uses. If the sampling or
-    // the totals job throws, both caches are released before rethrow.
-    val pIn = withVals.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (p, totRows) = try {
-      val sorted = (if (partitions > 0)
-          pIn.repartitionByRange(partitions, order)
-        else pIn.repartitionByRange(order))
-        .sortWithinPartitions(order)
-        .withColumn("__pid", spark_partition_id())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // ONE job: per-partition totals (materializes the shared cache);
-      // exclusive prefix offsets and grand totals fall out driver-side
-      val totals = values.indices.map(i => sum(col(s"__v$i")).as(s"__t$i"))
-      val rows = try sorted.groupBy("__pid")
-        .agg(totals.head, totals.tail: _*).collect()
-        .map(r => r.getInt(0) -> values.indices.map(i =>
-          if (r.isNullAt(i + 1)) 0L else r.getLong(i + 1)))
-        .sortBy(_._1)
+      s"orderedPositions: column(s) ${clash.mkString(", ")} already exist")
+    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val pIn = df.persist(level)
+    val (sorted, counts) = try {
+      val sorted = pIn.repartitionByRange(order).sortWithinPartitions(order)
+        .select(col("*"), spark_partition_id().as("__pid"),
+          (monotonically_increasing_id() -
+            shiftleft(spark_partition_id().cast("long"), 33)).as("__idx"))
+        .persist(level)
+      // ONE RDD pass over the sorted cache counts its rows per stored
+      // pid (a groupBy would add an exchange and its own job)
+      val counts = try sorted.select(col("__pid")).rdd
+        .mapPartitions { it =>
+          val c = scala.collection.mutable.LongMap.empty[Long]
+          it.foreach { r =>
+            val p = r.getInt(0).toLong
+            c(p) = c.getOrElse(p, 0L) + 1L
+          }
+          c.iterator
+        }.collect()
       catch { case t: Throwable => sorted.unpersist(); throw t }
-      (sorted, rows)
+      (sorted, counts)
     } finally pIn.unpersist()
-    val grand = values.indices.map(i => totRows.map(_._2(i)).sum)
-    // exclusive running offsets in pid order
-    var acc = values.indices.map(_ => 0L).toIndexedSeq
-    val baseRows = totRows.map { case (pid, ts) =>
-      val row = org.apache.spark.sql.Row.fromSeq(pid +: acc)
-      acc = acc.indices.map(i => acc(i) + ts(i)).toIndexedSeq
-      row
-    }
-    val baseSchema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("__pid",
-        org.apache.spark.sql.types.IntegerType) +:
-      values.indices.map(i => org.apache.spark.sql.types.StructField(
-        s"__b$i", org.apache.spark.sql.types.LongType)))
-    val bases = df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(baseRows: _*), baseSchema)
-    val w = Window.partitionBy(col("__pid")).orderBy(order)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val out = values.zipWithIndex
-      .foldLeft(p.join(broadcast(bases), Seq("__pid"))) {
-        case (d, ((name, _), i)) =>
-          d.withColumn(name,
-            col(s"__b$i") + sum(col(s"__v$i")).over(w) - col(s"__v$i"))
-      }
-      .drop("__pid" +: (vCols ++ bCols): _*)
-    (out, () => { p.unpersist(); () }, grand)
+    val perPid = new Array[Long](
+      if (counts.isEmpty) 0 else counts.map(_._1).max.toInt + 1)
+    counts.foreach { case (p, c) => perPid(p.toInt) = c }
+    // base(p) = rows in every pid before p; the last entry is the total
+    val base = perPid.scanLeft(0L)(_ + _)
+    val out = sorted
+      .withColumn("__pos",
+        element_at(typedLit(base.toSeq), col("__pid") + 1) + col("__idx"))
+      .drop("__pid", "__idx")
+    (out, () => { sorted.unpersist(); () }, base.last)
   }
 
   /** Pack the corpus token stream (docs laid end-to-end in `id` order)

@@ -1481,13 +1481,78 @@ object Sources {
     *   independent of the parent's contents.
     * - [[FixedParent]] — compact/rewrite: the caller derived these
     *   rows from a specific parent state; a conflict means that
-    *   state changed under it → abort (re-run the maintenance op). */
+    *   state changed under it → abort (re-run the maintenance op).
+    *   The rows are normalized manifest rows (a [[ShardedMeta]]'s,
+    *   plus [[ledgerRows]]). */
   private sealed trait ParentMode
   private case object NoParent extends ParentMode
   private case object LatestParent extends ParentMode
-  private final case class FixedParent(rows: DataFrame,
+  private final case class FixedParent(rows: LocalManifest,
                                        baseVersion: Long)
     extends ParentMode
+
+  /** Manifest rows held on the driver — a published manifest or a
+    * piece of one. Manifests are metadata-scale (O(leaves)), so every
+    * commit composes its rows here and [[publishVersion]] writes them
+    * without a Spark job. */
+  private[sources] final case class LocalManifest(
+      schema: StructType, rows: Seq[org.apache.spark.sql.Row])
+
+  /** `parts` folded with `unionByName(allowMissingColumns = true)` and
+    * then `.na.fill(-1L, "batch_id")`, on the driver: columns keep the
+    * order of their first appearance, names match under the session's
+    * case rule, a piece that lacks a column contributes nulls, and a
+    * null batch id becomes -1. Every manifest column is a LONG or a
+    * STRING in every piece, so there is no type to widen — a type
+    * mismatch fails. */
+  private def unionManifests(parts: Seq[LocalManifest]): LocalManifest = {
+    import org.apache.spark.sql.types.StructField
+    val same = org.apache.spark.sql.internal.SQLConf.get.resolver
+    def find(fs: Seq[StructField], n: String) =
+      fs.indexWhere(f => same(f.name, n))
+    val fields = parts.map(_.schema.fields.toSeq).reduce { (acc, next) =>
+      acc.map { f =>
+        val i = find(next, f.name)
+        if (i < 0) f.copy(nullable = true)
+        else {
+          require(next(i).dataType == f.dataType,
+            s"manifest column ${f.name}: ${f.dataType} vs ${next(i).dataType}")
+          f.copy(nullable = f.nullable || next(i).nullable)
+        }
+      } ++ next.filter(g => find(acc, g.name) < 0)
+        .map(_.copy(nullable = true))
+    }
+    val bid = find(fields, "batch_id")
+    val schema = StructType(if (bid < 0) fields
+      else fields.updated(bid, fields(bid).copy(nullable = false)))
+    // rows carry the schema, as collected rows do (`getAs` by name)
+    LocalManifest(schema, parts.flatMap { p =>
+      val at = fields.map(f => find(p.schema.fields.toSeq, f.name))
+      p.rows.map { r =>
+        val vs = at.map(i => if (i < 0) null else r.get(i))
+        new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+          (if (bid >= 0 && vs(bid) == null) vs.updated(bid, -1L)
+           else vs).toArray, schema): org.apache.spark.sql.Row
+      }
+    })
+  }
+
+  /** The columns of a manifest row that describes no leaf: a
+    * tombstone, or (with a `leaf`) a [[ledgerRows]] entry. */
+  private val logRowSchema = {
+    import org.apache.spark.sql.types.{LongType, StringType}
+    new StructType().add("shard", LongType).add("n_rows", LongType)
+      .add("data_dir", StringType).add("batch_id", LongType)
+      .add("kind", StringType).add("seq", LongType).add("op", StringType)
+      .add("del_col", StringType)
+  }
+
+  /** The one manifest row of a tombstone: `n` distinct keys of column
+    * `idName` stored in `dir`, published at version `v`. */
+  private def tombstoneRow(dir: String, n: Long, batchId: Long, v: Long,
+                           op: String, idName: String): LocalManifest =
+    LocalManifest(logRowSchema, Seq(org.apache.spark.sql.Row(
+      -1L, n, dir, batchId, "delete", v, op, idName)))
 
   /** The ONE stats type rule: a stats column of this Spark type gets
     * exact manifest `min_/max_` bounds. Integral types only — parquet
@@ -1526,7 +1591,7 @@ object Sources {
                             deleteKeyCol: Option[String] = None,
                             partitionCols: Seq[String] = Nil,
                             meta: Option[ShardedMeta] = None,
-                            onEmpty: Option[Long] = None)
+                            onEmpty: Option[() => Long] = None)
       : Long = {
     import org.apache.spark.sql.functions._
     require(numShards >= 1, s"writeShardedTable: numShards $numShards")
@@ -1534,7 +1599,7 @@ object Sources {
     // `__ord` are its position scaffolding: an input that already
     // carries one would be silently clobbered (its `shard` even
     // hijacked as the partition key and lost on readback) — the
-    // orderedCumsums clash contract.
+    // orderedPositions clash contract.
     val clash = df.columns.intersect(Seq("shard", "__pos", "__ord"))
     require(clash.isEmpty, s"writeShardedTable: reserved column(s) " +
       s"${clash.mkString(", ")} already exist in the input")
@@ -1559,50 +1624,46 @@ object Sources {
         meta.map(_.partCols)
           .getOrElse(resolveMeta(spark, path).partCols)
       case FixedParent(rows, _) =>
-        rows.columns.filter(_.startsWith("part_")).map(_.drop(5)).toSeq
+        rows.schema.fieldNames.filter(_.startsWith("part_"))
+          .map(_.drop(5)).toSeq
     }
     require(partCols.forall(df.columns.contains),
       s"writeShardedTable: partition column(s) ${partCols
         .filterNot(df.columns.contains).mkString(",")} missing from " +
         "the input")
-    // checked BEFORE the cumsum persists its frame: a failure after
-    // it would leave that cache pinned
+    // checked BEFORE the position pass persists its frames: a failure
+    // after it would leave those caches pinned
     require(statsCols.forall(df.columns.contains),
       s"writeShardedTable: stats column(s) ${statsCols
         .filterNot(df.columns.contains).mkString(",")} missing from " +
         "the input")
     // contiguous range shards: global position by (orderCol, id)
-    // computed DIRECTLY on the frame (orderedCumsum carries every
+    // computed DIRECTLY on the frame (orderedPositions carries every
     // input column through), never via a join back on the id — a
     // duplicate-id input (e.g. a compaction folding overlapping
     // appends) would multiply through an id join, silently inflating
     // the snapshot. The row count that sizes the blocks falls out of
-    // the SAME per-partition-totals pass the prefix sum needs (r13:
-    // the separate writer-side `df.count()` job — one full extra
-    // evaluation of the input lineage per commit — is gone).
-    // The order key is MATERIALIZED as `__ord` before the cumsum: it
-    // is then computed once per row into the pre-shuffle cache, and
-    // the range sampler, the shuffle and every sort compare the stored
+    // the SAME count pass the positions need.
+    // The order key is MATERIALIZED as `__ord` before the pass: it is
+    // then computed once per row into the pre-shuffle cache, and the
+    // range sampler, the shuffle and the sort compare the stored
     // value — a computed key (the z-order Morton interleave over
     // per-dimension quantile buckets) was otherwise re-evaluated in
     // every comparison. Same values, so the same positions.
-    val (withPos, releaseCumsumCache, cumsumTotals) = graft.ops.Packing
-      .orderedCumsumsCounted(df.withColumn("__ord", orderCol),
-        struct(col("__ord"), id), Seq("__pos" -> lit(1L)),
-        partitions = 0)
-    val n = cumsumTotals.head
-    // An empty snapshot would write no part files, so the manifest
-    // pass could not even infer a schema (and a versioned dir with no
-    // manifest is exactly the half-written state readers must never
-    // see) — fail loudly before touching the directory layout.
-    // `onEmpty` lets predicate ops (update) fold their
-    // "nothing matched → keep the current version" probe into THIS
-    // count instead of paying a separate full evaluation of the
-    // matched-rows lineage for an isEmpty check (r13).
+    val (withPos, releasePositions, n) = graft.ops.Packing
+      .orderedPositions(df.withColumn("__ord", orderCol),
+        struct(col("__ord"), id))
+    // An empty snapshot would write no part files (and a versioned
+    // dir with no manifest is exactly the half-written state readers
+    // must never see) — fail loudly before touching the directory
+    // layout. `onEmpty` lets an op fold its "nothing to write" case
+    // into THIS count instead of paying a separate full evaluation of
+    // its input for an isEmpty probe: merge and update keep the
+    // current version, compaction publishes a manifest-only version.
     if (n <= 0) {
-      releaseCumsumCache()
+      releasePositions()
       onEmpty match {
-        case Some(v) => return v
+        case Some(f) => return f()
         case None => ()
       }
     }
@@ -1644,7 +1705,7 @@ object Sources {
       // out of the same files either way; vacuum/expiry already pin
       // any dir a manifest row references). The duplicate-key guard
       // that used to ride the key file's distinct count is ONE
-      // aggregation over the already-cached cumsum frame instead.
+      // aggregation over the already-cached position frame instead.
       // Gated on the key NOT being a partition column: a partition
       // key lives in directory names, and a tombstone reader's
       // partition-discovered type could diverge from the written one.
@@ -1677,11 +1738,11 @@ object Sources {
           (delDir, idName, delN)
         }
       }
-    // the cumsum's internal cache served its actions — drop it, or
-    // a session issuing many snapshot commits (streaming sinks, fuzz
+    // the position pass's cache served its actions — drop it, or a
+    // session issuing many snapshot commits (streaming sinks, fuzz
     // chains, any ingest loop) accumulates pinned full-frame cache
     // entries that strangle executor memory for every later query
-    } finally releaseCumsumCache()
+    } finally releasePositions()
     // MANIFEST STATS, one path for every commit: one recursive listing
     // of the dir just written, reading each part file's FOOTER
     // driver-side. Per leaf it yields the byte size (the manifest then
@@ -1795,8 +1856,8 @@ object Sources {
     // exactly one part file per leaf — each leaf is written by exactly
     // one task of the explicit shard repartition, so a retried or
     // speculative task's duplicate v2 output fails the commit loudly —
-    // and the files' TOTAL ROW COUNT equals the cumsum total (a torn
-    // or partial task left rows missing on disk).
+    // and the files' TOTAL ROW COUNT equals the position pass's count
+    // (a torn or partial task left rows missing on disk).
     val multi = leaves.filter(_._2.files != 1L)
     require(multi.isEmpty,
       s"writeShardedTable: ${multi.size} leaf dir(s) at $dataDir " +
@@ -1804,7 +1865,7 @@ object Sources {
         s"${multi.keys.toSeq.sorted.take(5).mkString(",")}")
     val total = leaves.valuesIterator.map(_.rows).sum
     require(total == n,
-      s"writeShardedTable: footer row total $total != cumsum " +
+      s"writeShardedTable: footer row total $total != counted " +
         s"total $n at $dataDir — torn or duplicate task output")
     val newRowsSchema = {
       import org.apache.spark.sql.types.{LongType, StringType,
@@ -1825,33 +1886,26 @@ object Sources {
           StructField("op", StringType),
           StructField("del_col", StringType)))
     }
-    def newRows(v: Long): DataFrame = {
-      val out = leafRows.map { case (leaf, shard, partVals, a, statVals) =>
+    def newRows(v: Long) = LocalManifest(newRowsSchema,
+      leafRows.map { case (leaf, shard, partVals, a, statVals) =>
         org.apache.spark.sql.Row.fromSeq(
           Seq(leaf, shard, a.rows) ++ statVals ++ Seq(a.bytes) ++
             partVals ++ Seq(dataDir, batchId, "data", v, op, null))
-      }
-      spark.createDataFrame(
-        java.util.Arrays.asList(out: _*), newRowsSchema)
-    }
+      })
     // MERGE's tombstone file was written in the SAME snapshot (see
     // the try block above): the delete's seq equals the data's seq,
     // and a tombstone only kills rows with a STRICTLY SMALLER seq —
     // so the merge's own inserts survive while every older copy of
     // the key dies, atomically (one manifest commit covers both dirs).
     def delRow(v: Long) = delInfo.map { case (delDir, idName, delN) =>
-      spark.range(1).select(
-        lit(-1L).as("shard"), lit(delN).as("n_rows"),
-        lit(delDir).as("data_dir"), lit(batchId).as("batch_id"),
-        lit("delete").as("kind"), lit(v).as("seq"),
-        lit(op).as("op"), lit(idName).as("del_col"))
+      tombstoneRow(delDir, delN, batchId, v, op, idName)
     }
-    // parent rows ride along NORMALIZED (pre-lineage manifests get
-    // kind/seq/op/del_col derived, pre-batch_id ones get -1) so a
-    // committed manifest never carries null lineage; LatestParent
-    // re-reads the manifest PER ATTEMPT so a retry composes against
-    // the state the conflicting writer just published
-    def mkManifest(v: Long): DataFrame = {
+    // parent rows ride along NORMALIZED (a resolved manifest is
+    // normalized on read, so a committed manifest never carries null
+    // lineage); LatestParent re-resolves PER ATTEMPT so a retry
+    // composes against the state the conflicting writer just
+    // published. Every piece is driver-side: the publish runs no job.
+    def mkManifest(v: Long): LocalManifest = {
       val par = parent match {
         case NoParent => None
         case LatestParent =>
@@ -1860,12 +1914,10 @@ object Sources {
           // a retry at a later version re-resolves — composing against
           // the state the conflicting writer just published
           Some(meta.filter(_.version == v - 1)
-            .getOrElse(resolveMeta(spark, path)).manifestDf(spark))
-        case FixedParent(rows, _) => Some(normalizeManifest(rows))
+            .getOrElse(resolveMeta(spark, path)).local)
+        case FixedParent(rows, _) => Some(rows)
       }
-      (par.toSeq ++ Seq(newRows(v)) ++ delRow(v).toSeq)
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-        .na.fill(-1L, Seq("batch_id"))
+      unionManifests(par.toSeq ++ Seq(newRows(v)) ++ delRow(v).toSeq)
     }
     // a FixedParent op derived its rows from a SPECIFIC parent state:
     // its claim must land at exactly baseVersion+1, else a commit
@@ -1965,7 +2017,7 @@ object Sources {
     * such claims; removing the claim file unblocks the table with no
     * data loss (the orphan data dir was never referenced). */
   private def publishVersion(spark: SparkSession, path: String,
-                             mkManifest: Long => DataFrame,
+                             mkManifest: Long => LocalManifest,
                              composable: Boolean,
                              expected: Option[Long] = None): Long = {
     val fs = new org.apache.hadoop.fs.Path(path)
@@ -1989,21 +2041,18 @@ object Sources {
           s"$path/_manifest/.stage-v$version-" +
             java.util.UUID.randomUUID().toString.take(8))
         try {
-          // collect-then-write-local: the manifest frame is usually a
-          // union of LOCAL relations (cached parent + driver-built new
-          // rows), so the collect is near-free; the collected rows are
-          // then written DRIVER-SIDE through Spark's own parquet write
-          // support (r13 — a metadata-scale file does not need a Spark
-          // job + task commit protocol; Iceberg writes its manifests
+          // NO Spark job: the manifest rows are composed on the driver
+          // and written DRIVER-SIDE through Spark's own parquet write
+          // support (a metadata-scale file does not need a Spark job +
+          // task commit protocol; Iceberg writes its manifests
           // driver-side for the same reason), and the publish also
           // seeds the metadata memo — the next operation on this
           // table resolves with zero reads
           val mf = mkManifest(version)
           val outSchema = mf.schema
-          val outRows = mf.collect()
+          val outRows = mf.rows.toArray
           org.apache.spark.sql.graftbridge.LocalParquetBridge
-            .writeSingleFile(spark, stage.toString, outSchema,
-              outRows.toSeq)
+            .writeSingleFile(spark, stage.toString, outSchema, mf.rows)
           require(fs.rename(stage, new org.apache.hadoop.fs.Path(
               s"$path/_manifest/v$version")),
             s"manifest publish rename failed: $stage -> v$version")
@@ -2051,17 +2100,14 @@ object Sources {
     * already-applied batch — duplicated rows, broken exactly-once.
     * Readers ignore ledger rows (they filter kind = data/delete);
     * these are pure commit-log entries, O(batches) metadata. */
-  private def ledgerRows(spark: SparkSession, ids: Seq[Long])
-      : Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    import spark.implicits._
+  private def ledgerRows(ids: Seq[Long]): Option[LocalManifest] =
     if (ids.isEmpty) None
-    else Some(ids.toDF("batch_id").select(
-      lit(-1L).as("shard"), lit(0L).as("n_rows"),
-      lit("__ledger__").as("data_dir"), col("batch_id"),
-      lit("ledger").as("kind"), lit(0L).as("seq"),
-      lit("ledger").as("op"), lit(null).cast("string").as("del_col")))
-  }
+    // `leaf`: the value [[normalizeManifest]] derives for a row without
+    // one
+    else Some(LocalManifest(logRowSchema.add("leaf",
+        org.apache.spark.sql.types.StringType),
+      ids.map(id => org.apache.spark.sql.Row(-1L, 0L, "__ledger__", id,
+        "ledger", 0L, "ledger", null, "shard=-1"))))
 
   /** Backfill the lineage columns on a pre-lineage manifest frame:
     * rows are all data (tombstones did not exist), seq parses from
@@ -2122,6 +2168,11 @@ object Sources {
     def manifestDf(spark: SparkSession): DataFrame =
       spark.createDataFrame(
         java.util.Arrays.asList(mfRows: _*), mfSchema)
+
+    /** The normalized manifest on the driver — the parent piece of a
+      * commit's manifest. */
+    def local: LocalManifest = LocalManifest(mfSchema,
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(mfRows))
 
     lazy val partCols: Seq[String] = mfSchema.fieldNames
       .filter(_.startsWith("part_")).map(_.drop(5)).toSeq
@@ -2846,8 +2897,10 @@ object Sources {
     *  - PARTITION VALUES: recovered by a broadcast join of
     *    (dir, leaf) — parsed from the file path — against the
     *    manifest's own leaf list (values Hive-unescaped driver-side),
-    *    typed to the head dir's discovery types. No url_decode
-    *    pitfalls, no per-dir basePath planning.
+    *    typed to the head dir's discovery types. Both join sides are
+    *    the scanned file's URI form (the manifest side is encoded
+    *    driver-side, the rule Hadoop's Path applies to the file side),
+    *    so no url_decode pitfalls and no per-dir basePath planning.
     *
     * Output column order/types match the union path (head authority). */
   private def fastExplicitRead(spark: SparkSession, meta: ShardedMeta,
@@ -2922,14 +2975,23 @@ object Sources {
             StructField("__leafdir", StringType),
             StructField("__seq", LongType)) ++
           meta.partCols.map(c => StructField(s"__pv_$c", StringType)))
+        // the join key is in the form the file side has: Spark names
+        // a scanned file by its Hadoop path's URI string, which
+        // percent-encodes what a URI path cannot hold (the `%` of every
+        // Hive escape, a space) — so the manifest's raw on-disk names
+        // take the same encoding, or an escaped partition value would
+        // match no file and the join would drop every row
+        def asScanned(rel: String): String =
+          new org.apache.hadoop.fs.Path("/" + rel).toUri.getRawPath
+            .stripPrefix("/")
         val info = rows.map { r =>
           val leaf = r.getString(1)
           val segs = leaf.split('/')
           val pvals = segs.dropRight(1).map(s =>
             unesc(s.split("=", 2)(1)))
           org.apache.spark.sql.Row.fromSeq(
-            Seq(r.getString(0).split('/').last, leaf, r.getLong(2)) ++
-              pvals)
+            Seq(asScanned(r.getString(0).split('/').last),
+              asScanned(leaf), r.getLong(2)) ++ pvals)
         }
         all.join(broadcast(spark.createDataFrame(
             java.util.Arrays.asList(info: _*), infoSchema)),
@@ -3036,13 +3098,10 @@ object Sources {
     val keepArr = meta.mfRows
       .filterNot(r => small(r.getAs[String]("data_dir")) &&
         r.getAs[String]("kind") == "data")
-    val keepRows0 = spark.createDataFrame(
-      java.util.Arrays.asList(keepArr: _*), meta.mfSchema)
     val droppedIds =
       (idsOf(meta.mfRows) -- idsOf(keepArr)).toSeq.sorted
-    val keepRows = ledgerRows(spark, droppedIds)
-      .map(l => keepRows0.unionByName(l, allowMissingColumns = true))
-      .getOrElse(keepRows0)
+    val keepRows = unionManifests(LocalManifest(meta.mfSchema,
+      keepArr.toSeq) +: ledgerRows(droppedIds).toSeq)
     val dirSeq = meta.dataRows.map(r =>
       r.getAs[String]("data_dir") -> r.getAs[Long]("seq")).toMap
     val delRows = meta.delRows
@@ -3074,16 +3133,15 @@ object Sources {
         (if (merged1.columns.contains(f.name)) col(f.name)
          else lit(null)).cast(f.dataType).as(f.name)): _*)
     }
-    if (merged.isEmpty) {
-      // every row of every small run was tombstoned: publish a
-      // manifest-only version that simply drops the small dirs
-      // (conflict aborts — same contract as the data-carrying path)
-      publishVersion(spark, path, _ => keepRows, composable = false,
-        expected = Some(current + 1))
-    } else
-      writeSnapshot(merged, id, orderCol, path, numShards, statsCols,
-        parent = FixedParent(keepRows, current), batchId = -1L,
-        op = "compact", meta = Some(meta))
+    // every row of every small run tombstoned: publish a manifest-only
+    // version that simply drops the small dirs (conflict aborts — same
+    // contract as the data-carrying path). The emptiness falls out of
+    // the commit's own row count, no separate probe job.
+    writeSnapshot(merged, id, orderCol, path, numShards, statsCols,
+      parent = FixedParent(keepRows, current), batchId = -1L,
+      op = "compact", meta = Some(meta),
+      onEmpty = Some(() => publishVersion(spark, path, _ => keepRows,
+        composable = false, expected = Some(current + 1))))
   }
 
   /** Row-level DELETE, merge-on-read: publish a snapshot whose only
@@ -3100,7 +3158,7 @@ object Sources {
   def deleteFromShardedTable(spark: SparkSession, path: String,
                              idName: String, keys: DataFrame,
                              skipIfEmpty: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.col
     val meta = resolveMeta(spark, path) // fails loudly if absent
     val baseV = meta.version + 1
     val token = java.util.UUID.randomUUID().toString.take(8)
@@ -3121,19 +3179,14 @@ object Sources {
       fs.delete(new org.apache.hadoop.fs.Path(delDir), true)
       return meta.version
     }
-    def delRow(v: Long) = spark.range(1).select(
-      lit(-1L).as("shard"), lit(n).as("n_rows"),
-      lit(delDir).as("data_dir"), lit(-1L).as("batch_id"),
-      lit("delete").as("kind"), lit(v).as("seq"),
-      lit("delete").as("op"), lit(idName).as("del_col"))
     // a DELETE composes with concurrent appends/merges: its tombstone
     // keys are parent-independent, so a commit conflict just retries
     // against the refreshed parent (meta reused only when the claim
     // lands at exactly meta.version + 1)
-    publishVersion(spark, path, v =>
-      (if (meta.version == v - 1) meta else resolveMeta(spark, path))
-        .manifestDf(spark)
-        .unionByName(delRow(v), allowMissingColumns = true),
+    publishVersion(spark, path, v => unionManifests(Seq(
+        (if (meta.version == v - 1) meta else resolveMeta(spark, path))
+          .local,
+        tombstoneRow(delDir, n, -1L, v, "delete", idName))),
       composable = true)
   }
 
@@ -3166,7 +3219,7 @@ object Sources {
     writeSnapshot(aligned, col(idName), orderCol, path, numShards,
       statsCols, parent = LatestParent, batchId = batchId, op = "merge",
       deleteKeyCol = Some(idName), meta = Some(meta),
-      onEmpty = Some(meta.version))
+      onEmpty = Some(() => meta.version))
   }
 
   // ---- COLUMN RENAME via a manifest-level mapping ------------------
@@ -3198,7 +3251,6 @@ object Sources {
                                from: String, to: String): Long = {
     val meta = resolveMeta(spark, path)
     val base = meta.version
-    val parent = meta.manifestDf(spark)
     val logical = logicalHeadSchemaOf(spark, meta).fieldNames.toSet
     require(logical.contains(from),
       s"renameShardedTableColumn: no column $from in $path " +
@@ -3218,7 +3270,7 @@ object Sources {
     val hist = meta.renames
     publishVersion(spark, path, { v =>
       writeRenameFile(spark, path, v, hist :+ ((v, from, to)))
-      parent
+      meta.local
     }, composable = false, expected = Some(base + 1))
   }
 
@@ -3319,7 +3371,6 @@ object Sources {
     require(set.nonEmpty, "updateShardedTable: empty set clause")
     val meta = resolveMeta(spark, path)
     val base = meta.version
-    val parent = meta.manifestDf(spark)
     // manifest pruning falls out of the predicate itself unless the
     // caller supplies tighter bounds
     val autoPreds =
@@ -3332,13 +3383,13 @@ object Sources {
       d.withColumn(c, e)
     }
     import org.apache.spark.sql.functions.col
-    // nothing-matched probe rides writeSnapshot's cumsum count
+    // nothing-matched probe rides writeSnapshot's row count
     // (onEmpty) — the old isEmpty paid a full extra evaluation of the
     // pruned read per update (r13)
     writeSnapshot(updated, col(idName), orderCol, path, numShards,
-      statsCols, parent = FixedParent(parent, base), batchId = -1L,
+      statsCols, parent = FixedParent(meta.local, base), batchId = -1L,
       op = "merge", deleteKeyCol = Some(idName), meta = Some(meta),
-      onEmpty = Some(base))
+      onEmpty = Some(() => base))
   }
 
   /** DELETE by predicate: resolve the matching keys with a
@@ -3425,7 +3476,7 @@ object Sources {
                             orderCol: Column, numShards: Int,
                             statsCols: Seq[String]): Long =
     writeSnapshot(cur, id, orderCol, meta.path, numShards, statsCols,
-      parent = ledgerRows(cur.sparkSession, meta.batchIds.toSeq.sorted)
+      parent = ledgerRows(meta.batchIds.toSeq.sorted)
         .map(l => FixedParent(l, meta.version)).getOrElse(NoParent),
       batchId = -1L, op = "rewrite", meta = Some(meta))
 

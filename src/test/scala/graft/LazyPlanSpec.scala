@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.dsl.Domain._
 import graft.dsl.Range._
@@ -16,38 +15,7 @@ import graft.dsl.Range._
 class LazyPlanSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  /** Count jobs started while `build` runs, using a marker job to
-    * flush the (async) listener bus: listener events are ordered, so
-    * once the marker's start event is visible, any job launched by
-    * `build` would have been seen already. */
-  private def jobsDuring(build: => Unit): Int = {
-    val marker = "graft-lazy-spec-marker"
-    val other = new java.util.concurrent.atomic.AtomicInteger(0)
-    @volatile var sawMarker = false
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val desc = Option(js.properties)
-          .map(_.getProperty("spark.job.description", "")).getOrElse("")
-        if (desc == marker) sawMarker = true
-        else { other.incrementAndGet(); () }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      build
-      // flush the async listener bus: events are ordered, so once the
-      // tagged marker job is visible, anything `build` launched is too
-      spark.sparkContext.setJobDescription(marker)
-      try spark.range(1).count()
-      finally spark.sparkContext.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!sawMarker && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(sawMarker, "marker job never observed")
-      other.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  import TestSpark.jobsDuring
 
   test("root-chunk transform plan builds without launching a job " +
        "(transformer stays data-free)") {

@@ -4164,13 +4164,13 @@ class OpsSpec extends AnyFunSuite {
     assert(out(2).getString(1).startsWith("unique"))
   }
 
-  test("orderedCumsumsCounted releases its caches when the totals job fails") {
+  test("orderedPositions releases its caches when the count pass fails") {
     def pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val before = pinned
     val df = spark.range(200).toDF("id")
+      .withColumn("c", raise_error(lit("forced count failure")))
     intercept[Exception] {
-      Packing.orderedCumsumsCounted(df, col("id"),
-        Seq("c" -> raise_error(lit("forced totals failure"))), 0)
+      Packing.orderedPositions(df, col("id"))
     }
     assert((pinned -- before).isEmpty,
       s"left pinned: ${(pinned -- before).toSeq.sorted}")

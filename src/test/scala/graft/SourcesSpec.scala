@@ -3503,4 +3503,81 @@ class SourcesSpec extends AnyFunSuite {
     assert(Sources.readShardedTable(spark, path).count() == 12L)
     Sources.dropShardedTable(spark, path)
   }
+
+  test("a compaction whose small runs are all tombstoned publishes a " +
+       "manifest-only version that drops them") {
+    import org.apache.spark.sql.functions._
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_compactdead").toString
+    def batch(lo: Long, n: Long) = spark.range(n)
+      .select((col("id") + lo).as("doc_id"),
+        concat(lit("d"), col("id") + lo).as("t"))
+    Sources.writeShardedTable(batch(0, 400), col("doc_id"),
+      col("doc_id"), path, 4, Seq("doc_id"))
+    Sources.appendShardedTable(batch(1000, 20), col("doc_id"),
+      col("doc_id"), path, 2, Seq("doc_id"), batchId = 7L)
+    Sources.appendShardedTable(batch(1020, 20), col("doc_id"),
+      col("doc_id"), path, 2, Seq("doc_id"), batchId = 8L)
+    val v4 = Sources.deleteFromShardedTable(spark, path, "doc_id",
+      spark.range(1000, 1040).select(col("id").as("doc_id")))
+    def dataDirs(): Set[String] = Sources.shardedManifest(spark, path)
+      .filter(col("kind") === "data").select("data_dir").distinct()
+      .collect().map(r => vtag(r.getString(0).split('/').last)).toSet
+    assert(dataDirs() == Set("data-v1", "data-v2", "data-v3"))
+    def read() = Sources.readShardedTable(spark, path)
+      .select("doc_id", "t").collect()
+      .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    val before = read()
+    assert(before.length == 400)
+    val pinnedBefore = persistedRdds
+    val v = Sources.compactShardedTable(spark, path, col("doc_id"),
+      col("doc_id"), numShards = 2, statsCols = Seq("doc_id"),
+      smallDirRows = 100L)
+    assert(v == v4 + 1)
+    // the small dirs are gone from the manifest and no dir was written
+    assert(dataDirs() == Set("data-v1"))
+    assert(!new java.io.File(path).list().exists(n =>
+      vtag(n) == s"data-v$v"))
+    assert(read() == before)
+    // the dropped runs' batch ids survive as ledger rows
+    assert(Sources.committedBatchIds(spark, path) == Set(7L, 8L))
+    assert(Sources.auditShardedTable(spark, path).count() == 0L)
+    assert((persistedRdds -- pinnedBefore).isEmpty,
+      s"left persisted: ${(persistedRdds -- pinnedBefore).toSeq.sorted}")
+    Sources.dropShardedTable(spark, path)
+  }
+
+  test("partition values that need Hive escaping read back on the " +
+       "fast multi-dir path (32+ dirs): full, pruned, DSv2, audit") {
+    import org.apache.spark.sql.functions._
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_escfast").toString
+    def batch(lo: Long) = spark.range(4).select(
+      (col("id") + lo).as("doc_id"),
+      when(col("id") % 2 === 0, lit("a=b c"))
+        .otherwise(lit("x:y%z")).as("src"),
+      concat(lit("d"), col("id") + lo).as("t"))
+    Sources.writeShardedTable(batch(0), col("doc_id"), col("doc_id"),
+      path, 1, Seq("doc_id"), partitionCols = Seq("src"))
+    (1 until 32).foreach { i =>
+      Sources.appendShardedTable(batch(4L * i), col("doc_id"),
+        col("doc_id"), path, 1, Seq("doc_id"))
+    }
+    assert(new java.io.File(path).list()
+      .count(_.startsWith("data-v")) == 32)
+    val want = (0L until 128L).map(i =>
+      (i, if (i % 2 == 0) "a=b c" else "x:y%z", s"d$i")).toSet
+    def got(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "src", "t").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
+    val fastBefore = Sources.FastReadStats.fastHits.get()
+    assert(got(Sources.readShardedTable(spark, path)) == want)
+    assert(Sources.FastReadStats.fastHits.get() > fastBefore)
+    assert(got(Sources.readShardedTable(spark, path,
+      partPreds = Seq(("src", "x:y%z")))) ==
+      want.filter(_._2 == "x:y%z"))
+    assert(got(spark.read.format("graft-sharded").load(path)) == want)
+    assert(Sources.auditShardedTable(spark, path).count() == 0L)
+    Sources.dropShardedTable(spark, path)
+  }
 }
