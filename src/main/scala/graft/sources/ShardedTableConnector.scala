@@ -45,8 +45,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Execution rides the [[V1Scan]] bridge: the scan hands Spark a
   * `BaseRelation with TableScan` whose RDD is the library-planned
   * DataFrame's internal-row RDD. The merge-on-read tombstone
-  * anti-join, schema-evolution null-fill, and the >=32-dir multi-leaf
-  * fast path are all plans Catalyst already optimizes — re-deriving
+  * anti-join, schema-evolution null-fill, and the one multi-leaf scan
+  * per rename era are all plans Catalyst already optimizes — re-deriving
   * them row-by-row inside a `PartitionReader` would duplicate the
   * engine below the engine. At 100 TB the costs stay where the
   * library read put them: manifest KB on the driver, pruned shard

@@ -921,65 +921,18 @@ object Sources {
     // add-only) — it is the type authority; a dir written BEFORE the
     // column was added lacks it and contributes null-filled rows,
     // which the bloom skips (nulls are not indexed, per the read
-    // contract). The uniform cast keeps build and probe hashing
+    // contract). The head types keep build and probe hashing
     // identical on evolved and non-evolved dirs alike. `colName` is
-    // the LOGICAL name at build time; per-dir rename translation maps
-    // it onto whatever physical name each dir wrote.
-    val headSchema = logicalHeadSchemaOf(spark, meta)
-    require(headSchema.fieldNames.contains(colName),
+    // the LOGICAL name at build time; the scan maps it onto whatever
+    // physical name each dir wrote.
+    require(logicalHeadSchemaOf(spark, meta).fieldNames.contains(colName),
       s"buildShardedBloom: column $colName not in table at $path")
-    val dt = headSchema(colName).dataType
-    val events = meta.renames
-    val dataRows = meta.dataRows.map(r =>
-      org.apache.spark.sql.Row(r.getAs[String]("data_dir"),
-        r.getAs[Long]("shard"), r.getAs[Long]("seq"),
-        r.getAs[String]("leaf")))
-    // many-dir tables build from ONE multi-leaf scan (same O(dirs)
-    // planning fix as the audit and the fast read path); few-dir
-    // tables — and reads a rename or partition layout makes
-    // heterogeneous — keep the per-dir union
-    def perDirValues(): DataFrame =
-      dataRows.groupBy(_.getString(0)).toSeq.sortBy(_._1)
-        .map { case (dDir, rs) =>
-          val dirs = rs.map(r => s"$dDir/${r.getString(3)}").toSeq
-          val f = translateDir(readDir(spark, dDir, dirs: _*),
-            rs.head.getLong(2), events, version)
-          val v = (if (f.columns.contains(colName)) col(colName)
-                   else lit(null)).cast(dt)
-          f.select(lit(dDir).as("data_dir"),
-            col("shard").cast("long").as("shard"), v.as("__v"))
-        }.reduce(_.unionByName(_))
-    val values =
-      if (dataRows.map(_.getString(0)).distinct.length >=
-          FastReadDirThreshold &&
-          !dataRows.exists(_.getString(3).contains("/")) &&
-          !renameRelevant(events, dataRows.map(_.getLong(2)).toSeq,
-            version)) {
-        // a type-widened table makes mergeSchema's StructType merge
-        // throw (int vs bigint) — fall back to the per-dir union,
-        // same contract as the read path
-        try {
-          import spark.implicits._
-          val leaves = dataRows.map(r =>
-            s"${r.getString(0)}/${r.getString(3)}").toSeq
-          val byBase = dataRows.map(_.getString(0)).distinct
-            .map(d => (d.split('/').last, d)).toSeq
-            .toDF("__base", "data_dir")
-          val f0 = spark.read.option("mergeSchema", "true")
-            .parquet(leaves: _*)
-          val v = (if (f0.columns.contains(colName)) col(colName)
-                   else lit(null)).cast(dt)
-          f0.select(
-              regexp_extract(input_file_name(),
-                "/([^/]+)/shard=[0-9]+/[^/]+$", 1).as("__base"),
-              regexp_extract(input_file_name(),
-                "/shard=([0-9]+)/[^/]+$", 1).cast("long").as("shard"),
-              v.as("__v"))
-            .join(broadcast(byBase), "__base").drop("__base")
-        } catch {
-          case scala.util.control.NonFatal(_) => perDirValues()
-        }
-      } else perDirValues()
+    // the raw dir contents — tombstones are not applied: a bloom is a
+    // superset index per (data_dir, shard)
+    val values = scanLeaves(spark, meta, meta.dataRows.map(scanRow),
+        withDir = true)
+      .select(col("__dir").as("data_dir"),
+        col("shard").cast("long").as("shard"), col(colName).as("__v"))
     val bloom = values.filter(col("__v").isNotNull)
       .select(col("data_dir"), col("shard"),
         explode(array((0 until k).map(i =>
@@ -1502,7 +1455,8 @@ object Sources {
     * then `.na.fill(-1L, "batch_id")`, on the driver: columns keep the
     * order of their first appearance, names match under the session's
     * case rule, a piece that lacks a column contributes nulls, and a
-    * null batch id becomes -1. Every manifest column is a LONG or a
+    * null batch id becomes -1. A piece with no columns (a rewrite's
+    * empty ledger) adds nothing. Every manifest column is a LONG or a
     * STRING in every piece, so there is no type to widen — a type
     * mismatch fails. */
   private def unionManifests(parts: Seq[LocalManifest]): LocalManifest = {
@@ -1510,7 +1464,8 @@ object Sources {
     val same = org.apache.spark.sql.internal.SQLConf.get.resolver
     def find(fs: Seq[StructField], n: String) =
       fs.indexWhere(f => same(f.name, n))
-    val fields = parts.map(_.schema.fields.toSeq).reduce { (acc, next) =>
+    val pieces = parts.map(_.schema.fields.toSeq).filter(_.nonEmpty)
+    val fields = pieces.reduce { (acc, next) =>
       acc.map { f =>
         val i = find(next, f.name)
         if (i < 0) f.copy(nullable = true)
@@ -2195,7 +2150,6 @@ object Sources {
       dataRows.maxBy(_.getAs[Long]("seq"))
     def headDir: String = headRow.getAs[String]("data_dir")
     def headSeq: Long = headRow.getAs[Long]("seq")
-    def headLeaf: String = headRow.getAs[String]("leaf")
 
     /** The full commit log (the append chain carries every ancestor's
       * batch ids forward) — driver-side, no job. */
@@ -2212,18 +2166,16 @@ object Sources {
     (StructType, Array[org.apache.spark.sql.Row])]()
   // (path, version, fingerprint) -> the library READ's result schema.
   // Every DSv2 loadTable / inferSchema pays a full readShardedTable
-  // PLAN construction (union/fast-path analysis + tombstone anti-join)
+  // PLAN construction (scan analysis + tombstone anti-join)
   // just to take `.schema` — a per-SQL-statement Catalyst constant on
   // the q607-style catalog chains (r14). A published snapshot is
   // immutable, so the schema memoizes under the same key discipline
   // as the manifest rows.
   private val readSchemaCache = new java.util.concurrent
     .ConcurrentHashMap[(String, Long, String), StructType]()
-  // immutable dir path -> schema: a data or delete dir's FILE schema
-  // ([[fileSchema]]) keyed by the dir, the head leaf's physical schema
-  // ([[physHeadSchema]]) keyed by the leaf. Data dirs carry a random
-  // token suffix and are immutable once referenced — safe to key by
-  // path.
+  // immutable dir path -> a data or delete dir's FILE schema
+  // ([[fileSchema]]). Data dirs carry a random token suffix and are
+  // immutable once referenced — safe to key by path.
   private val dirSchemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
@@ -2299,17 +2251,20 @@ object Sources {
       (schema, rows))
   }
 
-  /** The head dir's PHYSICAL schema (partition columns typed by
-    * discovery, `shard` included) — the head's [[fileSchema]] plus the
-    * discovered directory columns, memoized by the immutable leaf
-    * path. */
+  /** The snapshot's PHYSICAL schema: the head dir's [[fileSchema]],
+    * then the partition columns and `shard` as Spark's partition
+    * discovery types them over EVERY data leaf of the snapshot — so a
+    * pruned read, or a newest dir whose values all look numeric, never
+    * retypes a column. Every field is nullable, as a file scan reports
+    * it. */
   private def physHeadSchema(spark: SparkSession, m: ShardedMeta)
       : StructType = {
-    // resolved first: a mapping function must not update the map
-    val fileCols = fileSchema(spark, m.headDir)
-    dirSchemaCache.computeIfAbsent(s"${m.headDir}/${m.headLeaf}", leaf =>
-      spark.read.schema(fileCols).option("basePath", m.headDir)
-        .parquet(leaf).schema)
+    import org.apache.spark.sql.execution.datasources.graftbridge
+      .PartitionBridge
+    PartitionBridge.asNullable(StructType(
+      fileSchema(spark, m.headDir).fields ++
+        PartitionBridge.partitionSchema(spark,
+          m.dataRows.map(_.getAs[String]("leaf")).distinct.toSeq).fields))
   }
 
   /** The FILE schema of a data or delete dir — the columns its part
@@ -2362,15 +2317,11 @@ object Sources {
       }
     })
 
-  /** Read a data or delete dir (or the given leaves of it, under the
-    * dir as `basePath`) with its [[fileSchema]]: partition discovery
-    * still types the directory columns, and no inference job runs. */
-  private def readDir(spark: SparkSession, dir: String,
-                      leaves: String*): DataFrame = {
-    val r = spark.read.schema(fileSchema(spark, dir))
-    if (leaves.isEmpty) r.parquet(dir)
-    else r.option("basePath", dir).parquet(leaves: _*)
-  }
+  /** Read a data or delete dir with its [[fileSchema]]: partition
+    * discovery still types the directory columns, and no inference
+    * job runs. */
+  private def readDir(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(fileSchema(spark, dir)).parquet(dir)
 
   private def logicalHeadSchemaOf(spark: SparkSession, m: ShardedMeta)
       : StructType =
@@ -2485,7 +2436,8 @@ object Sources {
     * predicate — pruning is a superset guarantee, the same contract
     * as parquet row-group stats one level up. An empty intersection
     * returns an empty frame with the table schema. Shards from
-    * different snapshots (append chains) are unioned by name. */
+    * different snapshots (append chains) are read by one scan
+    * ([[scanLeaves]]). */
   def readShardedTable(spark: SparkSession, path: String,
                        preds: Seq[(String, Long, Long)] = Nil,
                        version: Option[Long] = None,
@@ -2524,12 +2476,15 @@ object Sources {
           case (Some(mx), Some(mn)) => !(mx < lo || mn > hi)
           case _ => true // null stats can never exclude
         } }
-    }.map { r =>
-      org.apache.spark.sql.Row(r.getAs[String]("data_dir"),
-        r.getAs[String]("leaf"), r.getAs[Long]("seq"))
-    }
+    }.map(scanRow)
     readManifestShards(spark, meta, rows)
   }
+
+  /** The `(data_dir, leaf, seq)` of a manifest data row — what
+    * [[scanLeaves]] reads. */
+  private def scanRow(r: org.apache.spark.sql.Row): org.apache.spark.sql.Row =
+    org.apache.spark.sql.Row(r.getAs[String]("data_dir"),
+      r.getAs[String]("leaf"), r.getAs[Long]("seq"))
 
   /** Shared manifest pruning: partition-equality (part_<c> values)
     * then stats bounds, both NULL-SAFE KEEP (a row without a recorded
@@ -2741,152 +2696,35 @@ object Sources {
     readShardedTable(spark, path, preds,
       version = Some(shardedVersionAt(spark, path, tsMillis)))
 
-  /** Shared read tail: materialize the chosen (data_dir, shard, seq)
-    * rows, union by name with null-fill for pre-evolution dirs, and
-    * apply live tombstones. Schema authority is the NEWEST data dir
-    * (an evolved append's added columns must appear even when the
-    * read prunes to old shards only, and on the empty-intersection
-    * path). */
-  /** Dir-count threshold above which the read switches to the ONE
-    * multi-leaf scan: below it the per-dir union (whose per-dir
-    * basePath keeps partition-discovery typing and plan shapes the
-    * specs pin) is fine; above it, per-dir planning is O(dirs)
-    * driver work — the same curve the audit fast path fixed (the
-    * tablelife probe measured 28.8 s to READ a 400-append table).
-    * Maintenance (compaction) keeps healthy tables under this. */
-  private val FastReadDirThreshold = 32
-
+  /** Read the chosen `(data_dir, leaf, seq)` rows of a snapshot: their
+    * [[scanLeaves]], then the read tail — every column under its
+    * logical name in the head dir's order (`shard` last), and the live
+    * tombstones applied. With no rows (a read pruned to nothing) the
+    * head leaf is scanned under an always-false filter, so the empty
+    * frame keeps the snapshot's schema. */
   private def readManifestShards(spark: SparkSession, meta: ShardedMeta,
                                  rows: Array[org.apache.spark.sql.Row])
       : DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit,
-      input_file_name, regexp_extract}
-    import spark.implicits._
-    val delRows = meta.delRows
-    val events = meta.renames
-    val readV = meta.version
-    val headDir = meta.headDir
-    val headSeq = meta.headSeq
-    def legacyFast(): DataFrame = {
-      // FAST path: one distributed mergeSchema read over every leaf;
-      // shard and per-dir seq recovered from the file path (schema
-      // authority and column order = the newest dir, like the union
-      // path; merged schema ⊇ head schema because evolution is
-      // add-only)
-      val leaves = rows.map(r =>
-        s"${r.getString(0)}/${r.getString(1)}").toSeq
-      val f0 = spark.read.option("mergeSchema", "true")
-        .parquet(leaves: _*)
-      val headSchema = physHeadSchema(spark, meta)
-      val shardExpr = regexp_extract(input_file_name(),
-        "/shard=([0-9]+)/[^/]+$", 1).cast("int").as("shard")
-      // an evolved column can be missing from the MERGED schema when
-      // every pruned leaf predates the add-only evolution (the head
-      // dir still carries it) — null-fill exactly as the union path
-      // and buildShardedBloom's fast path do
-      val cols = headSchema.fields.toSeq.map(f =>
-        if (f.name == "shard") shardExpr
-        else (if (f0.columns.contains(f.name)) col(f.name)
-              else lit(null)).cast(f.dataType).as(f.name))
-      val base = f0.select(cols: _*)
-      if (delRows.isEmpty) base
-      else {
-        val seqByBase = rows
-          .map(r => (r.getString(0).split('/').last, r.getLong(2)))
-          .distinct.toSeq.toDF("__base", "__seq")
-        val tagged = f0
-          .withColumn("__base", regexp_extract(input_file_name(),
-            "/([^/]+)/shard=[0-9]+/[^/]+$", 1))
-          .join(broadcast(seqByBase), "__base")
-          .select(cols :+ col("__seq"): _*)
-        applyDeletes(spark, tagged, delRows, events, readV)
-      }
-    }
-    def unionPath(): DataFrame = {
-      // one read per contributing data dir (each needs its own
-      // basePath for the shard= partition column), unioned by name
-      // with null-fill for pre-evolution dirs — dirs are snapshot-
-      // count-many, a metadata-scale union. With live tombstones each
-      // dir's rows are tagged with the dir's seq so merge-on-read can
-      // order them against the deletes.
-      // schema-only seed for the fold: a LocalRelation, NOT a parquet
-      // read — it must contribute the newest schema without adding
-      // headDir's files to the scan (inputFiles is what the pruning
-      // specs and probes measure)
-      val head = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        translateDir(readDir(spark, headDir), headSeq, events,
-          readV).schema)
-      val headTagged =
-        if (delRows.isEmpty) head else head.withColumn("__seq", lit(0L))
-      val base = rows.groupBy(_.getString(0)).toSeq.sortBy(_._1).map {
-        case (dDir, rs) =>
-          val dirs = rs.map(r => s"$dDir/${r.getString(1)}").toSeq
-          val f = translateDir(readDir(spark, dDir, dirs: _*),
-            rs.head.getLong(2), events, readV)
-          if (delRows.isEmpty) f
-          else f.withColumn("__seq", lit(rs.head.getLong(2)))
-      }.foldLeft(headTagged)(
-        _.unionByName(_, allowMissingColumns = true))
-      if (delRows.isEmpty) base
-      else applyDeletes(spark, base, delRows, events, readV)
-    }
-    if (rows.isEmpty)
-      translateDir(readDir(spark, headDir).filter(lit(false)),
-        headSeq, events, readV)
-    else if (rows.map(_.getString(0)).distinct.length >=
-        FastReadDirThreshold) {
-      import scala.util.control.NonFatal
-      // the explicit-schema fast read is the DEFAULT for every big
-      // table — plain, partitioned, renamed, type-widened: no
-      // mergeSchema footer-inference job at all (FastReadProbe r12:
-      // 0.9 s vs the mergeSchema path's 1.8 s on the same 400-dir
-      // table). The mergeSchema shape stays as the first fallback,
-      // the per-dir union as the correctness backstop. NOTE the
-      // backstop chain is PLAN-TIME-ONLY: all three shapes return
-      // lazy frames, so a failure first surfacing at execution time
-      // fails the query rather than falling through (acceptable —
-      // every known demotion reason is an analysis-time schema
-      // conflict). Fallbacks are COUNTED and logged so a silent
-      // wholesale demotion of big reads to the union path fails the
-      // FastReadStats spec pin instead of a bench round.
-      try {
-        val r = fastExplicitRead(spark, meta, rows)
-        FastReadStats.fastHits.incrementAndGet()
-        r
-      } catch { case NonFatal(e) =>
-        FastReadStats.fallbacks.incrementAndGet()
-        org.slf4j.LoggerFactory.getLogger("graft.sources.Sources")
-          .warn(s"fast explicit read fell back for ${meta.path} " +
-            s"(v${meta.version}, ${rows.length} leaves): $e")
-        val partitioned = rows.exists(_.getString(1).contains("/"))
-        val renamed = renameRelevant(events,
-          rows.map(_.getLong(2)).toSeq :+ headSeq, readV)
-        if (!partitioned && !renamed)
-          try legacyFast()
-          catch { case NonFatal(_) => unionPath() }
-        else unionPath()
-      }
-    } else unionPath()
+    import org.apache.spark.sql.functions.{col, lit}
+    val scan =
+      if (rows.nonEmpty) scanLeaves(spark, meta, rows)
+      else scanLeaves(spark, meta, Array(scanRow(meta.headRow)))
+        .filter(lit(false))
+    val deletes = meta.delRows.nonEmpty && rows.nonEmpty
+    val base = scan.select(physHeadSchema(spark, meta).fieldNames.toSeq
+      .map(n => col(logicalNameOf(n, meta.headSeq, meta.renames,
+        meta.version))) ++ (if (deletes) Seq(col("__seq")) else Nil): _*)
+    if (!deletes) base
+    else applyDeletes(spark, base, meta.delRows, meta.renames,
+      meta.version)
   }
 
-  /** Fast-read observability: process-wide counters for how many
-    * big-table reads planned through [[fastExplicitRead]] vs fell
-    * back (each fallback also logs the cause at WARN). A healthy
-    * workload has fallbacks == 0; the spec pins the canonical
-    * partitioned/renamed/widened shapes as fast-path hits so a future
-    * edit that silently demotes every big read to the union path
-    * fails a test instead of a bench round. */
-  object FastReadStats {
-    val fastHits = new java.util.concurrent.atomic.AtomicLong
-    val fallbacks = new java.util.concurrent.atomic.AtomicLong
-  }
-
-  /** Explicit-schema multi-leaf fast read — the partitioned / renamed
-    * / type-widened generalization of the mergeSchema fast path:
+  /** The ONE scan of a snapshot's `(data_dir, leaf, seq)` rows — every
+    * table read, compaction's small-run read and the bloom build plan
+    * it, at any dir count:
     *
     *  - NO schema-inference job: every leaf is read with the head
-    *    dir's (widest — widening is monotone) types; Spark 4's
+    *    dir's (widest — widening is monotone) file types; Spark 4's
     *    parquet readers up-convert int32→long / float→double in place
     *    and null-fill columns a pre-evolution dir lacks.
     *  - RENAMES: dirs are grouped by rename ERA (the subset of events
@@ -2894,18 +2732,21 @@ object Sources {
     *    that era's PHYSICAL column names and aliasing to the logical
     *    names of the read version. Era count is O(renames), not
     *    O(dirs).
-    *  - PARTITION VALUES: recovered by a broadcast join of
-    *    (dir, leaf) — parsed from the file path — against the
-    *    manifest's own leaf list (values Hive-unescaped driver-side),
-    *    typed to the head dir's discovery types. Both join sides are
-    *    the scanned file's URI form (the manifest side is encoded
-    *    driver-side, the rule Hadoop's Path applies to the file side),
-    *    so no url_decode pitfalls and no per-dir basePath planning.
+    *  - `shard` comes from the file path. The row's `seq` (`__seq`),
+    *    its `data_dir` (`__dir`) and its PARTITION VALUES come from a
+    *    broadcast join of (dir, leaf) — parsed from the path's tail —
+    *    against `rows` themselves (values Hive-unescaped driver-side,
+    *    typed by [[physHeadSchema]]). Both join sides are the scanned
+    *    file's URI form (the rows side is encoded driver-side, the
+    *    rule Hadoop's Path applies to the file side), so no url_decode
+    *    pitfalls and no per-dir basePath planning. The join runs only
+    *    for a partitioned or tombstoned snapshot, or `withDir`.
     *
-    * Output column order/types match the union path (head authority). */
-  private def fastExplicitRead(spark: SparkSession, meta: ShardedMeta,
-                               rows: Array[org.apache.spark.sql.Row])
-      : DataFrame = {
+    * Output: every logical column (file columns and partition
+    * columns), `shard`, and `__seq` and `__dir` when joined. */
+  private def scanLeaves(spark: SparkSession, meta: ShardedMeta,
+                         rows: Array[org.apache.spark.sql.Row],
+                         withDir: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, concat_ws,
       element_at, input_file_name, lit, regexp_extract, slice, split}
     val events = meta.renames
@@ -2921,7 +2762,7 @@ object Sources {
       .filterNot(f => partCols(f.name))
       .map(f => f.copy(name =
         logicalNameOf(f.name, meta.headSeq, events, readV)))
-    val needJoin = partCols.nonEmpty || meta.delRows.nonEmpty
+    val needJoin = partCols.nonEmpty || meta.delRows.nonEmpty || withDir
     // group dirs by rename era: same applicable event subset = same
     // physical-to-logical translation
     val groups = rows.groupBy(r =>
@@ -2965,52 +2806,42 @@ object Sources {
         f0.select(sel: _*)
     }
     val all = parts.reduce(_.unionByName(_))
-    val joined =
-      if (!needJoin) all
-      else {
-        import org.apache.spark.sql.types.{LongType, StringType,
-          StructField}
-        val infoSchema = StructType(
-          Seq(StructField("__base", StringType),
-            StructField("__leafdir", StringType),
-            StructField("__seq", LongType)) ++
-          meta.partCols.map(c => StructField(s"__pv_$c", StringType)))
-        // the join key is in the form the file side has: Spark names
-        // a scanned file by its Hadoop path's URI string, which
-        // percent-encodes what a URI path cannot hold (the `%` of every
-        // Hive escape, a space) — so the manifest's raw on-disk names
-        // take the same encoding, or an escaped partition value would
-        // match no file and the join would drop every row
-        def asScanned(rel: String): String =
-          new org.apache.hadoop.fs.Path("/" + rel).toUri.getRawPath
-            .stripPrefix("/")
-        val info = rows.map { r =>
-          val leaf = r.getString(1)
-          val segs = leaf.split('/')
-          val pvals = segs.dropRight(1).map(s =>
-            unesc(s.split("=", 2)(1)))
-          org.apache.spark.sql.Row.fromSeq(
-            Seq(asScanned(r.getString(0).split('/').last),
-              asScanned(leaf), r.getLong(2)) ++ pvals)
-        }
-        all.join(broadcast(spark.createDataFrame(
-            java.util.Arrays.asList(info: _*), infoSchema)),
-          Seq("__base", "__leafdir"))
+    if (!needJoin) all
+    else {
+      import org.apache.spark.sql.types.{LongType, StringType,
+        StructField}
+      val infoSchema = StructType(
+        Seq(StructField("__base", StringType),
+          StructField("__leafdir", StringType),
+          StructField("__seq", LongType),
+          StructField("__dir", StringType)) ++
+        meta.partCols.map(c => StructField(s"__pv_$c", StringType)))
+      // the join key is in the form the file side has: Spark names
+      // a scanned file by its Hadoop path's URI string, which
+      // percent-encodes what a URI path cannot hold (the `%` of every
+      // Hive escape, a space) — so the manifest's raw on-disk names
+      // take the same encoding, or an escaped partition value would
+      // match no file and the join would drop every row
+      def asScanned(rel: String): String =
+        new org.apache.hadoop.fs.Path("/" + rel).toUri.getRawPath
+          .stripPrefix("/")
+      val info = rows.map { r =>
+        val leaf = r.getString(1)
+        val pvals = leaf.split('/').dropRight(1).map(s =>
+          unesc(s.split("=", 2)(1)))
+        org.apache.spark.sql.Row.fromSeq(
+          Seq(asScanned(r.getString(0).split('/').last),
+            asScanned(leaf), r.getLong(2), r.getString(0)) ++ pvals)
       }
-    // final shape: head order, logical names, discovery types for the
-    // partition columns (cast from the joined raw strings)
-    val outCols = headPhys.fields.toSeq.map { f =>
-      val l = logicalNameOf(f.name, meta.headSeq, events, readV)
-      if (f.name == "shard") col("shard")
-      else if (partCols(f.name))
-        col(s"__pv_${f.name}").cast(f.dataType).as(l)
-      else col(l)
+      val joined = all.join(broadcast(spark.createDataFrame(
+          java.util.Arrays.asList(info: _*), infoSchema)),
+        Seq("__base", "__leafdir"))
+      // partition columns at their snapshot-wide discovery types
+      joined.select(dataFields.map(f => col(f.name)) ++
+        headPhys.fields.toSeq.filter(f => partCols(f.name)).map(f =>
+          col(s"__pv_${f.name}").cast(f.dataType).as(f.name)) ++
+        Seq("shard", "__seq", "__dir").map(col): _*)
     }
-    val base = joined.select(
-      outCols ++ (if (meta.delRows.nonEmpty) Seq(col("__seq")) else Nil)
-        : _*)
-    if (meta.delRows.isEmpty) base
-    else applyDeletes(spark, base, meta.delRows, events, readV)
   }
 
   /** MERGE-ON-READ: drop every data row some LATER tombstone covers.
@@ -3071,7 +2902,6 @@ object Sources {
                           orderCol: Column, numShards: Int,
                           statsCols: Seq[String],
                           smallDirRows: Long): Long = {
-    import org.apache.spark.sql.functions.{col, lit}
     val meta = resolveMeta(spark, path)
     val current = meta.version
     val perDir = meta.dataRows.groupBy(_.getAs[String]("data_dir"))
@@ -3102,37 +2932,16 @@ object Sources {
       (idsOf(meta.mfRows) -- idsOf(keepArr)).toSeq.sorted
     val keepRows = unionManifests(LocalManifest(meta.mfSchema,
       keepArr.toSeq) +: ledgerRows(droppedIds).toSeq)
-    val dirSeq = meta.dataRows.map(r =>
-      r.getAs[String]("data_dir") -> r.getAs[Long]("seq")).toMap
-    val delRows = meta.delRows
-    // APPLY the live tombstones to the rows being rewritten — the
-    // compacted copy gets seq = the new version, which is LARGER
-    // than every existing tombstone's, so skipping this would
-    // resurrect deleted rows. It is free: these rows are being
-    // rewritten anyway, and the anti-join side is key-only.
-    // small runs may straddle a schema evolution/widening/rename:
-    // translate each run's physical names, align by name with
-    // null-fill (same as the read side)
-    val events = meta.renames
-    val headSchema = logicalHeadSchemaOf(spark, meta)
-    val merged0 = small.toSeq.sorted.map { d =>
-      translateDir(readDir(spark, d), dirSeq(d), events, current)
-        .withColumn("__seq", lit(dirSeq(d)))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-    val merged1 = (if (delRows.isEmpty) merged0.drop("__seq")
-                   else applyDeletes(spark, merged0, delRows, events,
-                     current))
+    // the small runs read like the table does: straddled evolutions,
+    // widenings and renames resolve to the head's logical columns at
+    // their widest types (the compacted dir becomes the newest schema
+    // authority, so it must carry every column), and the live
+    // tombstones are APPLIED — the compacted copy gets seq = the new
+    // version, larger than every existing tombstone's, so skipping
+    // them would resurrect deleted rows.
+    val merged = readManifestShards(spark, meta, meta.dataRows
+      .filter(r => small(r.getAs[String]("data_dir"))).map(scanRow))
       .drop("shard")
-    // the compacted dir becomes the newest schema authority: it must
-    // carry EVERY logical column at its current widest type, even
-    // when all the folded runs predate an evolution or widening —
-    // otherwise the fold silently demotes the table schema
-    val merged = {
-      import org.apache.spark.sql.functions.col
-      merged1.select(headSchema.fields.toSeq.map(f =>
-        (if (merged1.columns.contains(f.name)) col(f.name)
-         else lit(null)).cast(f.dataType).as(f.name)): _*)
-    }
     // every row of every small run tombstoned: publish a manifest-only
     // version that simply drops the small dirs (conflict aborts — same
     // contract as the data-carrying path). The emptiness falls out of
@@ -3342,15 +3151,6 @@ object Sources {
         col(c).as(logicalNameOf(c, dirSeq, events, readV))): _*)
     }
 
-  /** True iff translating any of these dirs at `readV` would change a
-    * name — the gate that keeps rename-free reads (and reads of
-    * post-rename-only dirs) on the fast multi-leaf path. */
-  private def renameRelevant(events: Seq[(Long, String, String)],
-                             dirSeqs: Iterable[Long],
-                             readV: Long): Boolean =
-    events.nonEmpty && dirSeqs.exists(s =>
-      events.exists(e => e._1 > s && e._1 <= readV))
-
   /** Row-level UPDATE by predicate: one atomic snapshot that
     * tombstones every matched key AND appends the matched rows with
     * `set` applied — the GDPR-redaction / label-fix shape. Cost is
@@ -3467,17 +3267,19 @@ object Sources {
   }
 
   /** Commit `cur` — a read of the table at `meta.version` — as one
-    * rewrite snapshot derived from exactly that version. The rewritten
-    * manifest references no old dir, but the commit LOG must survive
-    * it: every committed batch id rides along as a zero-row ledger
-    * row, or a post-rewrite foreachBatch replay would re-apply its
-    * batch (see [[ledgerRows]]). */
+    * rewrite snapshot derived from exactly that version: a commit that
+    * lands between the read and the publish aborts the rewrite, with
+    * or without a ledger. The rewritten manifest references no old
+    * dir, but the commit LOG must survive it: every committed batch id
+    * rides along as a zero-row ledger row, or a post-rewrite
+    * foreachBatch replay would re-apply its batch (see
+    * [[ledgerRows]]). */
   private def commitRewrite(meta: ShardedMeta, cur: DataFrame, id: Column,
                             orderCol: Column, numShards: Int,
                             statsCols: Seq[String]): Long =
     writeSnapshot(cur, id, orderCol, meta.path, numShards, statsCols,
-      parent = ledgerRows(meta.batchIds.toSeq.sorted)
-        .map(l => FixedParent(l, meta.version)).getOrElse(NoParent),
+      parent = FixedParent(ledgerRows(meta.batchIds.toSeq.sorted)
+        .getOrElse(LocalManifest(new StructType(), Nil)), meta.version),
       batchId = -1L, op = "rewrite", meta = Some(meta))
 
   /** INCREMENTAL (CDC) read, insert side: the rows added to the table

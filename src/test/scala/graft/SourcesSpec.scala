@@ -29,6 +29,20 @@ class SourcesSpec extends AnyFunSuite {
     s"$path/${hits.head}"
   }
 
+  /** The parquet scans a read of the table at `path` plans over its
+    * DATA dirs (tombstone scans excluded) — one per rename era, at any
+    * dir count. */
+  private def dataScans(df: org.apache.spark.sql.DataFrame,
+                        path: String): Int = {
+    object Plan extends org.apache.spark.sql.execution.adaptive
+      .AdaptiveSparkPlanHelper
+    Plan.collect(df.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+          if s.relation.location.rootPaths.exists(
+            _.toUri.getPath.startsWith(s"$path/data-v")) => s
+    }.length
+  }
+
   test("csv round-trip with explicit schema") {
     val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
     Sources.writeCsv(nation, dir)
@@ -1670,18 +1684,18 @@ class SourcesSpec extends AnyFunSuite {
     val want = (0L until 1200L).filterNot(k => k % 7 == 0 && k < 700)
       .map(k => (k, s"d$k", if (k < 600) -1L else k % 5)).toSet
     assert(got == want)
-    // shard column survives the fast path with its usual type
+    // shard column survives the scan with its usual type
     assert(Sources.readShardedTable(spark, path).schema("shard")
       .dataType == org.apache.spark.sql.types.IntegerType)
-    // manifest pruning composes with the fast path
+    // manifest pruning composes with the scan
     val pr = Sources.readShardedTable(spark, path,
       preds = Seq(("doc_id", 0L, 299L)))
     assert(pr.inputFiles.length <
       Sources.readShardedTable(spark, path).inputFiles.length)
     assert(pr.filter(col("doc_id") <= 299).count() ==
       (0L until 300L).count(k => !(k % 7 == 0)))
-    // a pinned mid-chain version reads through the union path (few
-    // dirs) and agrees on the shared prefix
+    // a pinned mid-chain version (few dirs) reads through the same
+    // scan and agrees on the shared prefix
     assert(Sources.readShardedTable(spark, path, version = Some(5L))
       .count() == 150L)
     Sources.dropShardedTable(spark, path)
@@ -1872,9 +1886,9 @@ class SourcesSpec extends AnyFunSuite {
       batch(100000, 10).withColumn("lang", lit("en")),
       col("doc_id"), col("doc_id"), path, 1, Seq("doc_id"),
       allowNewColumns = true)
-    // prune to the 34 pre-evolution dirs (>= fast-path threshold):
-    // the merged leaf schema lacks `lang`; the head schema has it —
-    // the read must null-fill, not throw
+    // prune to the 34 pre-evolution dirs: none of their files has
+    // `lang`; the head schema has it — the read must null-fill, not
+    // throw
     val pr = Sources.readShardedTable(spark, path,
       preds = Seq(("doc_id", 0L, 339L)))
     assert(pr.schema.fieldNames.contains("lang"))
@@ -2200,8 +2214,8 @@ class SourcesSpec extends AnyFunSuite {
     Sources.dropShardedTable(spark, path)
   }
 
-  test("RENAME on a many-dir table: the read leaves the fast path " +
-       "and stays correct") {
+  test("RENAME on a many-dir table: the read splits into two rename " +
+       "eras and stays correct") {
     import org.apache.spark.sql.functions._
     val path = java.nio.file.Files
       .createTempDirectory("graft_shrenfast").toString
@@ -2496,7 +2510,7 @@ class SourcesSpec extends AnyFunSuite {
     val want = (0L until 680L).filterNot(k => k % 7 == 0 && k < 70)
       .map(k => (k, s"s${k % 2}", s"d$k")).toSet
     assert(got == want)
-    // partition pruning still holds on the fast path
+    // partition pruning still holds on the many-dir scan
     val pr = Sources.readShardedTableWhere(spark, path,
       col("src") === "s1")
     assert(pr.inputFiles.filter(_.contains("/data-v"))
@@ -2899,9 +2913,9 @@ class SourcesSpec extends AnyFunSuite {
     Sources.dropShardedTable(spark, path)
   }
 
-  test("fast explicit read under an ADVERSARIAL root (an enclosing " +
-       "directory named like a data dir) keys the partition join " +
-       "from the path tail — full rows, fast path taken") {
+  test("the read under an ADVERSARIAL root (an enclosing directory " +
+       "named like a data dir) keys the partition join from the path " +
+       "tail — full rows, one scan at 1, 3 and 36 dirs") {
     import org.apache.spark.sql.functions._
     // the table lives under .../data-v2-archive/tbl: a first-match
     // regex on '/(data|del)-v<digits>.../' binds the OUTER segment
@@ -2913,52 +2927,62 @@ class SourcesSpec extends AnyFunSuite {
       .select((col("id") + lo).as("doc_id"),
         concat(lit("s"), pmod(col("id") + lo, lit(3))).as("src"),
         concat(lit("d"), col("id") + lo).as("t"))
+    def check(nDirs: Int): Unit = {
+      val df = Sources.readShardedTable(spark, path)
+      val got = df.select("doc_id", "src").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSet
+      assert(got == (0L until 30L * nDirs)
+        .map(k => (k, s"s${k % 3}")).toSet)
+      // one scan whatever the dir count (no rename, one era)
+      assert(dataScans(df, path) == 1, s"$nDirs dirs")
+    }
     Sources.writeShardedTable(batch(0, 30), col("doc_id"),
       col("doc_id"), path, 1, Seq("doc_id"), Seq("src"))
+    check(1)
     (1 until 36).foreach { i =>
       Sources.appendShardedTable(batch(30L * i, 30), col("doc_id"),
         col("doc_id"), path, 1, Seq("doc_id"))
+      if (i == 2) check(3)
     }
-    val fastBefore = Sources.FastReadStats.fastHits.get()
-    val fbBefore = Sources.FastReadStats.fallbacks.get()
-    val got = Sources.readShardedTable(spark, path)
-      .select("doc_id", "src").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(got == (0L until 1080L).map(k => (k, s"s${k % 3}")).toSet)
-    // and it really WAS the explicit fast path — a silent demotion
-    // to the union backstop would hide the regression
-    assert(Sources.FastReadStats.fastHits.get() == fastBefore + 1)
-    assert(Sources.FastReadStats.fallbacks.get() == fbBefore)
+    check(36)
     Sources.dropShardedTable(spark, path)
   }
 
-  test("fast-path pin: the partitioned + renamed + tombstoned " +
-       "many-dir shapes PLAN through the explicit fast read (zero " +
-       "fallbacks), not a silent demotion to the union path") {
+  test("scan-shape pin: the partitioned + renamed + tombstoned " +
+       "shapes plan one data scan per rename era at 1, 3 and 35 dirs") {
     import org.apache.spark.sql.functions._
     val path = java.nio.file.Files
       .createTempDirectory("graft_fastpin").toString
-    def batch(lo: Long, n: Long) = spark.range(n)
+    def batch(lo: Long, n: Long, c: String) = spark.range(n)
       .select((col("id") + lo).as("doc_id"),
         concat(lit("s"), pmod(col("id") + lo, lit(2))).as("src"),
-        concat(lit("d"), col("id") + lo).as("t"))
-    Sources.writeShardedTable(batch(0, 20), col("doc_id"),
-      col("doc_id"), path, 1, Seq("doc_id"), Seq("src"))
-    (1 until 34).foreach { i =>
-      Sources.appendShardedTable(batch(20L * i, 20), col("doc_id"),
-        col("doc_id"), path, 1, Seq("doc_id"))
+        concat(lit("d"), col("id") + lo).as(c))
+    def check(n: Long, c: String, dead: Long => Boolean,
+              eras: Int): Unit = {
+      val df = Sources.readShardedTable(spark, path)
+      assert(df.columns.contains(c))
+      assert(df.count() == (0L until n).count(k => !dead(k)))
+      assert(dataScans(df, path) == eras, s"$n rows")
     }
+    Sources.writeShardedTable(batch(0, 20, "t"), col("doc_id"),
+      col("doc_id"), path, 1, Seq("doc_id"), Seq("src"))
+    Sources.deleteFromShardedTable(spark, path, "doc_id",
+      spark.range(2).select((col("id") * 11).as("doc_id")))
+    check(20, "t", k => k % 11 == 0 && k < 22, eras = 1)
+    // a rename between dirs 2 and 3 splits the scan in two eras
+    Sources.appendShardedTable(batch(20, 20, "t"), col("doc_id"),
+      col("doc_id"), path, 1, Seq("doc_id"))
     Sources.renameShardedTableColumn(spark, path, "t", "txt")
+    Sources.appendShardedTable(batch(40, 20, "txt"), col("doc_id"),
+      col("doc_id"), path, 1, Seq("doc_id"))
+    check(60, "txt", k => k % 11 == 0 && k < 22, eras = 2)
+    (3 until 35).foreach { i =>
+      Sources.appendShardedTable(batch(20L * i, 20, "txt"),
+        col("doc_id"), col("doc_id"), path, 1, Seq("doc_id"))
+    }
     Sources.deleteFromShardedTable(spark, path, "doc_id",
       spark.range(20).select((col("id") * 11).as("doc_id")))
-    val fastBefore = Sources.FastReadStats.fastHits.get()
-    val fbBefore = Sources.FastReadStats.fallbacks.get()
-    val df = Sources.readShardedTable(spark, path)
-    assert(df.columns.contains("txt"))
-    assert(df.count() ==
-      (0L until 680L).count(k => !(k % 11 == 0 && k < 220)))
-    assert(Sources.FastReadStats.fastHits.get() > fastBefore)
-    assert(Sources.FastReadStats.fallbacks.get() == fbBefore)
+    check(700, "txt", k => k % 11 == 0 && k < 220, eras = 2)
     Sources.dropShardedTable(spark, path)
   }
 
@@ -3547,8 +3571,8 @@ class SourcesSpec extends AnyFunSuite {
     Sources.dropShardedTable(spark, path)
   }
 
-  test("partition values that need Hive escaping read back on the " +
-       "fast multi-dir path (32+ dirs): full, pruned, DSv2, audit") {
+  test("partition values that need Hive escaping read back at 1, 3 " +
+       "and 32 dirs in one scan: full, pruned, DSv2, audit") {
     import org.apache.spark.sql.functions._
     val path = java.nio.file.Files
       .createTempDirectory("graft_escfast").toString
@@ -3557,27 +3581,229 @@ class SourcesSpec extends AnyFunSuite {
       when(col("id") % 2 === 0, lit("a=b c"))
         .otherwise(lit("x:y%z")).as("src"),
       concat(lit("d"), col("id") + lo).as("t"))
-    Sources.writeShardedTable(batch(0), col("doc_id"), col("doc_id"),
-      path, 1, Seq("doc_id"), partitionCols = Seq("src"))
-    (1 until 32).foreach { i =>
-      Sources.appendShardedTable(batch(4L * i), col("doc_id"),
-        col("doc_id"), path, 1, Seq("doc_id"))
-    }
-    assert(new java.io.File(path).list()
-      .count(_.startsWith("data-v")) == 32)
-    val want = (0L until 128L).map(i =>
-      (i, if (i % 2 == 0) "a=b c" else "x:y%z", s"d$i")).toSet
     def got(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id", "src", "t").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-    val fastBefore = Sources.FastReadStats.fastHits.get()
-    assert(got(Sources.readShardedTable(spark, path)) == want)
-    assert(Sources.FastReadStats.fastHits.get() > fastBefore)
-    assert(got(Sources.readShardedTable(spark, path,
-      partPreds = Seq(("src", "x:y%z")))) ==
-      want.filter(_._2 == "x:y%z"))
-    assert(got(spark.read.format("graft-sharded").load(path)) == want)
-    assert(Sources.auditShardedTable(spark, path).count() == 0L)
+    def check(nDirs: Int): Unit = {
+      val want = (0L until 4L * nDirs).map(i =>
+        (i, if (i % 2 == 0) "a=b c" else "x:y%z", s"d$i")).toSet
+      val df = Sources.readShardedTable(spark, path)
+      assert(got(df) == want)
+      assert(dataScans(df, path) == 1, s"$nDirs dirs")
+      assert(got(Sources.readShardedTable(spark, path,
+        partPreds = Seq(("src", "x:y%z")))) ==
+        want.filter(_._2 == "x:y%z"))
+      assert(got(spark.read.format("graft-sharded").load(path)) == want)
+      assert(Sources.auditShardedTable(spark, path).count() == 0L)
+    }
+    Sources.writeShardedTable(batch(0), col("doc_id"), col("doc_id"),
+      path, 1, Seq("doc_id"), partitionCols = Seq("src"))
+    check(1)
+    (1 until 32).foreach { i =>
+      Sources.appendShardedTable(batch(4L * i), col("doc_id"),
+        col("doc_id"), path, 1, Seq("doc_id"))
+      if (i == 2) check(3)
+    }
+    assert(new java.io.File(path).list()
+      .count(_.startsWith("data-v")) == 32)
+    check(32)
     Sources.dropShardedTable(spark, path)
   }
+
+  test("a STRING partition column whose newer dirs hold only " +
+       "numeric-looking values reads as STRING at 2 and 33 dirs") {
+    import org.apache.spark.sql.functions._
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_partnum").toString
+    def batch(lo: Long, vals: (String, String)) = spark.range(4).select(
+      (col("id") + lo).as("doc_id"),
+      when(col("id") % 2 === 0, lit(vals._1))
+        .otherwise(lit(vals._2)).as("src"))
+    def src(k: Long) =
+      if (k < 4) (if (k % 2 == 0) "a" else "b")
+      else (if (k % 2 == 0) "1" else "2")
+    def check(nDirs: Int): Unit = {
+      val df = Sources.readShardedTable(spark, path)
+      assert(df.schema("src").dataType ==
+        org.apache.spark.sql.types.StringType)
+      assert(df.select("doc_id", "src").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSet ==
+        (0L until 4L * nDirs).map(k => (k, src(k))).toSet)
+      assert(Sources.auditShardedTable(spark, path).count() == 0L)
+    }
+    Sources.writeShardedTable(batch(0, ("a", "b")), col("doc_id"),
+      col("doc_id"), path, 1, Seq("doc_id"), partitionCols = Seq("src"))
+    Sources.appendShardedTable(batch(4, ("1", "2")), col("doc_id"),
+      col("doc_id"), path, 1, Seq("doc_id"))
+    check(2)
+    (2 until 33).foreach { i =>
+      Sources.appendShardedTable(batch(4L * i, ("1", "2")),
+        col("doc_id"), col("doc_id"), path, 1, Seq("doc_id"))
+    }
+    check(33)
+    Sources.dropShardedTable(spark, path)
+  }
+
+  test("a rewrite of a table without batch ids aborts when a commit " +
+       "lands between its read and its publish — the commit is kept") {
+    import org.apache.spark.sql.functions._
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_rwrace").toString
+    def batch(lo: Long, n: Long) = spark.range(n).select(
+      (col("id") + lo).as("doc_id"), concat(lit("d"), col("id") + lo)
+        .as("t"))
+    Sources.writeShardedTable(batch(0, 40), col("doc_id"), col("doc_id"),
+      path, 2, Seq("doc_id"))
+    RewriteRace.arm(() => Sources.appendShardedTable(batch(1000, 5),
+      col("doc_id"), col("doc_id"), path, 1, Seq("doc_id")))
+    // the order key is analyzed after the rewrite resolved and read
+    // its snapshot: its first type query runs the append to completion
+    val err = intercept[IllegalStateException](
+      Sources.rewriteShardedTable(spark, path, col("doc_id"),
+        org.apache.spark.sql.graftbridge.ColumnBridge.column(
+          RaceKey(org.apache.spark.sql.graftbridge.ColumnBridge
+            .expr(col("doc_id")))), 2, Seq("doc_id")))
+    assert(RewriteRace.fired.get())
+    assert(err.getMessage.contains("concurrent commit landed"),
+      err.getMessage)
+    assert(Sources.readShardedTable(spark, path).select("doc_id")
+      .collect().map(_.getLong(0)).sorted.toSeq ==
+      ((0L until 40L) ++ (1000L until 1005L)))
+    assert(Sources.auditShardedTable(spark, path)
+      .filter(col("check") =!= "orphan_dir").count() == 0L)
+    Sources.dropShardedTable(spark, path)
+  }
+
+  test("small-table read schema: names, types, order and nullability " +
+       "of plain, partitioned, evolved, widened, renamed and " +
+       "tombstoned tables of 1-3 dirs") {
+    import org.apache.spark.sql.functions._
+    def base(lo: Long, n: Long) = spark.range(n).select(
+      (col("id") + lo).as("doc_id"),
+      concat(lit("s"), pmod(col("id") + lo, lit(2))).as("src"),
+      concat(lit("d"), col("id") + lo).as("t"))
+    def keys(ks: Long*) =
+      spark.createDataFrame(ks.map(Tuple1(_))).toDF("doc_id")
+    def app(path: String, df: org.apache.spark.sql.DataFrame,
+            evolve: Boolean = false): Unit =
+      Sources.appendShardedTable(df, col("doc_id"), col("doc_id"), path,
+        2, Seq("doc_id"), allowNewColumns = evolve)
+    def write(path: String, df: org.apache.spark.sql.DataFrame,
+              parts: Seq[String] = Nil): Unit =
+      Sources.writeShardedTable(df, col("doc_id"), col("doc_id"), path,
+        2, Seq("doc_id"), parts)
+    val noSrc = (lo: Long) => base(lo, 6).drop("src")
+    // each kind: the steps that take it from 1 to 3 data dirs
+    val kinds: Seq[(String, Seq[String => Unit])] = Seq(
+      "plain" -> Seq(p => write(p, noSrc(0)), p => app(p, noSrc(10)),
+        p => app(p, noSrc(20))),
+      "partitioned" -> Seq(p => write(p, base(0, 6), Seq("src")),
+        p => app(p, base(10, 6)), p => app(p, base(20, 6))),
+      "evolved" -> Seq(p => write(p, noSrc(0)),
+        p => app(p, noSrc(10).withColumn("v", col("doc_id") % 3), true),
+        p => app(p, noSrc(20).withColumn("v", col("doc_id") % 3))),
+      "widened" -> Seq(
+        p => write(p, noSrc(0).withColumn("score",
+          col("doc_id").cast("int"))),
+        p => app(p, noSrc(10).withColumn("score", col("doc_id") + 1L)),
+        p => app(p, noSrc(20).withColumn("score", col("doc_id") + 1L))),
+      "renamed" -> Seq(
+        p => { write(p, noSrc(0))
+               Sources.renameShardedTableColumn(spark, p, "t", "txt") },
+        p => app(p, noSrc(10).withColumnRenamed("t", "txt")),
+        p => app(p, noSrc(20).withColumnRenamed("t", "txt"))),
+      "tombstoned" -> Seq(
+        p => { write(p, noSrc(0))
+               Sources.deleteFromShardedTable(spark, p, "doc_id",
+                 keys(1L, 2L)) },
+        p => app(p, noSrc(10)),
+        p => { app(p, noSrc(20))
+               Sources.deleteFromShardedTable(spark, p, "doc_id",
+                 keys(11L, 21L)) }))
+    val got = kinds.flatMap { case (kind, steps) =>
+      val path = java.nio.file.Files
+        .createTempDirectory(s"graft_rschema_$kind").toString
+      val out = steps.zipWithIndex.map { case (step, i) =>
+        step(path)
+        s"$kind/${i + 1}" -> Sources.readShardedTable(spark, path)
+          .schema.fields.map(f =>
+            s"${f.name}:${f.dataType.simpleString}:${f.nullable}")
+          .mkString(",")
+      }
+      Sources.dropShardedTable(spark, path)
+      out
+    }
+    // the schemas these reads returned before the read had one scan
+    // shape (captured from the per-dir union those sizes took)
+    val want = Seq(
+      "plain/1" ->
+        "doc_id:bigint:true,t:string:true,shard:int:true",
+      "plain/2" ->
+        "doc_id:bigint:true,t:string:true,shard:int:true",
+      "plain/3" ->
+        "doc_id:bigint:true,t:string:true,shard:int:true",
+      "partitioned/1" ->
+        "doc_id:bigint:true,t:string:true,src:string:true,shard:int:true",
+      "partitioned/2" ->
+        "doc_id:bigint:true,t:string:true,src:string:true,shard:int:true",
+      "partitioned/3" ->
+        "doc_id:bigint:true,t:string:true,src:string:true,shard:int:true",
+      "evolved/1" ->
+        "doc_id:bigint:true,t:string:true,shard:int:true",
+      "evolved/2" ->
+        "doc_id:bigint:true,t:string:true,v:bigint:true,shard:int:true",
+      "evolved/3" ->
+        "doc_id:bigint:true,t:string:true,v:bigint:true,shard:int:true",
+      "widened/1" ->
+        "doc_id:bigint:true,t:string:true,score:int:true,shard:int:true",
+      "widened/2" ->
+        "doc_id:bigint:true,t:string:true,score:bigint:true,shard:int:true",
+      "widened/3" ->
+        "doc_id:bigint:true,t:string:true,score:bigint:true,shard:int:true",
+      "renamed/1" ->
+        "doc_id:bigint:true,txt:string:true,shard:int:true",
+      "renamed/2" ->
+        "doc_id:bigint:true,txt:string:true,shard:int:true",
+      "renamed/3" ->
+        "doc_id:bigint:true,txt:string:true,shard:int:true",
+      "tombstoned/1" ->
+        "doc_id:bigint:true,t:string:true,shard:int:true",
+      "tombstoned/2" ->
+        "doc_id:bigint:true,t:string:true,shard:int:true",
+      "tombstoned/3" ->
+        "doc_id:bigint:true,t:string:true,shard:int:true")
+    assert(got == want)
+  }
+}
+
+/** A one-shot hook for the rewrite race spec: the first call of [[fire]]
+  * runs the armed commit on its own thread and waits for it. */
+object RewriteRace {
+  val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+  @volatile private var commit: () => Any = () => ()
+  def arm(c: () => Any): Unit = { commit = c; fired.set(false) }
+  def fire(): Unit =
+    if (fired.compareAndSet(false, true)) {
+      val t = new Thread(() => { commit(); () })
+      t.start(); t.join()
+    }
+}
+
+/** An order key that is its child, and that fires [[RewriteRace]] the
+  * first time the analyzer asks its type — on the committing thread,
+  * after the commit resolved and read its snapshot, before any job of
+  * the commit runs. */
+final case class RaceKey(
+    child: org.apache.spark.sql.catalyst.expressions.Expression)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
+    with org.apache.spark.sql.catalyst.expressions.codegen
+      .CodegenFallback {
+  override def dataType: org.apache.spark.sql.types.DataType = {
+    if (child.resolved) RewriteRace.fire()
+    child.dataType
+  }
+  override protected def nullSafeEval(input: Any): Any = input
+  override protected def withNewChildInternal(
+      c: org.apache.spark.sql.catalyst.expressions.Expression): RaceKey =
+    copy(child = c)
 }
