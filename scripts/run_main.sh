@@ -1,5 +1,6 @@
 #!/bin/bash
-# Run a graft main (graft.Verify / graft.Bench / probes) outside sbt.
+# Run a graft main (graft.Verify / graft.Bench / graft.tools.ScaleProbe)
+# outside sbt.
 #   scripts/run_main.sh [-cp CLASSDIR] graft.Verify <args...>
 # CLASSDIR defaults to target/scala-2.13/classes; pass a snapshot dir
 # to keep a long job immune to concurrent recompiles. The resources

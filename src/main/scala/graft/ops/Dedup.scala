@@ -296,8 +296,8 @@ object Dedup {
     // cut's own materialization job ([[graft.Checkpoints.cutCounted]])
     // — small corpora get the broadcast back, large ones keep the
     // static-broadcast veto, and the gate adds zero extra jobs
-    val g = PairJoins.gate(PairJoins.fits(
-      nFps, PairJoins.NarrowRowBytes, df.sparkSession)) _
+    val g = PairJoins.gate(
+      PairJoins.fits(nFps, PairJoins.NarrowRowBytes)) _
     val freq = fps.groupBy("fp").count().filter(col("count") <= maxDocFreq)
     // gate the doc-freq join too: at corpus scale the veto is free —
     // the merge join partitions `kept` on fp, exactly what the
@@ -414,15 +414,14 @@ object Dedup {
     // the materialization jobs ([[graft.Checkpoints.cutCounted]]).
     val (lIx, nL) = leftIndex.cutCounted()
     val (rIx, nR) = rightIndex.cutCounted()
-    val spark = leftIndex.sparkSession
     val gBandL = PairJoins.gate(
-      PairJoins.fits(nL * bands, PairJoins.NarrowRowBytes, spark)) _
+      PairJoins.fits(nL * bands, PairJoins.NarrowRowBytes)) _
     val gBandR = PairJoins.gate(
-      PairJoins.fits(nR * bands, PairJoins.NarrowRowBytes, spark)) _
+      PairJoins.fits(nR * bands, PairJoins.NarrowRowBytes)) _
     val gArrL = PairJoins.gate(
-      PairJoins.fits(nL, PairJoins.ArrayRowBytes, spark)) _
+      PairJoins.fits(nL, PairJoins.ArrayRowBytes)) _
     val gArrR = PairJoins.gate(
-      PairJoins.fits(nR, PairJoins.ArrayRowBytes, spark)) _
+      PairJoins.fits(nR, PairJoins.ArrayRowBytes)) _
     def banded(ix: DataFrame) = ix
       .select(col("id"), explode(minhashBands(col("sig"), bands, r))
         .as("bk"))
@@ -1135,13 +1134,12 @@ object Dedup {
     // ride their cuts' materialization jobs (cutCounted — the gate
     // adds zero jobs). Small corpora broadcast again, large ones keep
     // the veto; array-bearing frames (ts) use the wide per-row bound.
-    val spark = df.sparkSession
     val gToks = PairJoins.gate(
-      PairJoins.fits(nToks, PairJoins.ArrayRowBytes, spark)) _
+      PairJoins.fits(nToks, PairJoins.ArrayRowBytes)) _
     val gSets = PairJoins.gate(
-      PairJoins.fits(nSets, PairJoins.ArrayRowBytes, spark)) _
+      PairJoins.fits(nSets, PairJoins.ArrayRowBytes)) _
     val gMap = PairJoins.gate(
-      PairJoins.fits(nSets, PairJoins.NarrowRowBytes, spark)) _
+      PairJoins.fits(nSets, PairJoins.NarrowRowBytes)) _
     // doc → set-id map (the array equi-join key is exact — both sides
     // sorted+distinct)
     val docsMap = gToks(toks)
@@ -1173,7 +1171,7 @@ object Dedup {
       s"($tauNum * (na + nb) + $tauNum + $tauDen - 1) div " +
       s"${tauNum + tauDen}")
     val gPrefix = PairJoins.gate(
-      PairJoins.fits(nPrefix, PairJoins.NarrowRowBytes, spark)) _
+      PairJoins.fits(nPrefix, PairJoins.NarrowRowBytes)) _
     val cand = gPrefix(prefix.as("a"))
       .join(gPrefix(prefix.as("b")),  // see jaccardPairs + PairJoins
             col("a.tk") === col("b.tk") && col("a.sid") < col("b.sid") &&

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** ADAPTIVE gate for the pair-op merge-hint discipline (rationale at
   * [[Dedup.jaccardPairs]]): Catalyst's STATIC size estimate for
@@ -17,14 +17,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ([[graft.Checkpoints.cut]]) anyway, so an EXACT row count is one
   * cheap job over cached blocks. The call site multiplies by an
   * honest per-row byte bound (narrow fixed-width index rows vs rows
-  * carrying token-set arrays) and compares against a configurable
+  * carrying token-set arrays) and compares against a fixed
   * budget: under it, the frame is returned unhinted and the planner
   * is free to broadcast; at or over, the MERGE veto stays and
   * sort-merge spills. A corpus-sized side can never slip through —
   * the decision uses its true cardinality, not an estimate
   * (`PlanSpec` pins both directions).
   *
-  * The budget is per-side bytes, default 32 MB: comfortably inside
+  * The budget is 32 MB per side: comfortably inside
   * executor broadcast budgets, and far below the 8 GiB-driver OOM
   * class the decade probe hit (a 500k-doc token-set frame at the
   * 1 KiB/row bound is ~500 MB — 15x over budget, veto holds).
@@ -32,10 +32,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 private[graft] object PairJoins {
 
   /** Per-side byte budget under which a runtime-counted pair-join
-    * side may broadcast. Set to 0 to force MERGE everywhere (the
-    * pre-gate blanket behavior). */
-  val MaxBroadcastBytesKey = "spark.graft.pairJoin.maxBroadcastBytes"
-  val DefaultMaxBroadcastBytes: Long = 32L * 1024 * 1024
+    * side may broadcast. */
+  val MaxBroadcastBytes: Long = 32L * 1024 * 1024
 
   /** Honest per-row byte bounds for the two pair-index row shapes:
     * fixed-width rows (ids, band keys, prefix ranks, fingerprints)
@@ -45,14 +43,9 @@ private[graft] object PairJoins {
   val NarrowRowBytes = 64L
   val ArrayRowBytes = 1024L
 
-  def budget(spark: SparkSession): Long =
-    spark.conf
-      .get(MaxBroadcastBytesKey, DefaultMaxBroadcastBytes.toString)
-      .toLong
-
   /** True when `rows` at `bytesPerRow` fits the broadcast budget. */
-  def fits(rows: Long, bytesPerRow: Long, spark: SparkSession): Boolean =
-    rows * bytesPerRow <= budget(spark)
+  def fits(rows: Long, bytesPerRow: Long): Boolean =
+    rows * bytesPerRow <= MaxBroadcastBytes
 
   /** Hint a pair-join side: small (runtime-proven) frames pass
     * through unhinted so the planner may broadcast them; large ones

@@ -1,38 +1,38 @@
 package graft.tools
 
 import graft.Checkpoints.CheckpointOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.{ConditionalPutClaimStore, EmulatedObjectStore,
+  Sources}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Dev-only scaling probe: replicate the bench corpus 10x (50k docs,
-  * every doc in a 10-copy near-dup clique — a worst-case duplication
-  * profile) and time the dedup operators. Checks the knee of the curve:
-  * candidate generation must scale with true-pair count, not corpus^2. */
+/** Dev-only probe of the sharded table at volume and under concurrent
+  * writers. Three modes:
+  *  - `table [rows=N]`: a write / merge / update / delete-where /
+  *    compact / read chain over N rows (default 6M). The claims under
+  *    test: commit cost tracks the BATCH (merge of 2% ≪ write of
+  *    100%), tombstone ops never rewrite data, and the chain
+  *    parallelizes (compare SPARK_GRAFT_CPUS=8 with 32);
+  *  - `race`: 1, 2, 4 and 8 writers, 5 appends each, into one table
+  *    over the default [[Sources.AtomicCreateClaimStore]];
+  *  - `race-objstore`: the same writer matrix over the conditional-put
+  *    [[ConditionalPutClaimStore]] with injected faults — ~1 in 5 puts
+  *    loses its request (no effect), ~1 in 5 commits but loses its
+  *    response (the ambiguous case the token protocol exists for).
+  *
+  * In both race modes every batch must land exactly once: contiguous
+  * versions, `rows` equal to `want`, a clean audit. Usage:
+  *   SPARK_GRAFT_CPUS=4 scripts/run_main.sh graft.tools.ScaleProbe \
+  *     table rows=200000 */
 object ScaleProbe {
 
-  /** The decade corpus: 500k docs, 50k 10-copy near-dup cliques of 60
-    * pseudo-random tokens from a 1M-token space; one per-copy tail
-    * token makes copies near- (J ~ 0.97), not byte-identical. */
-  private def decadeDocs(spark: SparkSession): DataFrame =
-    spark.range(500000L).select(col("id").as("doc_id"),
-        concat(
-          concat_ws(" ", transform(sequence(lit(0), lit(59)), j =>
-            concat(lit("w"), pmod(hash(expr("id div 10"), j),
-              lit(1000000L))))),
-          lit(" t"), pmod(col("id"), lit(10))).as("text"))
-      .repartition(64)
-      .cut()
-
-
-  /** Per-probe stage-metric accounting: local[32] wall time hides
-    * network cost entirely, and two plans with equal wall time can
-    * differ 10x in shuffle volume — the thing that actually ranks
-    * them on a 1000-executor cluster. Every probe row therefore also
-    * reports shuffle write/read bytes and spill (memory+disk),
-    * accumulated from SparkListener stage metrics between probe start
-    * and end (listener events are async: we sleep briefly after the
-    * action so the final stages land — a dev probe tolerance, not a
-    * production pattern). */
+  /** Per-op stage-metric accounting: two plans with equal wall time can
+    * differ 10x in shuffle volume, the thing that ranks them on a
+    * cluster. So every op row also reports its job count, shuffle
+    * write/read bytes and spill (memory+disk), accumulated from
+    * SparkListener events between op start and end (listener events
+    * are async: we sleep briefly after the action so the final stages
+    * land — a dev probe tolerance, not a production pattern). */
   private def timed(spark: SparkSession, label: String)
                    (f: => Long): Unit = {
     val sw = new java.util.concurrent.atomic.AtomicLong
@@ -69,9 +69,109 @@ object ScaleProbe {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
+  private def tablePath(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
+
+  private def dropTable(spark: SparkSession, path: String): Unit = {
+    Sources.dropShardedTable(spark, path)
+    new java.io.File(path).getParentFile.delete(); ()
+  }
+
+  private def tableChain(spark: SparkSession, cpus: String,
+                         n: Long): Unit = {
+    val path = tablePath("graft_scale_tbl_")
+    val docs = spark.range(n).select(col("id").as("doc_id"),
+        concat(lit("s"), pmod(col("id"), lit(17))).as("source"),
+        (pmod(hash(col("id")), lit(20000L)) + lit(20000L))
+          .as("n_chars"))
+      .repartition(64).cut()
+    println(s"[scale] table chain over $n rows, cpus=$cpus")
+    timed(spark, s"write 100%") {
+      Sources.writeShardedTable(docs, col("doc_id"), col("doc_id"),
+        path, numShards = 64, statsCols = Seq("doc_id")); n
+    }
+    timed(spark, "merge 2%") {
+      Sources.mergeShardedTable(
+        docs.filter(col("doc_id") % 50 === 3)
+          .withColumn("n_chars", col("n_chars") + 100000L),
+        "doc_id", col("doc_id"), path, numShards = 8,
+        statsCols = Seq("doc_id"))
+    }
+    timed(spark, "update 1%") {
+      Sources.updateShardedTable(spark, path, "doc_id",
+        col("n_chars").between(20000, 20400),
+        Seq("n_chars" -> (col("n_chars") + 500000L)), col("doc_id"),
+        numShards = 8, statsCols = Seq("doc_id"))
+    }
+    timed(spark, "delete-where 2%") {
+      Sources.deleteWhereShardedTable(spark, path, "doc_id",
+        col("doc_id") % 53 === 7)
+    }
+    timed(spark, "compact small dirs") {
+      Sources.compactShardedTable(spark, path, col("doc_id"),
+        col("doc_id"), numShards = 8, statsCols = Seq("doc_id"),
+        smallDirRows = n / 4)
+    }
+    timed(spark, "read + agg") {
+      Sources.readShardedTable(spark, path)
+        .agg(count(lit(1)), sum(col("n_chars"))).head().getLong(0)
+    }
+    timed(spark, "pruned read 1%") {
+      Sources.readShardedTable(spark, path,
+          preds = Seq(("doc_id", 0L, n / 100)))
+        .filter(col("doc_id") <= n / 100)
+        .agg(count(lit(1))).head().getLong(0)
+    }
+    dropTable(spark, path)
+  }
+
+  /** N writers x 5 appends each into one table, over `store`. Data
+    * writes overlap and only the claim + publish serializes, so the
+    * wall should grow sublinearly in writers. */
+  private def raceMatrix(spark: SparkSession, mode: String,
+                         store: Sources.ClaimStore,
+                         faults: () => Long): Unit = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    def batch(w: Int, i: Int) = spark.range(1000)
+      .select((col("id") + 100000L * w + 1000L * i).as("doc_id"),
+        concat(lit("d"), col("id")).as("t"))
+    Sources.setClaimStore(store)
+    try for (writers <- Seq(1, 2, 4, 8)) {
+      val path = tablePath(s"graft_${mode.replace('-', '_')}_")
+      Sources.writeShardedTable(batch(99, 0), col("doc_id"),
+        col("doc_id"), path, 2, Seq("doc_id"))
+      val gate = new java.util.concurrent.CountDownLatch(1)
+      val fs = (0 until writers).map { w =>
+        Future {
+          gate.await()
+          (0 until 5).foreach { i =>
+            Sources.appendShardedTable(batch(w, i), col("doc_id"),
+              col("doc_id"), path, 2, Seq("doc_id"))
+          }
+        }
+      }
+      val t0 = System.nanoTime()
+      gate.countDown()
+      fs.foreach(f => Await.result(f, scala.concurrent.duration
+        .Duration(600, "s")))
+      val sec = (System.nanoTime() - t0) / 1e9
+      val vs = Sources.shardedVersions(spark, path)
+      val rows = Sources.readShardedTable(spark, path).count()
+      val audit = Sources.auditShardedTable(spark, path).count()
+      println(f"[scale] $mode writers=$writers " +
+        f"commits=${writers * 5} wall=$sec%6.1f s " +
+        f"(${sec / (writers * 5)}%.2f s/commit) " +
+        f"versions=${vs.size} contiguous=${vs == (1L to vs.size)} " +
+        f"rows=$rows (want ${1000 * (writers * 5 + 1)}) " +
+        f"audit=$audit faults=${faults()}")
+      dropTable(spark, path)
+    } finally Sources.setClaimStore(Sources.AtomicCreateClaimStore)
+  }
+
   def main(args: Array[String]): Unit = {
     // env-driven core count (default 32) so the same probe yields the
-    // 8c/32c core-ratio the write-path scale story needs (r14)
+    // 8c/32c core ratio of the scale story
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -80,1221 +180,30 @@ object ScaleProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    if (args.contains("table")) {
-      // r14: the write-path scale story, DEMONSTRATED (r13 argued it
-      // from job-count arithmetic): a sharded-table op chain at
-      // ~sf1-scale row volume. The claims under test — commit cost
-      // tracks the BATCH (merge of 2% ≪ write of 100%), tombstone ops
-      // never rewrite data, and the chain parallelizes (run with
-      // SPARK_GRAFT_CPUS=8 vs 32 for the core-ratio).
-      import graft.sources.Sources
-      val n = args.find(_.startsWith("rows="))
-        .map(_.stripPrefix("rows=").toLong).getOrElse(6000000L)
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_scale_tbl_").toString + "/t"
-      val docs = spark.range(n).select(col("id").as("doc_id"),
-          concat(lit("s"), pmod(col("id"), lit(17))).as("source"),
-          (pmod(hash(col("id")), lit(20000L)) + lit(20000L))
-            .as("n_chars"))
-        .repartition(64).cut()
-      println(s"[scale] table chain over $n rows, cpus=$cpus")
-      timed(spark, s"write 100%") {
-        Sources.writeShardedTable(docs, col("doc_id"), col("doc_id"),
-          path, numShards = 64, statsCols = Seq("doc_id")); n
-      }
-      timed(spark, "merge 2%") {
-        Sources.mergeShardedTable(
-          docs.filter(col("doc_id") % 50 === 3)
-            .withColumn("n_chars", col("n_chars") + 100000L),
-          "doc_id", col("doc_id"), path, numShards = 8,
-          statsCols = Seq("doc_id"))
-      }
-      timed(spark, "update 1%") {
-        Sources.updateShardedTable(spark, path, "doc_id",
-          col("n_chars").between(20000, 20400),
-          Seq("n_chars" -> (col("n_chars") + 500000L)), col("doc_id"),
-          numShards = 8, statsCols = Seq("doc_id"))
-      }
-      timed(spark, "delete-where 2%") {
-        Sources.deleteWhereShardedTable(spark, path, "doc_id",
-          col("doc_id") % 53 === 7)
-      }
-      timed(spark, "compact small dirs") {
-        Sources.compactShardedTable(spark, path, col("doc_id"),
-          col("doc_id"), numShards = 8, statsCols = Seq("doc_id"),
-          smallDirRows = n / 4)
-      }
-      timed(spark, "read + agg") {
-        Sources.readShardedTable(spark, path)
-          .agg(count(lit(1)), sum(col("n_chars"))).head().getLong(0)
-      }
-      timed(spark, "pruned read 1%") {
-        Sources.readShardedTable(spark, path,
-            preds = Seq(("doc_id", 0L, n / 100)))
-          .filter(col("doc_id") <= n / 100)
-          .agg(count(lit(1))).head().getLong(0)
-      }
-      Sources.dropShardedTable(spark, path)
-      spark.stop(); return
-    }
-
-    if (args.contains("phash")) {
-      // Hamming-banded pair discovery at growing corpus size with a
-      // FIXED per-item duplication rate: candidate volume must track
-      // the true-pair count (clusters of 4), not corpus² — the byte
-      // posting lists stay thin because random 32-bit halves spread
-      // over 256 values per band.
-      import spark.implicits._
-      for (n <- Seq(100000L, 400000L, 1000000L)) {
-        val fp = spark.range(n).select(col("id"),
-            pmod(hash(expr("id div 4")), lit(1L << 32))
-              .bitwiseXOR(pmod(col("id"), lit(4))).as("hi"),
-            pmod(hash(expr("(id div 4) * 7 + 1")), lit(1L << 32)).as("lo"))
-          .cut()
-        timed(spark, f"phash n=$n (expect ~${n / 4 * 6})") {
-          graft.ops.Dedup.hammingPairs64(
-            fp.toDF(), col("id"), col("hi"), col("lo"), maxDist = 7)
-            .count()
-        }
-      }
-      spark.stop(); return
-    }
-
-    if (args.contains("codec")) {
-      // Codec throughput probe: FLAC encode + full verified decode
-      // (CRC-8/16 + MD5) per asset, growing corpus. The whole pipeline
-      // is map-side — the byte columns must stay ~0 (media never
-      // shuffles for stats), and wall time must be linear in total
-      // sample count: the embarrassingly-parallel shape that holds at
-      // any executor count.
-      for (n <- Seq(100000L, 400000L)) {
-        val ids = spark.range(n).select(col("id").as("doc_id"))
-          .repartition(64)
-        timed(spark, f"flac enc+dec n=$n") {
-          val flacs = graft.ops.Flac.synthFlac(ids, "doc_id",
-            blockSize = 64)
-          graft.ops.Flac.decodeFlacStatsDf(flacs, "asset_id", "media")
-            .agg(sum("sum_abs"), sum("n_samples"))
-            .collect()(0).getLong(1)
-        }
-      }
-      spark.stop(); return
-    }
-
-    if (args.contains("crawl")) {
-      // round-7 ingest family at growing corpus size. WARC demux +
-      // HTML extraction is file-parallel map work (the one shuffle is
-      // synth's groupBy packing records into files), so wall time
-      // must be linear in page bytes and shuffle volume must track
-      // the packed corpus ONCE. rocAuc rides the distinct-score
-      // table: its shuffles must track distinct scores, not rows.
-      for (n <- Seq(100000L, 400000L)) {
-        val docs = spark.range(n).select(col("id").as("doc_id"),
-            concat_ws(" ", transform(sequence(lit(0), lit(79)), j =>
-              concat(lit("w"), pmod(hash(col("id"), j), lit(100000L)))))
-              .as("text"))
-          .repartition(64).cut()
-        timed(spark, f"warc+extract n=$n") {
-          val warcs = graft.ops.Warc.synthWarc(docs, col("doc_id"),
-            col("text"), recordsPerFile = 50)
-          val recs = graft.ops.Warc
-            .readWarcRecords(warcs, "file_id", "warc")
-            .filter(col("warc_type") === "response")
-          graft.ops.Html.extractTextDf(recs
-            .select(col("file_id"), col("body")), "file_id", "body")
-            .agg(sum("text_chars")).head().getLong(0)
-        }
-        timed(spark, f"roc_auc n=$n") {
-          graft.ops.Eval.rocAuc(
-            spark.range(n).select(
-              pmod(hash(col("id")), lit(100000L)).as("score"),
-              (pmod(hash(col("id"), lit(1)), lit(100L)) < 50).as("y")),
-            col("score"), col("y")).count()
-        }
-      }
-      spark.stop(); return
-    }
-
-    if (args.contains("dupsub")) {
-      // Exact duplicated-substring spans on the decade corpus: every
-      // doc sits in a 10-copy clique, so nearly every position is
-      // covered — worst-case gram volume AND worst-case duplicate
-      // density (~200M grams at 500k docs). Cost must track gram
-      // count (one rolling-hash pass + one hash shuffle + merge
-      // join), never pairs.
-      val docs = decadeDocs(spark)
-      timed(spark, "dupsub 500k L=25") {
-        graft.ops.Dedup.duplicateSubstringSpans(
-          docs, col("doc_id"), col("text"), gramLen = 25).count()
-      }
-      spark.stop(); return
-    }
-
-    if (args.contains("cc")) {
-      // Distributed connected-components probe: worst-case topology (one
-      // chain = max diameter) at growing sizes. Pointer jumping should
-      // hold the ROUND count ~log2(n) while per-round cost scales with
-      // the edge count — the property that makes a billion-edge dup
-      // graph tractable where plain propagation (O(diameter) rounds)
-      // is not.
-      import spark.implicits._
-      for (n <- Seq(1000L, 10000L, 100000L, 1000000L)) {
-        val chain = spark.range(n - 1)
-          .select(col("id").as("id1"), (col("id") + 1).as("id2"))
-        timed(spark, f"cc chain n=$n") {
-          val cc = graft.ops.Dedup.connectedComponents(
-            chain.toDF(), col("id1"), col("id2"), driverThreshold = 0L)
-          val distinctComps = cc.select("comp").distinct().count()
-          assert(distinctComps == 1L, s"chain must be one component")
-          distinctComps
-        }
-      }
-      spark.stop(); return
-    }
-
-    if (args.contains("skew")) {
-      // Whale-key stress: 9M events over 450k normal users (~20 each)
-      // plus ONE user with 1M events — the skew profile that turns a
-      // per-user window into a single straggler task. sessionize
-      // (window per user) must survive it; sessionizeBucketed (time
-      // buckets + boundary merge) must beat it; groupBy paths
-      // (sessionAgg) ride AQE skew handling. Recording both times is
-      // the point: the gap IS the skew lever's value.
-      import spark.implicits._
-      def time(label: String)(f: => Long): Unit =
-        timed(spark, label)(f)
-      val normal = spark.range(9000000L).select(
-        expr("id div 20").as("user_id"),
-        timestamp_seconds(lit(1700000000L) +
-          pmod(col("id"), lit(20)) *
-          (lit(300L) + pmod(hash(col("id")), lit(2400L)))).as("ts"))
-      val whale = spark.range(1000000L).select(
-        lit(999999999L).as("user_id"),
-        timestamp_seconds(lit(1700000000L) +
-          col("id") * (lit(1L) + pmod(hash(col("id")), lit(5L))))
-          .as("ts"))
-      val ev = normal.unionByName(whale).repartition(64).cut()
-      println(s"[scale] skew events: ${ev.count()} (1M on one user)")
-      // count(session_id) forces the window/bucket machinery (a bare
-      // count() would let Catalyst prune it and time an empty scan)
-      time("sessionize 10M whale")(graft.ops.Events.sessionize(
-        ev, col("user_id"), col("ts"), gapSeconds = 1800L)
-        .agg(count(col("session_id"))).head().getLong(0))
-      time("sessionize_bucketed 10M whale")(
-        graft.ops.Events.sessionizeBucketed(
-          ev, col("user_id"), col("ts"), gapSeconds = 1800L,
-          bucketSeconds = 86400L)
-        .agg(count(col("session_id"))).head().getLong(0))
-      time("session_agg 10M whale")(graft.ops.Events.sessionAgg(
-        ev, col("user_id"), col("ts"), gapSeconds = 1800L).count())
-      spark.stop(); return
-    }
-
-    if (args.contains("decadetext")) {
-      // remaining text-op family at the decade (same hazard class:
-      // text-derived frames with under-estimated static stats)
-      import spark.implicits._
-      def time(label: String)(f: => Long): Unit =
-        timed(spark, label)(f)
-      val docs = decadeDocs(spark)
-      println(s"[scale] decade corpus: ${docs.count()} docs")
-      time("winnow_containment 500k")(graft.ops.Dedup
-        .winnowContainmentPairs(docs, col("doc_id"), col("text"),
-          minShared = 3, maxDocFreq = 200).count())
-      time("bm25 500k 3q")(graft.ops.Retrieval.bm25(
-        docs, col("doc_id"), col("text"),
-        Seq((1L, "w1 w2 w3"), (2L, "w500 w600"), (3L, "w77 w88 w99"))
-          .toDF("qid", "qtext"),
-        col("qid"), col("qtext"), k = 10).count())
-      // sum over the REBUILT text, not count(): a bare count() lets
-      // Catalyst eliminate the unique-key left joins and the rebuild
-      time("boilerplate 500k")(graft.ops.Dedup.stripBoilerplate(
-        docs, col("doc_id"), col("text"), sep = " ",
-        maxDocNum = 1, maxDocDen = 100)
-        .agg(sum(length(col("text_clean")))).head().getLong(0))
-      time("dedup_paragraphs 500k")(graft.ops.Dedup.dedupParagraphs(
-        docs, col("doc_id"), col("text"), sep = " ")
-        .agg(sum(length(col("text_deduped")))).head().getLong(0))
-      spark.stop(); return
-    }
-
-    if (args.contains("decader6")) {
-      // round-6 ops at the decade: PQ/ADC ANN over 500k embeddings,
-      // theta sketches over 10M events, link prediction on the
-      // 5M-edge graph — same hazard classes as their families
-      // (ArrayType static underestimates, per-group sketch state,
-      // wedge volume), so each must hold its family's cost shape
-      import spark.implicits._
-      def time(label: String)(f: => Long): Unit =
-        timed(spark, label)(f)
-      val nVec = 500000L
-      val vecs = spark.range(nVec).select(col("id").as("vec_id"),
-          transform(sequence(lit(0), lit(63)), j =>
-            ((pmod(hash(expr("id div 10"), j), lit(2000L)) - 1000L)
-               .cast("double") / 1000.0 +
-             pmod(col("id"), lit(10)).cast("double") * 0.0001)
-              .cast("float")).as("embedding"))
-        .repartition(64)
-        .cut()
-      println(s"[scale] decade embeddings: ${vecs.count()}")
-      time("pq_adc 500k m=8 k=5")(graft.ops.Similarity.pqTopK(
-        vecs, vecs.filter(col("vec_id") < 10),
-        col("vec_id"), col("embedding"), col("vec_id"), col("embedding"),
-        k = 5).count())
-      time("ivfpq 500k 256/8 m=8 k=5")(graft.ops.Similarity.ivfPqTopK(
-        vecs, vecs.filter(col("vec_id") < 10),
-        col("vec_id"), col("embedding"), col("vec_id"), col("embedding"),
-        k = 5, nLists = 256, nProbe = 8).count())
-      val nEv = 10000000L
-      val ev = spark.range(nEv).select(
-          expr("id div 20").as("user_id"),
-          pmod(col("id"), lit(2L)).as("half"),
-          concat(lit("g"), pmod(expr("id div 20"), lit(8L))).as("grp"))
-        .repartition(64).cut()
-      println(s"[scale] decade events: ${ev.count()}")
-      time("kmv_theta 10M ev k=256") {
-        val sa = graft.ops.Sketches.kmvSketch(
-          ev.filter(col("half") === 0), Seq(col("grp")),
-          col("user_id"), k = 256)
-        val sb = graft.ops.Sketches.kmvSketch(
-          ev.filter(col("half") === 1), Seq(col("grp")),
-          col("user_id"), k = 256)
-        graft.ops.Sketches.kmvSetOps(sa, sb, Seq("grp"), k = 256).count()
-      }
-      val nNode = 1000000L
-      val edges = spark.range(5000000L).select(
-          pmod(col("id"), lit(nNode)).as("u"),
-          pmod(hash(col("id"), lit(1)), lit(nNode)).as("v"))
-        .filter(col("u") =!= col("v"))
-        .repartition(64)
-        .cut()
-      println(s"[scale] decade edges: ${edges.count()}")
-      time("link_pred 5M edges cap=12")(graft.ops.Graph.linkPrediction(
-        edges, col("u"), col("v"), topK = 100, maxDegree = 12).count())
-      spark.stop(); return
-    }
-
-    if (args.contains("semdedup")) {
-      // task: the SemDeDup cost lever at scale. Fixed k makes pair
-      // cost sum(n_c^2) ~ n^2/k (the r6 500k/k=256 probe: 317 s);
-      // semDedupPairsAuto scales k as ceil(sqrt(n)) and trains on the
-      // ~65k MINSTD sample, so pair cost tracks n^1.5 and training
-      // stops scaling with the corpus. Planted 10-copy cliques give a
-      // known true-pair count -> the count doubles as a recall check
-      // (tau=0.9 keeps only intra-clique pairs; every clique that
-      // co-clusters contributes its full C(10,2)).
-      import spark.implicits._
-      def time(label: String)(f: => Long): Unit =
-        timed(spark, label)(f)
-      def vecsOf(n: Long) = spark.range(n).select(col("id").as("vec_id"),
-          transform(sequence(lit(0), lit(63)), j =>
-            ((pmod(hash(expr("id div 10"), j), lit(2000L)) - 1000L)
-               .cast("double") / 1000.0 +
-             pmod(col("id"), lit(10)).cast("double") * 0.0001)
-              .cast("float")).as("embedding"))
-        .repartition(64)
-        .cut()
-      for (n <- Seq(500000L, 2000000L)) {
-        val vecs = vecsOf(n)
-        println(s"[scale] semdedup embeddings: ${vecs.count()}")
-        time(s"semdedup_auto n=$n (true=${n / 10 * 45})")(
-          graft.ops.Similarity.semDedupPairsAuto(vecs,
-            col("vec_id"), col("embedding"), tau = 0.9).count())
-      }
-      // the r6 fixed-k configuration, for the recall-vs-cost table
-      val v5 = vecsOf(500000L)
-      time("semdedup fixed k=256 n=500k (true=2250000)")(
-        graft.ops.Similarity.semDedupPairs(v5,
-          col("vec_id"), col("embedding"), tau = 0.9,
-          k = 256, iters = 2).count())
-      spark.stop(); return
-    }
-
-    if (args.contains("ivfpqtrain")) {
-      // task: IVF-PQ cold-build amortization. Training (coarse Lloyd
-      // + residual PQ books) dominated the r6 88 s cold build at
-      // 500k/256 lists; the default trainTarget=65536 sample must cut
-      // the TRAIN portion ~n/65536x while the planted-cluster recall
-      // spec (OpsSpec) pins that ranking quality holds.
-      import spark.implicits._
-      def time(label: String)(f: => Long): Unit =
-        timed(spark, label)(f)
-      val nVec = 500000L
-      val vecs = spark.range(nVec).select(col("id").as("vec_id"),
-          transform(sequence(lit(0), lit(63)), j =>
-            ((pmod(hash(expr("id div 10"), j), lit(2000L)) - 1000L)
-               .cast("double") / 1000.0 +
-             pmod(col("id"), lit(10)).cast("double") * 0.0001)
-              .cast("float")).as("embedding"))
-        .repartition(64)
-        .cut()
-      println(s"[scale] ivfpqtrain embeddings: ${vecs.count()}")
-      time("ivfpq 500k SAMPLED train (default)")(
-        graft.ops.Similarity.ivfPqTopK(
-          vecs, vecs.filter(col("vec_id") < 10),
-          col("vec_id"), col("embedding"), col("vec_id"),
-          col("embedding"), k = 5, nLists = 256, nProbe = 8).count())
-      time("ivfpq 500k FULL train (r6 behavior)")(
-        graft.ops.Similarity.ivfPqTopK(
-          vecs, vecs.filter(col("vec_id") < 10),
-          col("vec_id"), col("embedding"), col("vec_id"),
-          col("embedding"), k = 5, nLists = 256, nProbe = 8,
-          trainTarget = Long.MaxValue).count())
-      spark.stop(); return
-    }
-
-    if (args.contains("gate242")) {
-      // r7 verdict task #3: quantify the PairJoins gate's value and
-      // cost on the q242 shape (prefixFilterPairs, sf0.1 documents).
-      // Three configurations, two steady-state runs each (run 1 warms
-      // parquet footers + JIT; run 2 is the number): gate ON (default
-      // 32 MB budget -> the small sf0.1 sides broadcast), gate OFF
-      // (maxBroadcastBytes=0 -> the r6 blanket MERGE veto). The gap is
-      // the gate's recovered broadcast win; the gate's own overhead is
-      // now ZERO extra jobs (counts ride the cut materialization,
-      // Checkpoints.cutCounted).
-      val docs = spark.read
-        .parquet("/root/testdata/sf0.1/documents.parquet").cut()
-      println(s"[scale] gate242 corpus: ${docs.count()} docs")
-      for (budget <- Seq("33554432", "0"); run <- 1 to 2) {
-        spark.conf.set(graft.ops.PairJoins.MaxBroadcastBytesKey, budget)
-        val label = if (budget == "0") "gate OFF (merge veto)"
-                    else "gate ON (32MB budget)"
-        timed(spark, f"q242 prefix tau=.8 $label run$run") {
-          graft.ops.Dedup.prefixFilterPairs(
-            docs, col("doc_id"), col("text"), tauNum = 8, tauDen = 10)
-            .count()
-        }
-      }
-      spark.conf.unset(graft.ops.PairJoins.MaxBroadcastBytesKey)
-      spark.stop(); return
-    }
-
-    if (args.contains("reliableckpt")) {
-      // r7 verdict task #4: COST the reliable-checkpoint mode that
-      // CheckpointPolicySpec only equality-pins. Three iterative
-      // decade probes run under both policies; the delta is the
-      // write+re-read premium a preemption-prone 1000-executor run
-      // pays for restartability. Local mode numbers double as the
-      // same-session control.
-      import spark.implicits._
-      val ckptDir = "/tmp/graft_reliable_ckpt"
-      def withPolicy(reliable: Boolean)(body: => Unit): Unit = {
-        spark.conf.set(graft.Checkpoints.ReliableKey, reliable.toString)
-        if (reliable) spark.conf.set(graft.Checkpoints.DirKey, ckptDir)
-        try body
-        finally spark.conf.set(graft.Checkpoints.ReliableKey, "false")
-      }
-      val docs = decadeDocs(spark)
-      println(s"[scale] reliableckpt corpus: ${docs.count()} docs")
-      val nNode = 1000000L
-      val edges = spark.range(5000000L).select(
-          pmod(col("id"), lit(nNode)).as("u"),
-          pmod(hash(col("id"), lit(1)), lit(nNode)).as("v"))
-        .filter(col("u") =!= col("v"))
-        .repartition(64).cut()
-      val we = edges.select(col("u").as("src"), col("v").as("dst"),
-        lit(1L).as("w")).cut()
-      println(s"[scale] reliableckpt edges: ${edges.count()}")
-      val vecs = spark.range(500000L).select(col("id").as("vec_id"),
-          transform(sequence(lit(0), lit(63)), j =>
-            ((pmod(hash(expr("id div 10"), j), lit(2000L)) - 1000L)
-               .cast("double") / 1000.0 +
-             pmod(col("id"), lit(10)).cast("double") * 0.0001)
-              .cast("float")).as("embedding"))
-        .repartition(64).cut()
-      println(s"[scale] reliableckpt embeddings: ${vecs.count()}")
-      for (reliable <- Seq(false, true)) {
-        val tag = if (reliable) "reliable" else "local"
-        withPolicy(reliable) {
-          timed(spark, s"pagerank 5M i=8 [$tag]")(
-            graft.ops.Graph.pageRank(we, iters = 8).count())
-          timed(spark, s"minhash_lsh 500k tau=.6 [$tag]")(
-            graft.ops.Dedup.minhashLshPairs(
-              docs, col("doc_id"), col("text"), tau = 0.6).count())
-          timed(spark, s"semdedup 500k k=256 [$tag]")(
-            graft.ops.Similarity.semDedupPairs(
-              vecs, col("vec_id"), col("embedding"), tau = 0.999,
-              k = 256, iters = 2).count())
-        }
-      }
-      spark.stop(); return
-    }
-
-    if (args.contains("aucgroups")) {
-      // r7 verdict task #5: rocAucByGroup at REAL group cardinality.
-      // The claim under test ("20k domains cost the same shuffle as
-      // 2") is the O(partitions x groups) driver-state design; probe
-      // 400k rows at 2 / 200 / 20k groups and compare shuffle bytes —
-      // flat bytes across group counts is the pass condition.
-      val n = 400000L
-      for (groups <- Seq(2L, 200L, 20000L)) {
-        val df = spark.range(n).select(
-            concat(lit("d"), pmod(hash(col("id"), lit(7)), lit(groups)))
-              .as("domain"),
-            pmod(hash(col("id")), lit(50000L)).as("score"),
-            (pmod(hash(col("id"), lit(1)), lit(100L)) < 45).as("y"))
-          .repartition(64).cut()
-        timed(spark, f"roc_auc_by_group n=$n g=$groups") {
-          graft.ops.Eval.rocAucByGroup(
-            df, col("domain"), col("score"), col("y")).count()
-        }
-      }
-      spark.stop(); return
-    }
-
-    if (args.contains("gram")) {
-      // r8 task #2 evidence at the decade: the Gram trainer must be
-      // ONE linear pass at any corpus size and any component count —
-      // time top-2 PCA at 500k and 2M 64-dim vectors. (Pre-r8 this
-      // was 2*m*iters corpus jobs + m deflation materializations.)
-      def vecsOf(n: Long) = spark.range(n).select(col("id").as("vec_id"),
-          transform(sequence(lit(0), lit(63)), j =>
-            ((pmod(hash(expr("id div 10"), j), lit(2000L)) - 1000L)
-               .cast("double") / 1000.0 +
-             pmod(col("id"), lit(10)).cast("double") * 0.0001)
-              .cast("float")).as("embedding"))
-        .repartition(64).cut()
-      for (n <- Seq(500000L, 2000000L)) {
-        val vecs = vecsOf(n)
-        println(s"[scale] gram embeddings: ${vecs.count()}")
-        timed(spark, s"gram top-2 PCA n=$n (one pass)")(
-          graft.ops.Similarity.topPrincipalComponents(
-            vecs, col("vec_id"), col("embedding"), m = 2, iters = 2)
-            .count())
-      }
-      spark.stop(); return
-    }
-
-    if (args.contains("shtable")) {
-      // r8 task #8 evidence: the manifest-pruned scan at scale. Write
-      // 2M docs as a 64-shard range snapshot, then answer a 1/64
-      // doc_id range via the manifest vs a full-table scan + filter.
-      // The pass condition is file-count pruning (1-2 shard dirs
-      // opened of 64) with a proportional wall-time gap.
-      val path = "/tmp/graft_shtable_probe"
-      val docs = spark.range(2000000L).select(col("id").as("doc_id"),
-          concat_ws(" ", transform(sequence(lit(0), lit(39)), j =>
-            concat(lit("w"), pmod(hash(col("id"), j), lit(100000L)))))
-            .as("text"))
-        .repartition(64)
-      timed(spark, "shtable write 2M/64 shards") {
-        graft.sources.Sources.writeShardedTable(docs, col("doc_id"),
-          col("doc_id"), path, numShards = 64, statsCols = Seq("doc_id"))
-      }
-      val full = graft.sources.Sources.readShardedTable(spark, path)
-      timed(spark, s"full scan (${full.inputFiles.length} files)") {
-        full.filter(col("doc_id").between(1000000L, 1031249L))
-          .agg(sum(length(col("text")))).head().getLong(0)
-      }
-      val pruned = graft.sources.Sources.readShardedTable(spark, path,
-        preds = Seq(("doc_id", 1000000L, 1031249L)))
-      timed(spark, s"pruned scan (${pruned.inputFiles.length} files)") {
-        pruned.filter(col("doc_id").between(1000000L, 1031249L))
-          .agg(sum(length(col("text")))).head().getLong(0)
-      }
-      spark.stop(); return
-    }
-
-    if (args.contains("tablelife")) {
-      // r10 longevity probe (verdict task #2): 1,000 streaming-sink
-      // ticks, MAINTAINED (auto-compact + expiry policy) vs RAW
-      // (append-only). The claim under test: with maintenance the
-      // versions listing, manifest read, full-table read and audit
-      // all stay O(policy) flat as ticks accumulate; without it every
-      // one of them grows with tick count (the year-of-5-minute-ticks
-      // failure mode). Checkpoints sample the cost curves; the raw
-      // table at 100/400/1000 dirs doubles as the audit-planning
-      // probe corpus (verdict task #6): fast one-job planning vs the
-      // r9 per-dir driver loop.
-      import graft.sources.Sources
-      val ticks = 1000
-      val checkpoints = Set(10, 100, 400, 1000)
-      def msOf(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e6
-      }
-      def batch(i: Int) = spark.range(20)
-        .select((col("id") + 20L * i).as("doc_id"),
-          concat(lit("d"), col("id") + 20L * i).as("t"))
-      val variants =
-        (if (args.contains("raw-only")) Nil else Seq(true)) ++
-        (if (args.contains("maint-only")) Nil else Seq(false))
-      for (maintained <- variants) {
-        val path = s"/tmp/graft_tablelife_${if (maintained) "m" else "raw"}"
-        Sources.dropShardedTable(spark, path)
-        val t0 = System.nanoTime()
-        (0 until ticks).foreach { i =>
-          if (maintained)
-            Sources.shardedTableSinkBatchMaintained(batch(i), i.toLong,
-              col("doc_id"), col("doc_id"), path, numShards = 1,
-              statsCols = Seq("doc_id"), compactWhenSmallDirs = 16,
-              smallDirRows = 1000000L, keepVersions = 8)
-          else
-            Sources.shardedTableSinkBatch(batch(i), i.toLong,
-              col("doc_id"), col("doc_id"), path, numShards = 1,
-              statsCols = Seq("doc_id"))
-          if (checkpoints(i + 1)) {
-            val nVers = Sources.shardedVersions(spark, path).size
-            val nDirs = new java.io.File(path).listFiles()
-              .count(_.getName.startsWith("data-v"))
-            val listMs = msOf { Sources.shardedVersions(spark, path) }
-            val mfMs = msOf {
-              Sources.shardedManifest(spark, path).collect() }
-            // the RAW full read at 1000 dirs is a 1000-way union —
-            // minutes of driver planning, which is exactly the
-            // failure mode; demonstrate the curve to 400 dirs and
-            // keep the tail checkpoint to the metadata costs
-            val readMs =
-              if (!maintained && i + 1 > 400) -1.0
-              else msOf {
-                assert(Sources.readShardedTable(spark, path)
-                  .count() == 20L * (i + 1)) }
-            val auditMs = msOf {
-              assert(Sources.auditShardedTable(spark, path)
-                .count() == 0L) }
-            println(f"[scale] tablelife ${if (maintained) "MAINT"
-              else "RAW  "} tick=${i + 1}%5d vers=$nVers%5d " +
-              f"dirs=$nDirs%5d list=$listMs%8.1fms mf=$mfMs%8.1fms " +
-              f"read=$readMs%9.1fms audit=$auditMs%9.1fms")
-          }
-        }
-        val total = (System.nanoTime() - t0) / 1e9
-        println(f"[scale] tablelife ${if (maintained) "MAINT"
-          else "RAW  "} total $ticks ticks in $total%.1f s " +
-          f"(${total / ticks * 1000}%.0f ms/tick)")
-        if (!maintained) {
-          // audit-planning probe on the accumulated dir spray
-          val fastMs = msOf {
-            assert(Sources.auditShardedTable(spark, path)
-              .count() == 0L) }
-          val slowMs = msOf {
-            assert(Sources.auditShardedTable(spark, path,
-              perDirPlanning = true).count() == 0L) }
-          println(f"[scale] auditdirs dirs=1000 fast=$fastMs%9.1fms " +
-            f"perDir=$slowMs%9.1fms (${slowMs / fastMs}%.1fx)")
-        }
-        Sources.dropShardedTable(spark, path)
-      }
-      spark.stop(); return
-    }
-
-    if (args.contains("race")) {
-      // r10 concurrent-writer probe: N threads x 5 appends each into
-      // one table. Measures what the optimistic claim protocol costs
-      // as writer count grows — data writes overlap, only the
-      // manifest claim+publish serializes, so total wall should grow
-      // sublinearly in writers while every batch lands exactly once.
-      import graft.sources.Sources
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      def batch(w: Int, i: Int) = spark.range(1000)
-        .select((col("id") + 100000L * w + 1000L * i).as("doc_id"),
-          concat(lit("d"), col("id")).as("t"))
-      for (writers <- Seq(1, 2, 4, 8)) {
-        val path = s"/tmp/graft_race_probe_$writers"
-        Sources.dropShardedTable(spark, path)
-        Sources.writeShardedTable(batch(99, 0), col("doc_id"),
-          col("doc_id"), path, 2, Seq("doc_id"))
-        val gate = new java.util.concurrent.CountDownLatch(1)
-        val fs = (0 until writers).map { w =>
-          Future {
-            gate.await()
-            (0 until 5).foreach { i =>
-              Sources.appendShardedTable(batch(w, i), col("doc_id"),
-                col("doc_id"), path, 2, Seq("doc_id"))
-            }
-          }
-        }
-        val t0 = System.nanoTime()
-        gate.countDown()
-        fs.foreach(f => Await.result(f, scala.concurrent.duration
-          .Duration(600, "s")))
-        val sec = (System.nanoTime() - t0) / 1e9
-        val vs = Sources.shardedVersions(spark, path)
-        val rows = Sources.readShardedTable(spark, path).count()
-        println(f"[scale] race writers=$writers commits=${writers * 5} " +
-          f"wall=$sec%6.1f s (${sec / (writers * 5)}%.2f s/commit) " +
-          f"versions=${vs.size} contiguous=${vs == (1L to vs.size)} " +
-          f"rows=$rows (want ${1000 * (writers * 5 + 1)})")
-        Sources.dropShardedTable(spark, path)
-      }
-      spark.stop(); return
-    }
-
-    if (args.contains("race-objstore")) {
-      // r13: the same writer matrix, but every claim rides the
-      // CONDITIONAL-PUT object-store protocol with injected faults —
-      // ~1 in 5 puts loses its request (no effect), ~1 in 5 commits
-      // but the response is lost (the ambiguous case the token
-      // protocol exists for). Exactly-once must hold at every width.
-      import graft.sources.{ConditionalPutClaimStore,
-        EmulatedObjectStore, Sources}
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      def batch(w: Int, i: Int) = spark.range(1000)
-        .select((col("id") + 100000L * w + 1000L * i).as("doc_id"),
-          concat(lit("d"), col("id")).as("t"))
-      val puts = new java.util.concurrent.atomic.AtomicLong
-      val faults = new java.util.concurrent.atomic.AtomicLong
-      val store = new EmulatedObjectStore(key =>
-        if (!key.contains("graft_race_objstore"))
-          EmulatedObjectStore.NoFault
-        else (puts.getAndIncrement() % 5) match {
-          case 1 => faults.incrementAndGet()
-            EmulatedObjectStore.TransientBeforeEffect
-          case 3 => faults.incrementAndGet()
-            EmulatedObjectStore.TransientAfterEffect
-          case _ => EmulatedObjectStore.NoFault
-        })
-      Sources.setClaimStore(new ConditionalPutClaimStore(store))
-      try {
-        for (writers <- Seq(1, 2, 4, 8)) {
-          val path = s"/tmp/graft_race_objstore_$writers"
-          Sources.dropShardedTable(spark, path)
-          Sources.writeShardedTable(batch(99, 0), col("doc_id"),
-            col("doc_id"), path, 2, Seq("doc_id"))
-          val gate = new java.util.concurrent.CountDownLatch(1)
-          val fs = (0 until writers).map { w =>
-            Future {
-              gate.await()
-              (0 until 5).foreach { i =>
-                Sources.appendShardedTable(batch(w, i), col("doc_id"),
-                  col("doc_id"), path, 2, Seq("doc_id"))
-              }
-            }
-          }
-          val t0 = System.nanoTime()
-          gate.countDown()
-          fs.foreach(f => Await.result(f, scala.concurrent.duration
-            .Duration(600, "s")))
-          val sec = (System.nanoTime() - t0) / 1e9
-          val vs = Sources.shardedVersions(spark, path)
-          val rows = Sources.readShardedTable(spark, path).count()
-          val audit = Sources.auditShardedTable(spark, path).count()
-          println(f"[scale] race-objstore writers=$writers " +
-            f"commits=${writers * 5} wall=$sec%6.1f s " +
-            f"(${sec / (writers * 5)}%.2f s/commit) " +
-            f"versions=${vs.size} contiguous=${vs == (1L to vs.size)} " +
-            f"rows=$rows (want ${1000 * (writers * 5 + 1)}) " +
-            f"audit=$audit faults=${faults.get()}")
-          Sources.dropShardedTable(spark, path)
-        }
-      } finally Sources.setClaimStore(Sources.AtomicCreateClaimStore)
-      spark.stop(); return
-    }
-
-    if (args.contains("tombstone")) {
-      // r9 evidence: row-level delete cost at scale. On a 2M-row /
-      // 64-shard table, a 1% delete must cost O(keys) — a key-file
-      // write + manifest commit, nothing proportional to the table —
-      // and the merge-on-read scan must stay within a small constant
-      // of the tombstone-free scan (the anti-join side is key-only
-      // and broadcast). The major rewrite is the explicit O(table)
-      // alternative, for contrast.
-      val path = "/tmp/graft_tombstone_probe"
-      graft.sources.Sources.dropShardedTable(spark, path)
-      val docs = spark.range(2000000L).select(col("id").as("doc_id"),
-          concat_ws(" ", transform(sequence(lit(0), lit(39)), j =>
-            concat(lit("w"), pmod(hash(col("id"), j), lit(100000L)))))
-            .as("text"))
-        .repartition(64)
-        .cut() // fixture cost paid once — probes time the TABLE ops
-      timed(spark, "tombstone: write 2M/64") {
-        graft.sources.Sources.writeShardedTable(docs, col("doc_id"),
-          col("doc_id"), path, numShards = 64, statsCols = Seq("doc_id"))
-      }
-      timed(spark, "tombstone: read (no deletes)") {
-        graft.sources.Sources.readShardedTable(spark, path)
-          .agg(count(lit(1))).head().getLong(0)
-      }
-      timed(spark, "tombstone: DELETE 1% (20k keys)") {
-        graft.sources.Sources.deleteFromShardedTable(spark, path,
-          "doc_id", spark.range(20000L)
-            .select((col("id") * 100L).as("doc_id")))
-      }
-      timed(spark, "tombstone: merge-on-read scan") {
-        graft.sources.Sources.readShardedTable(spark, path)
-          .agg(count(lit(1))).head().getLong(0)
-      }
-      timed(spark, "tombstone: pruned 1/64 + deletes") {
-        graft.sources.Sources.readShardedTable(spark, path,
-            preds = Seq(("doc_id", 1000000L, 1031249L)))
-          .filter(col("doc_id").between(1000000L, 1031249L))
-          .agg(count(lit(1))).head().getLong(0)
-      }
-      timed(spark, "tombstone: MERGE 1% upsert") {
-        graft.sources.Sources.mergeShardedTable(
-          docs.filter(col("doc_id") % 100 === 1L), "doc_id",
-          col("doc_id"), path, numShards = 4, statsCols = Seq("doc_id"))
-      }
-      timed(spark, "tombstone: scan after merge") {
-        graft.sources.Sources.readShardedTable(spark, path)
-          .agg(count(lit(1))).head().getLong(0)
-      }
-      // DENSITY curve: how does merge-on-read degrade as tombstones
-      // accumulate? Add deletes up to ~25% of the table and re-read —
-      // the anti-join side grows but stays key-only, so the scan
-      // should degrade gently, never cliff.
-      timed(spark, "tombstone: DELETE to 25% (500k keys)") {
-        graft.sources.Sources.deleteFromShardedTable(spark, path,
-          "doc_id", spark.range(500000L)
-            .select((col("id") * 4L + 1L).as("doc_id")))
-      }
-      timed(spark, "tombstone: scan at 25% deleted") {
-        graft.sources.Sources.readShardedTable(spark, path)
-          .agg(count(lit(1))).head().getLong(0)
-      }
-      timed(spark, "tombstone: MAJOR rewrite (O(table))") {
-        graft.sources.Sources.rewriteShardedTable(spark, path,
-          col("doc_id"), col("doc_id"), numShards = 64,
-          statsCols = Seq("doc_id"))
-      }
-      timed(spark, "tombstone: scan after rewrite") {
-        graft.sources.Sources.readShardedTable(spark, path)
-          .agg(count(lit(1))).head().getLong(0)
-      }
-      graft.sources.Sources.dropShardedTable(spark, path)
-      spark.stop(); return
-    }
-
-    if (args.contains("zorder")) {
-      // r9 evidence: 2-D pruning at scale. 2M rows over two
-      // independent uniform dims, 64 shards. A 1/8 x 1/8 box must
-      // open ~1/64 of the z-ordered table's files (both bounds prune
-      // together) vs ~1/8 on the linear layout (only the leading
-      // bound prunes) — the file-count column is the 100 TB signal.
-      val zPath = "/tmp/graft_zorder_probe_z"
-      val lPath = "/tmp/graft_zorder_probe_l"
-      graft.sources.Sources.dropShardedTable(spark, zPath)
-      graft.sources.Sources.dropShardedTable(spark, lPath)
-      val n = 2000000L
-      val df = spark.range(n).select(col("id").as("x"),
-          pmod(col("id") * 2654435761L, lit(n)).as("y"),
-          concat_ws(" ", transform(sequence(lit(0), lit(19)), j =>
-            concat(lit("w"), pmod(hash(col("id"), j), lit(100000L)))))
-            .as("text"))
-        .repartition(64)
-      timed(spark, "zorder: write 2M/64") {
-        graft.sources.Sources.writeShardedTableZOrdered(df, col("x"),
-          Seq("x", "y"), zPath, numShards = 64, bitsPerCol = 8)
-      }
-      timed(spark, "zorder: linear write 2M/64") {
-        graft.sources.Sources.writeShardedTable(df, col("x"), col("x"),
-          lPath, numShards = 64, statsCols = Seq("x", "y"))
-      }
-      val box = Seq(("x", 0L, n / 8 - 1), ("y", 0L, n / 8 - 1))
-      val zr = graft.sources.Sources.readShardedTable(spark, zPath,
-        preds = box)
-      timed(spark, s"zorder: box scan (${zr.inputFiles.length} files)") {
-        zr.filter(col("x") < n / 8 && col("y") < n / 8)
-          .agg(count(lit(1))).head().getLong(0)
-      }
-      val lr = graft.sources.Sources.readShardedTable(spark, lPath,
-        preds = box)
-      timed(spark, s"zorder: linear box (${lr.inputFiles.length} files)") {
-        lr.filter(col("x") < n / 8 && col("y") < n / 8)
-          .agg(count(lit(1))).head().getLong(0)
-      }
-      graft.sources.Sources.dropShardedTable(spark, zPath)
-      graft.sources.Sources.dropShardedTable(spark, lPath)
-      spark.stop(); return
-    }
-
-    if (args.contains("bloom")) {
-      // r9 evidence: point lookups on a NON-order column at scale.
-      // 2M rows / 64 shards, range-laid by x so y's min/max stats
-      // prune nothing; the bloom sidecar must open O(1) shards per
-      // equality probe, and the build must be one linear pass.
-      val path = "/tmp/graft_bloom_probe"
-      graft.sources.Sources.dropShardedTable(spark, path)
-      val n = 2000000L
-      val df = spark.range(n).select(col("id").as("x"),
-          pmod(col("id") * 2654435761L, lit(n)).as("y"),
-          concat_ws(" ", transform(sequence(lit(0), lit(19)), j =>
-            concat(lit("w"), pmod(hash(col("id"), j), lit(100000L)))))
-            .as("text"))
-        .repartition(64)
-        .cut()
-      timed(spark, "bloom: write 2M/64") {
-        graft.sources.Sources.writeShardedTable(df, col("x"), col("x"),
-          path, numShards = 64, statsCols = Seq("x"))
-      }
-      timed(spark, "bloom: build (y, 2^20 bits, k=4)") {
-        graft.sources.Sources.buildShardedBloom(spark, path, "y",
-          bits = 1 << 20, k = 4)
-      }
-      val probe = graft.sources.Sources.readShardedTablePointLookup(
-        spark, path, "y", lit(777777L))
-      timed(spark, s"bloom: point lookup " +
-          s"(${probe.inputFiles.length} files of 64)") {
-        probe.filter(col("y") === 777777L)
-          .agg(count(lit(1))).head().getLong(0)
-      }
-      val fullScan = graft.sources.Sources.readShardedTable(spark, path)
-      timed(spark, s"bloom: full-scan equality " +
-          s"(${fullScan.inputFiles.length} files)") {
-        fullScan.filter(col("y") === 777777L)
-          .agg(count(lit(1))).head().getLong(0)
-      }
-      graft.sources.Sources.dropShardedTable(spark, path)
-      spark.stop(); return
-    }
-
-    if (args.contains("decade2")) {
-      // a SECOND decade step for the headline families: 2M docs in
-      // 200k 10-copy cliques (9M true pairs), 30M events / 1.5M
-      // users. The question is the same as the first decade's — does
-      // cost stay linear in true pairs / events, with no broadcast
-      // mistake and no OOM — one step closer to the real corpus.
-      import spark.implicits._
-      def time(label: String)(f: => Long): Unit =
-        timed(spark, label)(f)
-      val docs = spark.range(2000000L).select(col("id").as("doc_id"),
-          concat(
-            concat_ws(" ", transform(sequence(lit(0), lit(59)), j =>
-              concat(lit("w"), pmod(hash(expr("id div 10"), j),
-                lit(4000000L))))),
-            lit(" t"), pmod(col("id"), lit(10))).as("text"))
-        .repartition(96)
-        .cut()
-      println(s"[scale] decade2 corpus: ${docs.count()} docs")
-      time("minhash_lsh 2M tau=.6")(graft.ops.Dedup.minhashLshPairs(
-        docs, col("doc_id"), col("text"), tau = 0.6).count())
-      time("exact_dedup 2M")(graft.ops.Dedup.exactKeepFirst(
-        docs, col("text"), col("doc_id")).count())
-      time("deletion_pairs 2M")(graft.ops.Dedup.deletionNeighborPairs(
-        docs, col("doc_id"), col("text")).count())
-      val nEv = 30000000L
-      val events = spark.range(nEv).select(
-          expr("id div 20").as("user_id"),
-          timestamp_seconds(lit(1700000000L) + expr("id div 20") +
-            pmod(col("id"), lit(20)) *
-            (lit(300L) + pmod(hash(col("id")), lit(2400L))))
-            .as("ts"))
-        .repartition(96)
-        .cut()
-      println(s"[scale] decade2 events: ${events.count()}")
-      time("sessionize 30M ev")(graft.ops.Events.sessionize(
-        events, col("user_id"), col("ts"), gapSeconds = 1800L)
-        .agg(count(col("session_id"))).head().getLong(0))
-      time("session_agg 30M ev")(graft.ops.Events.sessionAgg(
-        events, col("user_id"), col("ts"), gapSeconds = 1800L).count())
-      spark.stop(); return
-    }
-
-    if (args.contains("decade")) {
-      // One order of magnitude past the 50k/1M probes: 500k docs in
-      // 50k 10-copy near-dup cliques (synthetic token streams, so
-      // cross-clique similarity is ~0 and the true-pair count is a
-      // KNOWN 50k x C(10,2) = 2.25M), 10M events over 500k users, and
-      // a 5M-edge synthetic graph. The decade run is the cheapest way
-      // to catch a memory/spill cliff before real scale: every cost
-      // below must stay ~linear in its true driver (pairs, events,
-      // edges) with no OOM at local[32]/128 GiB.
-      import spark.implicits._
-      def time(label: String)(f: => Long): Unit =
-        timed(spark, label)(f)
-      val docs = decadeDocs(spark)
-      println(s"[scale] decade corpus: ${docs.count()} docs")
-      time("minhash_lsh 500k tau=.6")(graft.ops.Dedup.minhashLshPairs(
-        docs, col("doc_id"), col("text"), tau = 0.6).count())
-      time("prefix_pairs 500k tau=.9")(graft.ops.Dedup.prefixFilterPairs(
-        docs, col("doc_id"), col("text"), tauNum = 9, tauDen = 10)
-        .count())
-      time("simhash 500k tau=.6")(graft.ops.Dedup.simhashPairs(
-        docs, col("doc_id"), col("text"), tau = 0.6).count())
-      time("deletion_pairs 500k")(graft.ops.Dedup.deletionNeighborPairs(
-        docs, col("doc_id"), col("text")).count())
-      time("exact_dedup 500k")(graft.ops.Dedup.exactKeepFirst(
-        docs, col("text"), col("doc_id")).count())
-      // 10M events / 500k users / ~20 events each, pseudo-random gaps
-      // spanning session boundaries at the 1800 s gap
-      val nEv = 10000000L
-      val events = spark.range(nEv).select(
-          expr("id div 20").as("user_id"),
-          timestamp_seconds(lit(1700000000L) + expr("id div 20") +
-            pmod(col("id"), lit(20)) *
-            (lit(300L) + pmod(hash(col("id")), lit(2400L))))
-            .as("ts"))
-        .repartition(64)
-        .cut()
-      println(s"[scale] decade events: ${events.count()}")
-      // count(session_id), not count(): a bare count() lets Catalyst
-      // prune the window away and times an empty scan
-      time("sessionize 10M ev")(graft.ops.Events.sessionize(
-        events, col("user_id"), col("ts"), gapSeconds = 1800L)
-        .agg(count(col("session_id"))).head().getLong(0))
-      time("session_agg 10M ev")(graft.ops.Events.sessionAgg(
-        events, col("user_id"), col("ts"), gapSeconds = 1800L).count())
-      // 5M-edge synthetic graph over 1M nodes (~10 neighbors/node,
-      // hash hops): an order past the sf0.1 co-occurrence graph
-      val nNode = 1000000L
-      val edges = spark.range(5000000L).select(
-          pmod(col("id"), lit(nNode)).as("u"),
-          pmod(hash(col("id"), lit(1)), lit(nNode)).as("v"))
-        .filter(col("u") =!= col("v"))
-        .repartition(64)
-        .cut()
-      println(s"[scale] decade edges: ${edges.count()}")
-      time("triangles 5M edges")(graft.ops.Graph.triangleCounts(
-        edges, col("u"), col("v")).count())
-      time("lpa 5M edges r=3")(graft.ops.Graph.labelPropagation(
-        edges, col("u"), col("v"), rounds = 3).count())
-      val we = edges.select(col("u").as("src"), col("v").as("dst"),
-        lit(1L).as("w"))
-      val seeds = spark.range(100L).select(col("id"))
-      time("ppr 5M edges i=3")(graft.ops.Graph.personalizedPageRank(
-        we, seeds, iters = 3).count())
-      time("pagerank 5M edges i=8")(graft.ops.Graph.pageRank(
-        we, iters = 8).count())
-      // 500k x 64-dim embeddings in the same 10-copy clique layout
-      // (copies perturbed ~1e-4, cross-clique vectors pseudo-random):
-      // ArrayType is THE static-underestimate hazard class (est = one
-      // element's width), so the ANN/semdedup family must survive the
-      // decade without a mis-broadcast just like the text ops
-      val nVec = 500000L
-      val vecs = spark.range(nVec).select(col("id").as("vec_id"),
-          transform(sequence(lit(0), lit(63)), j =>
-            ((pmod(hash(expr("id div 10"), j), lit(2000L)) - 1000L)
-               .cast("double") / 1000.0 +
-             pmod(col("id"), lit(10)).cast("double") * 0.0001)
-              .cast("float")).as("embedding"))
-        .repartition(64)
-        .cut()
-      println(s"[scale] decade embeddings: ${vecs.count()}")
-      time("semdedup 500k k=256")(graft.ops.Similarity.semDedupPairs(
-        vecs, col("vec_id"), col("embedding"), tau = 0.999, k = 256,
-        iters = 2).count())
-      time("ann_quantized 500k")(graft.ops.Similarity.quantizedTopK(
-        vecs, vecs.filter(col("vec_id") < 10),
-        col("vec_id"), col("embedding"), col("vec_id"), col("embedding"),
-        k = 5).count())
-      time("ivf_packed 500k") {
-        val (cents, packed) = graft.ops.Similarity.ivfPack(
-          vecs, col("vec_id"), col("embedding"), nLists = 256)
-        val idx = packed.cut()
-        graft.ops.Similarity.ivfTopKPacked(
-          vecs.filter(col("vec_id") < 10), cents, idx,
-          col("vec_id"), col("embedding"), k = 5).count()
-      }
-      time("hard_negatives 500k")(graft.ops.Similarity.hardNegatives(
-        vecs.withColumn("lbl", pmod(col("vec_id"), lit(5))),
-        vecs.withColumn("lbl", pmod(col("vec_id"), lit(5)))
-          .filter(col("vec_id") < 10),
-        col("vec_id"), col("embedding"), col("lbl"),
-        col("vec_id"), col("embedding"), col("lbl"), k = 5).count())
-      spark.stop(); return
-    }
-
-    val d = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-    val n = d.count()
-    // 10 copies with distinct ids; tiny per-copy suffix so copies are
-    // near-dups (j ~ 0.97), not byte-identical
-    val big = (0 until 10).map { i =>
-      d.select((col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-               concat(col("text"), lit(s" probe$i tail")).as("text"))
-    }.reduce(_ union _)
-    big.write.mode("overwrite").parquet("/tmp/graft_scale_docs")
-    val corpus = spark.read.parquet("/tmp/graft_scale_docs")
-    println(s"[scale] corpus: ${corpus.count()} docs (base $n)")
-
-    def time(label: String)(f: => Long): Unit =
-        timed(spark, label)(f)
-    time("minhash_lsh 50k")(graft.ops.Dedup.minhashLshPairs(
-      corpus, col("doc_id"), col("text"), tau = 0.6).count())
-    time("simhash 50k")(graft.ops.Dedup.simhashPairs(
-      corpus, col("doc_id"), col("text"), tau = 0.6).count())
-    time("jaccard exact 50k")(graft.ops.Dedup.jaccardPairs(
-      corpus, col("doc_id"), col("text"), tau = 0.6).count())
-    // decontamination at 10x: the bloom prefilter's win is corpus-side
-    // probe cost — both paths must flag the same docs, with the bloom
-    // path spending its join only on prefilter survivors
-    val eval = d.filter(col("source") === "src0")
-    time("decontam exact 50k")(graft.ops.Dedup.contaminatedDocs(
-      corpus, eval, col("doc_id"), col("text"), col("text"), n = 4)
-      .count())
-    time("decontam bloom 50k")(graft.ops.Dedup.bloomContaminatedDocs(
-      corpus, eval, col("doc_id"), col("text"), col("text"), n = 4)
-      .count())
-    // quantized ANN at 10x corpus: shortlist + rescore must track
-    // corpus size (one quantized pass + k-sized rescore), not blow up
-    val e = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
-    val bigE = (0 until 10).map { i =>
-      e.select((col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-               col("embedding"))
-    }.reduce(_ union _)
-    time("ann_quantized 10x")(graft.ops.Similarity.quantizedTopK(
-      bigE, bigE.filter(col("vec_id") < 10),
-      col("vec_id"), col("embedding"), col("vec_id"), col("embedding"),
-      k = 5).count())
-    // semdedup at 10x: every base vector becomes a 10-copy clique, so
-    // the true-pair count is 45x the corpus — cluster routing must keep
-    // candidate cost ~sum over clusters of (n_c^2), never corpus^2.
-    // k scales with the corpus (SemDeDup's sqrt-n guidance, rounded).
-    time("semdedup 10x k=64")(graft.ops.Similarity.semDedupPairs(
-      bigE, col("vec_id"), col("embedding"), tau = 0.99, k = 64,
-      iters = 2).count())
-    // manifest ops at 10x: both are one range shuffle + narrow maps —
-    // cost must track corpus size with no single-task stage
-    time("length_batches 50k")(graft.ops.Packing.lengthBucketBatches(
-      corpus, col("doc_id"), col("text"), bucketWidth = 32,
-      batchSize = 16).count())
-    time("shuffle_shards 50k")(graft.ops.Packing.shuffleShards(
-      corpus, col("doc_id"), numShards = 128).count())
-    // token-budget head at 10x with FOUR groups: the naive form would
-    // serialize the corpus through 4 window tasks; the grouped prefix
-    // sum must keep every stage at full parallelism
-    time("token_budget 50k/4grp")(graft.ops.Sampling.tokenBudget(
-      corpus.withColumn("grp", concat(lit("g"), col("doc_id") % 4))
-        .withColumn("n_tok", length(col("text"))),
-      col("doc_id"), col("grp"), col("n_tok"),
-      (0 until 4).map(i => s"g$i" -> 500000L).toMap).count())
-    // NB classifier at 10x: two count-aggs to train, one vocab join to
-    // score — cost must track token count, vocab stays tiny
-    time("nb_quality 50k")(graft.ops.TextAnalysis.nbQualityScore(
-      corpus, col("doc_id"), col("text"),
-      corpus.filter(col("doc_id") % 10 === 0), col("text"),
-      corpus.filter(col("doc_id") % 10 =!= 0), col("text")).count())
-    // BPE training at 10x: after the word-count compression each merge
-    // iteration runs over the VOCAB (unchanged by replication), so
-    // 10x corpus should cost ~1 extra count-agg, not 10x per merge
-    time("bpe_train 50k 4 merges") {
-      graft.ops.Bpe.train(corpus, col("text"), 4).size.toLong
-    }
-    // DSIR at 10x raw corpus vs the base target: model stays B-sized,
-    // scoring is one model join over the replicated corpus
-    time("dsir 50k")(graft.ops.TextAnalysis.dsirWeights(
-      corpus, col("doc_id"), col("text"), d, col("text")).count())
-    // bigram LM at 10x: model tables scale with bigram vocab (fixed
-    // under replication), scoring with corpus
-    time("bigram_nll 50k")(graft.ops.TextAnalysis.bigramNll(
-      corpus, col("doc_id"), col("text")).count())
-    // prototypicality at 10x embeddings: one narrow assignment pass +
-    // prefix-sum rank — no per-cluster window task
-    time("prototypes 10x") {
-      val cents = graft.ops.Similarity.kmeansCentroids(
-        bigE, col("vec_id"), col("embedding"), k = 8, iters = 2)
-      graft.ops.Similarity.prototypicality(
-        bigE, col("vec_id"), col("embedding"), cents, 0.2).count()
-    }
-    // winnowing at 10x: fingerprint selection is narrow per-row (cost
-    // tracks token count); the containment join shuffles on the 31-bit
-    // fp key with the hot-fp cap bounding any bucket — replication
-    // multiplies every fp's doc-freq by 10, so the cap is the lever
-    // that keeps template fps from exploding the join
-    time("winnow_fps 50k")(graft.ops.TextAnalysis.winnowFingerprints(
-      corpus, col("doc_id"), col("text")).count())
-    time("containment 50k cap=200")(graft.ops.Dedup.winnowContainmentPairs(
-      corpus, col("doc_id"), col("text"), minShared = 3,
-      maxDocFreq = 200).count())
-    // BM25 at 10x: the tf index scales with the corpus, everything
-    // after the broadcast query-term join is query-sized
-    import spark.implicits._
-    time("bm25 50k 3q")(graft.ops.Retrieval.bm25(
-      corpus, col("doc_id"), col("text"),
-      Seq((1L, "spark hash join"), (2L, "window sort table"),
-          (3L, "fast merge batch"))
-        .toDF("qid", "qtext"),
-      col("qid"), col("qtext"), k = 10).count())
-    // top-PC at 10x embeddings: 2 narrow aggregate jobs per iteration,
-    // d-long driver state — pure linear passes
-    time("top_pc 10x") {
-      graft.ops.Similarity.topPrincipalComponent(
-        bigE, col("vec_id"), col("embedding"), iters = 2).size.toLong
-    }
-    // incremental dedup at 10x: a 5k-doc "daily batch" against the 45k
-    // "standing corpus". The point of the signature index is AMORTIZED
-    // reuse — the corpus index is built once (outside the timer, like
-    // the daily job that reads yesterday's artifact), so the timed
-    // work is batch-index build + banded join + exact verify. The
-    // inverted-index baseline re-shingles the corpus every run by
-    // construction.
-    val batch10 = corpus.filter(col("doc_id") < 1000000L)
-    val corp10 = corpus.filter(col("doc_id") >= 1000000L)
-    time("incr jaccard 5k vs 45k")(graft.ops.Dedup.jaccardPairsBetween(
-      batch10, corp10, col("doc_id"), col("doc_id"),
-      col("text"), col("text"), tau = 0.6).count())
-    graft.ops.Dedup.minhashIndex(corp10, col("doc_id"), col("text"))
-      .write.mode("overwrite").parquet("/tmp/graft_scale_corpus_ix")
-    val cIx = spark.read.parquet("/tmp/graft_scale_corpus_ix")
-    time("incr lsh-index 5k vs 45k (stored ix)") {
-      val bIx = graft.ops.Dedup.minhashIndex(batch10, col("doc_id"),
-        col("text"))
-      graft.ops.Dedup.minhashLshPairsBetween(bIx, cIx, tau = 0.6).count()
-    }
-    // PPMI at 10x: co-occurrence pairs form inside rows, so the count
-    // frame's VALUES scale 10x but its vocab-bounded row count does
-    // not; the cosine stage joins on contexts whose hubs the
-    // positivity cut pruned — cost must track shared-context mass
-    time("ppmi_similarity 50k")(graft.ops.TextAnalysis
-      .ppmiTermSimilarity(corpus, col("doc_id"), col("text"),
-        window = 2, minCount = 10L, k = 30).count())
-    // strata overlap at 10x with 40 strata (copies get distinct
-    // sources): per-stratum distinct shingle frames scale with text
-    // volume, the pair fan with strata^2 — never corpus^2
-    time("strata_overlap 50k/40src") {
-      val strat = corpus.withColumn("src",
-        concat(lit("s"), pmod(col("doc_id"), lit(40))))
-      graft.ops.Dedup.strataOverlap(strat, col("src"), col("text"))
-        .count()
-    }
-    // count-min at 10x: grid stays depth x width per group; the build
-    // is the (group, item) count agg + a vocab-sized hash pass
-    time("count_min 50k")(graft.ops.Sketches.countMin(
-      corpus.withColumn("src", concat(lit("s"), pmod(col("doc_id"), lit(20))))
-        .select(col("src"), explode(split(col("text"), " ")).as("tok")),
-      col("src"), col("tok")).count())
-    // PPJoin prefix filter at 10x: τ=9/10 puts every 10-copy clique's
-    // cross pairs (J ≈ 0.92) IN the answer — ~225k true pairs — so
-    // this probes the output-bounded claim, not an empty result. The
-    // set-dedup layer sees 50k distinct sets (each copy's probe token
-    // differs), i.e. the no-collapse worst case.
-    time("prefix_pairs 50k tau=.9")(graft.ops.Dedup.prefixFilterPairs(
-      corpus, col("doc_id"), col("text"), tauNum = 9, tauDen = 10)
-      .count())
-    // deletion screen at 10x: copies differ by 2 tokens (probe suffix),
-    // so the true symdiff<=1 set is ~empty — probes pure index cost:
-    // 50k docs x (n+1) signatures, candidates only from real overlap
-    time("deletion_pairs 50k")(graft.ops.Dedup.deletionNeighborPairs(
-      corpus, col("doc_id"), col("text")).count())
-    // hard negatives at 10x embeddings: broadcast queries, label
-    // anti-filter in-join, partial top-k — cost tracks corpus scan
-    time("hard_negatives 10x")(graft.ops.Similarity.hardNegatives(
-      bigE.withColumn("lbl", pmod(col("vec_id"), lit(5))),
-      bigE.withColumn("lbl", pmod(col("vec_id"), lit(5)))
-        .filter(col("vec_id") < 10),
-      col("vec_id"), col("embedding"), col("lbl"),
-      col("vec_id"), col("embedding"), col("lbl"), k = 5).count())
-    // packed IVF at 10x embeddings: the index build is one shuffle,
-    // each probe is a single-list in-row ranking — probe cost tracks
-    // corpus/nLists, and nLists is the lever that bounds a posting row
-    time("ivf_packed 10x") {
-      val (cents, packed) = graft.ops.Similarity.ivfPack(
-        bigE, col("vec_id"), col("embedding"), nLists = 64)
-      val idx = packed.cut()
-      graft.ops.Similarity.ivfTopKPacked(
-        bigE.filter(col("vec_id") < 10), cents, idx,
-        col("vec_id"), col("embedding"), k = 5).count()
-    }
-    // graph ops at 10x-scale edge volume: the lineitem co-occurrence
-    // graph already stresses wedge volume at sf0.1 (41M wedges); the
-    // probes pin the full-width wedge stage and the per-round peel cost
-    val li = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
-    val pairs = graft.ops.Graph.coOccurrencePairs(
-      li, col("l_orderkey"), col("l_partkey")).cut()
-    time("triangles sf0.1")(graft.ops.Graph.triangleCounts(
-      pairs, col("u"), col("v"), inputCanonical = true).count())
-    time("kcore_peel sf0.1 r=4")(graft.ops.Graph.kCorePeel(
-      pairs, col("u"), col("v"), k = 80, rounds = 4).count())
-    time("lpa sf0.1 r=3")(graft.ops.Graph.labelPropagation(
-      pairs, col("u"), col("v"), rounds = 3).count())
-    val we = graft.ops.Graph.coOccurrenceEdges(
-      li, col("l_orderkey"), col("l_partkey")).cut()
-    val seeds = spark.read.parquet("/root/testdata/sf0.1/part.parquet")
-      .filter(col("p_size") === 1).select(col("p_partkey").as("id"))
-    time("ppr sf0.1 i=3")(graft.ops.Graph.personalizedPageRank(
-      we, seeds, iters = 3).count())
-    spark.stop()
+    try args.headOption match {
+      case Some("table") =>
+        tableChain(spark, cpus, args.find(_.startsWith("rows="))
+          .map(_.stripPrefix("rows=").toLong).getOrElse(6000000L))
+      case Some("race") =>
+        raceMatrix(spark, "race", Sources.AtomicCreateClaimStore, () => 0L)
+      case Some("race-objstore") =>
+        val puts = new java.util.concurrent.atomic.AtomicLong
+        val faults = new java.util.concurrent.atomic.AtomicLong
+        val store = new EmulatedObjectStore(key =>
+          if (!key.contains("graft_race_objstore_"))
+            EmulatedObjectStore.NoFault
+          else (puts.getAndIncrement() % 5) match {
+            case 1 => faults.incrementAndGet()
+              EmulatedObjectStore.TransientBeforeEffect
+            case 3 => faults.incrementAndGet()
+              EmulatedObjectStore.TransientAfterEffect
+            case _ => EmulatedObjectStore.NoFault
+          })
+        raceMatrix(spark, "race-objstore",
+          new ConditionalPutClaimStore(store), () => faults.get())
+      case _ =>
+        System.err.println(
+          "usage: ScaleProbe table [rows=N] | race | race-objstore")
+    } finally spark.stop()
   }
 }

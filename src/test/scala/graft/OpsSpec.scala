@@ -231,8 +231,8 @@ class OpsSpec extends AnyFunSuite {
     // the corpus's true pairs sit at cosine 0.40-0.55 (no planted
     // high-cosine dups), so recall must hold right at the threshold:
     // nPlanes=2/tables=24, deterministic seeded planes (tuning math in
-    // Similarity.cosinePairsLsh; recall also probed at sf0.01/sf0.1
-    // via tools.LshProbe)
+    // Similarity.cosinePairsLsh; recall at sf0.01/sf0.1 is checked by
+    // q49's exact-pairs oracle, embeddingPairsSql, in Verify and Bench)
     val exact = pairSet(Dedup.embeddingPairs(
       embs, col("vec_id"), col("embedding"), tau = 0.4))
     val lsh = pairSet(Similarity.cosinePairsLsh(

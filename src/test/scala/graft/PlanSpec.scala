@@ -95,6 +95,10 @@ class PlanSpec extends AnyFunSuite {
     assert("HashAggregate".r.findAllIn(p).size >= 2, p.take(2000))
   }
 
+  test("SparkEntry.entry (the flagship q01) returns rows") {
+    assert(SparkEntry.entry(spark).count() > 0)
+  }
+
   test("q24 corpus side is not shuffled (broadcast of the query side)") {
     val p = plan("q24_ann_topk")
     assert(p.contains("BroadcastNestedLoopJoin") ||
@@ -497,19 +501,18 @@ class PlanSpec extends AnyFunSuite {
   test("PairJoins gate: large sides keep the merge veto (never a " +
        "static broadcast of a corpus-sized pair side)") {
     import org.apache.spark.sql.functions._
-    // force the budget to 0 — every runtime count is "over budget",
-    // reproducing the corpus-scale decision on the tiny fixture (the
-    // decade probes exercise the real thing; this pins the mechanism)
-    spark.conf.set(graft.ops.PairJoins.MaxBroadcastBytesKey, "0")
-    try {
-      val d = spark.read.parquet(s"$sf0001/documents.parquet")
-      val p = graft.ops.Dedup.winnowContainmentPairs(
-          d, col("doc_id"), col("text"), 3, 4, 3, 20)
-        .queryExecution.executedPlan.toString
-      assert(p.contains("SortMergeJoin"), p.take(2000))
-      assert(!p.contains("BroadcastHashJoin"), p.take(2000))
-    } finally
-      spark.conf.unset(graft.ops.PairJoins.MaxBroadcastBytesKey)
+    // a corpus past the fixed budget: every doc winnows to one
+    // fingerprint, so the fingerprint side counts 600,000 narrow rows
+    // (38 MB at the 64 B/row bound, over the 32 MB budget)
+    val n = 600000L
+    assert(!graft.ops.PairJoins.fits(n, graft.ops.PairJoins.NarrowRowBytes))
+    val d = spark.range(n).select(col("id").as("doc_id"),
+      concat(lit("a b c "), col("id")).as("text"))
+    val p = graft.ops.Dedup.winnowContainmentPairs(
+        d, col("doc_id"), col("text"), 3, 4, 3, 20)
+      .queryExecution.executedPlan.toString
+    assert(p.contains("SortMergeJoin"), p.take(2000))
+    assert(!p.contains("BroadcastHashJoin"), p.take(2000))
   }
 
   test("PairJoins gate: runtime-proven small sides broadcast again") {
