@@ -2298,8 +2298,8 @@ object SparkEntry {
     }),
 
     // Exact weighted median (quantity-weighted price) per return flag:
-    // cumulative integer weights over pre-aggregated distinct values,
-    // rational threshold compare — no float anywhere.
+    // cumulative integer weights, walked over the crossing bucket's
+    // values only, rational threshold compare — no float anywhere.
     "q357_weighted_median" -> ((s, dir) => {
       graft.ops.Relational.weightedQuantile(t(s, dir, "lineitem"),
           col("l_returnflag"),

@@ -1270,37 +1270,87 @@ object Relational {
     * total weight (weighted median at 1/2). The estimator decisions
     * that need "median price weighted by volume" / "token-weighted
     * median document length" land here — unweighted percentile over
-    * row-exploded weights would shuffle Σw rows; this shuffles one row
-    * per input row and compares cumulative weights as integers
-    * (cumw·qDen >= totw·qNum — no float threshold, bit-portable).
+    * row-exploded weights would shuffle Σw rows; this compares
+    * cumulative weights as integers (cumw·qDen >= totw·qNum — no float
+    * threshold, bit-portable).
     *
-    * Shape at 100 TB: values pre-aggregate per (group, value) —
-    * map-side combine collapses duplicate values BEFORE the window —
-    * then one window shuffle on the group key walks each group's
-    * distinct values in order. Groups × distinct-values rows in the
-    * window, never raw rows. `weight` must be a non-negative integer
-    * column. */
+    * A selection, not a sort, in two scans of `df`:
+    *  - pass 1 sums the weights per (group, [[graft.functions.LogBucket]]
+    *    of v) with a map-side partial aggregate. The bucket is monotone
+    *    in v and needs no statistics; a group yields at most 2^bits
+    *    buckets per octave of |v|. Each group's buckets then meet in
+    *    one array, whose walk ([[graft.functions.BucketCrossing]]) gives
+    *    the group's total, the first bucket whose running weight
+    *    reaches q (the crossing bucket) and the weight before it;
+    *  - pass 2 keeps only the rows in the crossing bucket (a broadcast
+    *    join on one long key, `xxhash64(group, bucket)`, with the exact
+    *    null-safe match as its condition) and walks them in value order
+    *    from the carried-in weight.
+    *
+    * Null values sort first and carry weight, but answer only a group
+    * that has nothing else; a null group is its own group; null weights
+    * add nothing, and a value reached before any non-null weight never
+    * qualifies — so the answer is exactly that of one walk over every
+    * (group, value) in value order.
+    *
+    * Shape at 100 TB: neither pass shuffles or sorts the raw rows.
+    * Pass 1 shuffles groups × buckets partial sums, and holds one
+    * group's buckets (at most 2^(bits+7)) in one array. Pass 2 shuffles
+    * and sorts only the crossing bucket: about 2^-bits of a group's
+    * rows when its values spread over their magnitude (a group packed
+    * into one bucket — one relative 2^-bits slice of |v| — walks all
+    * its rows, still exact). The broadcast holds one row per group.
+    * `value` must be an integral column, `weight` a non-negative
+    * integer column. */
   def weightedQuantile(df: DataFrame, group: Column, value: Column,
                        weight: Column, qNum: Int, qDen: Int): DataFrame = {
     require(qDen >= 1 && qNum >= 1 && qNum <= qDen,
       s"quantile $qNum/$qDen must sit in (0, 1]")
-    val perValue = df
-      .select(group.as("g"), value.as("v"),
-              weight.cast("long").as("__w"))
-      .groupBy(col("g"), col("v"))
-      .agg(sum(col("__w")).as("__w"))
     import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("g")).orderBy(col("v"))
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    val rows0 = df.select(group.as("g"), value.as("v"),
+                          weight.cast("long").as("__w"))
+    rows0.schema("v").dataType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+      case t => throw new IllegalArgumentException(
+        s"weighted quantile needs an integral value column, got $t")
+    }
+    val rows = rows0.withColumn("__b",
+      graft.functions.LogBucket(col("v").cast("long"), QuantileBucketBits))
+    // pass 1: per-(group, bucket) weights, then one array of them per
+    // group, walked in bucket order
+    val crossing = rows
+      .groupBy(col("g"), col("__b"))
+      .agg(sum(col("__w")).as("__w"))
+      .groupBy(col("g").as("__g"))
+      .agg(graft.functions.BucketCrossing(
+        collect_list(struct(col("__b"), col("__w"))), qNum, qDen).as("__c"))
+    // pass 2: the crossing bucket's rows. The long hash key keeps the
+    // broadcast relation a long map; the condition makes it exact (a
+    // `<=>` there would be planned as a second, string join key)
+    def same(a: Column, b: Column): Column =
+      coalesce(a === b, a.isNull && b.isNull)
+    val inBucket = rows.join(broadcast(crossing),
+      xxhash64(col("g"), col("__b")) === xxhash64(col("__g"), col("__c.cb")) &&
+        same(col("g"), col("__g")) && same(col("__b"), col("__c.cb")))
+    // a row running sum needs no per-value aggregate: the last row of
+    // each value carries the value's running weight, and a value
+    // reaches q iff one of its rows does
+    val byValue = Window.partitionBy(col("g")).orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wTot = Window.partitionBy(col("g"))
-    perValue
-      .withColumn("__cumw", sum(col("__w")).over(w))
-      .withColumn("__totw", sum(col("__w")).over(wTot))
-      .filter(col("__cumw") * qDen >= col("__totw") * qNum)
+    inBucket
+      .withColumn("__run", sum(col("__w")).over(byValue))
+      .filter(coalesce(col("__c.before") + col("__run"), col("__c.before"),
+                       col("__run")) * qDen >= col("__c.totw") * qNum)
       .groupBy(col("g"))
       .agg(min(col("v")).as("q_value"),
-           max(col("__totw")).as("total_weight"))
+           max(col("__c.totw")).as("total_weight"))
   }
+
+  /** [[weightedQuantile]]'s bucket resolution: 2^10 buckets per octave
+    * of |v|, so the crossing bucket holds ~0.1% of a spread group's rows
+    * while pass 1 emits at most 2,048 rows per octave per group. */
+  private val QuantileBucketBits = 10
 
   /** Incremental view maintenance for count/sum aggregates: fold a
     * signed change batch into a materialized aggregate state WITHOUT

@@ -3690,13 +3690,96 @@ class OpsSpec extends AnyFunSuite {
     val out = Relational.weightedQuantile(d, col("k"), col("v"),
         col("w"), 1, 2).collect().head
     assert(out.getLong(1) == 3L && out.getLong(2) == 10L)
-    // q=3/10 needs cumw >= 3: value 2 (duplicate-value pre-agg path)
+    // q=3/10 needs cumw >= 3: value 2
     val out2 = Relational.weightedQuantile(d, col("k"), col("v"),
         col("w"), 3, 10).collect().head
     assert(out2.getLong(1) == 2L)
     intercept[IllegalArgumentException] {
       Relational.weightedQuantile(d, col("k"), col("v"), col("w"), 3, 2)
     }
+  }
+
+  test("weighted quantile edge cases: driver oracle and the window walk's answers") {
+    import spark.implicits._
+    val (lo, hi, big) = (Long.MinValue, Long.MaxValue, 1000000000000000L)
+    def r(g: String, v: java.lang.Long, w: java.lang.Long) =
+      (Option(g), Option(v).map(_.longValue), Option(w).map(_.longValue))
+    val rows: Seq[WeightedQuantileOracle.Row] = Seq(
+      r(null, 5L, 1L), r(null, 7L, 3L),            // null group: its own
+      r("a", 1L, 1L), r("a", 2L, 1L),
+      r("z", 9L, 0L), r("z", 4L, 0L), r("z", 6L, 0L), // total weight 0
+      r("n", -5L, 2L), r("n", -100L, 1L), r("n", 3L, 1L), r("n", -7L, 4L),
+      r("x", lo, 1L), r("x", hi, 1L), r("x", 0L, 1L), // long extremes
+      r("x", lo + 1, 2L), r("x", hi - 1, 2L),
+      r("nv", null, 3L), r("nv", 1L, 1L), r("nv", 2L, 1L), // null values
+      r("on", null, 2L),                           // only null values
+      r("nw", 1L, null), r("nw", 2L, 0L), r("nw", 3L, 0L), // null weight
+      r("an", 1L, null)) ++                        // no weight: no row
+      Seq.fill(10)(r("r", 42L, 1L)) ++             // one repeated value
+      (0 until 40).map(i =>                        // all in one bucket
+        r("o", big + i * 7L, (i % 3).toLong))
+    val df = rows.toDF("g", "v", "w")
+    // answers of the single-window operator this selection replaced
+    val groups = Seq(None, Some("a"), Some("n"), Some("nv"), Some("nw"),
+      Some("o"), Some("on"), Some("r"), Some("x"), Some("z"))
+    val totals = Seq(4L, 2L, 8L, 5L, 0L, 39L, 2L, 10L, 7L, 0L)
+    val windowed = Map[(Int, Int), Seq[java.lang.Long]](
+      (1, 2) -> Seq(7L, 1L, -7L, 1L, 2L, big + 140, null, 42L, 0L, 4L),
+      (1, 10) -> Seq(5L, 1L, -100L, 1L, 2L, big + 28, null, 42L, lo, 4L),
+      (9, 10) -> Seq(7L, 2L, 3L, 2L, 2L, big + 245, null, 42L, hi, 4L),
+      (1, 1) -> Seq(7L, 2L, 3L, 2L, 2L, big + 266, null, 42L, hi, 4L))
+    for (((n, d), answers) <- windowed) {
+      val got = Relational.weightedQuantile(df, col("g"), col("v"), col("w"),
+          n, d).collect().map(x => (Option(x.getString(0)),
+            if (x.isNullAt(1)) None else Some(x.getLong(1)), x.getLong(2)))
+        .toSet
+      assert(got == WeightedQuantileOracle(rows, n, d), s"q = $n/$d")
+      val want = groups.lazyZip(answers).lazyZip(totals).map {
+        (g, a, t) => (g, Option(a).map(_.longValue), t) }.toSet
+      assert(got == want, s"q = $n/$d")
+    }
+    // 1,000 groups over signed values; the hash is of the window walk's
+    // sorted answers
+    val many = spark.range(20000).select(
+      concat(lit("k"), (col("id") % 1000).cast("string")).as("g"),
+      (xxhash64(col("id")) % 1000000L).as("v"), (col("id") % 5).as("w"))
+    val manyRows = many.collect().toSeq.map(x =>
+      (Option(x.getString(0)), Option(x.getLong(1)), Option(x.getLong(2))))
+    for (((n, d), hash) <- Seq((1, 2) -> -1698119951, (1, 10) -> -1580889573,
+                               (9, 10) -> 203458597, (1, 1) -> 1838296099)) {
+      val got = Relational.weightedQuantile(many, col("g"), col("v"),
+        col("w"), n, d).collect()
+      assert(got.length == 1000)
+      assert(got.map(x => (Option(x.getString(0)), Option(x.getLong(1)),
+        x.getLong(2))).toSet == WeightedQuantileOracle(manyRows, n, d))
+      assert(got.map(x => s"${x.getString(0)},${x.get(1)},${x.getLong(2)}")
+        .sorted.mkString(";").hashCode == hash, s"q = $n/$d")
+    }
+  }
+
+  test("weighted quantile walks only the crossing bucket, lazily") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    object Plan extends AdaptiveSparkPlanHelper
+    // one group of distinct values: a walk over every value would sort
+    // all of them in one task
+    val n = 200000L
+    val df = spark.range(n).select(lit("g").as("g"),
+      (col("id") * 7 - 3).as("v"), lit(1L).as("w"))
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    var out: org.apache.spark.sql.DataFrame = null
+    assert(TestSpark.jobsDuring {
+      out = Relational.weightedQuantile(df, col("g"), col("v"), col("w"), 1, 2)
+    } == 0)
+    assert(out.collect().map(x => (x.getString(0), x.getLong(1), x.getLong(2)))
+      .toSeq == Seq(("g", (n / 2 - 1) * 7 - 3, n)))
+    // the broadcast join keeps pass 2's rows: it feeds the per-value walk
+    val joins = Plan.collect(out.queryExecution.executedPlan) {
+      case j: BroadcastHashJoinExec => j }
+    assert(joins.size == 1)
+    val walked = joins.head.metrics("numOutputRows").value
+    assert(walked > 0 && walked * 20 <= n, s"$walked of $n rows walked")
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet.subsetOf(pinned))
   }
 
   test("ivm apply matches recomputation, drops zeroed groups, adds new") {

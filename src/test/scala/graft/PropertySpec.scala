@@ -360,28 +360,31 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("weighted quantile: driver-oracle equality + monotone in q") {
-    val gen = Gen.nonEmptyListOf(
-      Gen.zip(Gen.choose(-50L, 50L), Gen.choose(1L, 9L))).map(_.take(12))
-    val prop = Prop.forAll(gen) { vw =>
-      val df = vw.toDF("v", "w").withColumn("g", lit("g"))
-      def q(n: Int, d: Int): Long =
+    // 1-4 groups; small values share buckets' edges, full-range values
+    // land in far-apart buckets; zero weights make ties at the threshold
+    val value = Gen.oneOf(Gen.choose(-50L, 50L),
+      Gen.choose(Long.MinValue, Long.MaxValue))
+    val gen = Gen.choose(1, 4).flatMap(groups => Gen.nonEmptyListOf(
+      Gen.zip(Gen.choose(1, groups).map(i => s"g$i"), value,
+        Gen.choose(0L, 9L))).map(_.take(12)))
+    val prop = Prop.forAll(gen) { gvw =>
+      val df = gvw.toDF("g", "v", "w")
+      def q(n: Int, d: Int): Map[String, Long] =
         ops.Relational.weightedQuantile(df, col("g"), col("v"),
-          col("w"), n, d).collect().head.getLong(1)
-      // driver oracle: smallest v with cumw*den >= tot*num over the
-      // per-value-collapsed ascending walk
-      def oracle(num: Int, den: Int): Long = {
-        val byV = vw.groupBy(_._1).view.mapValues(_.map(_._2).sum)
-          .toSeq.sortBy(_._1)
-        val tot = byV.map(_._2).sum
-        var cum = 0L
-        byV.collectFirst {
-          case (v, w) if { cum += w; cum * den >= tot * num } => v
-        }.get
-      }
-      q(1, 2) == oracle(1, 2) && q(1, 4) == oracle(1, 4) &&
-        q(9, 10) == oracle(9, 10) &&
+          col("w"), n, d).collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+      // driver oracle: smallest v with cumw*den >= tot*num over each
+      // group's per-value-collapsed ascending walk
+      def oracle(num: Int, den: Int): Map[String, Long] =
+        WeightedQuantileOracle(
+          gvw.map { case (g, v, w) => (Some(g), Some(v), Some(w)) },
+          num, den).map { case (g, v, _) => g.get -> v.get }.toMap
+      val (q14, q12, q910, q11) = (q(1, 4), q(1, 2), q(9, 10), q(1, 1))
+      q12 == oracle(1, 2) && q14 == oracle(1, 4) &&
+        q910 == oracle(9, 10) &&
         // monotone: a higher quantile never selects a smaller value
-        q(1, 4) <= q(1, 2) && q(1, 2) <= q(9, 10) && q(9, 10) <= q(1, 1)
+        q12.keys.forall(g =>
+          q14(g) <= q12(g) && q12(g) <= q910(g) && q910(g) <= q11(g))
     }
     val r = SCTest.check(params, prop)
     assert(r.passed, r.status.toString)
