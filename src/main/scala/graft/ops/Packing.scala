@@ -122,73 +122,147 @@ object Packing {
     (out, () => { p.unpersist(); () })
   }
 
-  /** Global row positions over the total order `order` — the
+  /** Contiguous equal-block shards over the total order `order` — the
     * sharded-table writer's primitive, a count-only relative of
     * [[orderedCumsum]]. Output = input columns + `__pos`, the 0-based
-    * number of rows ordered before the row, plus a RELEASE handle for
-    * the internal caches and the row count.
+    * number of rows ordered before the row, + `shard` (`__pos div
+    * block`, block = ceil(n / numShards)), with ONE PARTITION PER
+    * SHARD: partition k holds exactly positions [k·block, (k+1)·block)
+    * in position order. Also returned: a RELEASE handle for the
+    * internal cache, and the row count n.
     *
-    * EAGER: one count pass at call time. The range-partitioned,
-    * sorted frame is persisted with each row's partition (`__pid`) and
-    * its index inside that partition (`__idx`, the low 33 bits of
-    * `monotonically_increasing_id()`, taken in the same projection
-    * above the sort). One RDD pass over that cache counts the rows of
-    * each stored `__pid`; the exclusive prefix sums of those
-    * counts (`base`) are computed on the driver and the position is
-    * `base[__pid] + __idx` — one literal-array lookup per row, so no
-    * window, no second exchange and no broadcast join.
+    * EAGER: two jobs at call time, both planned without adaptive query
+    * stages (`graftbridge.StaticPlanBridge`; AQE would launch the
+    * shuffle map and every cache build as jobs of their own). Job 1 is
+    * the range exchange's boundary sample; it evaluates the input once
+    * and persists it. Job 2 reads that cache, shuffles, sorts, persists
+    * the sorted partitions and counts each partition's rows; the input
+    * cache is released as soon as it has run. The exclusive prefix
+    * sums of those counts (`base`, on the driver) give sorted partition
+    * j the positions [base(j), base(j+1)), so a shard is a slice:
+    * partition k of the output reads only the sorted partitions that
+    * overlap its block, skips to the block's first row and tags each
+    * row with its position and shard — a narrow read of the cache, no
+    * window, no join and no second exchange. The payload is shuffled
+    * once; a writer that partitions by `shard` needs no exchange of its
+    * own.
     *
-    * SCALE-ADAPTIVE: the range shuffle takes the session's shuffle
-    * partition count and stays AQE-COALESCIBLE, so a KB-sized batch
-    * collapses to one or two tasks while a TB-sized batch sizes by the
-    * advisory partition bytes. Coalescing merges only ADJACENT range
-    * partitions, so pid order stays range order.
+    * Both caches are RDD-level persists, invisible to the session's
+    * cache manager. The input cache means the input lineage (for a
+    * merge or update, a read of the batch or the pruned table scan,
+    * and a computed order key) is evaluated once per row, and the
+    * sample and the sort see the same rows. The range exchange takes
+    * the session's shuffle partition count; the session's
+    * `spark.sql.adaptive.enabled` is never touched (concurrent writers
+    * share the session). Rows with equal `order` values may land in
+    * either order.
     *
-    * The input is persisted before the shuffle as well: the range
-    * sampler runs a job over its input, and without this cache that
-    * job is a full second evaluation of the input lineage (for a
-    * merge or update, a second read of the batch or the pruned table
-    * scan). It is released as soon as the count pass has filled the
-    * sorted cache; if the pass throws, both caches are released before
-    * the rethrow. Call the handle only AFTER the caller's last action
-    * on the returned frame. */
-  def orderedPositions(df: DataFrame, order: Column)
+    * If a job throws, both caches are released before the rethrow.
+    * The handle releases the sorted cache (blocking, so no block
+    * outlives the call); call it only AFTER the caller's last action
+    * on the frame. */
+  def contiguousShards(df: DataFrame, order: Column, numShards: Int)
       : (DataFrame, () => Unit, Long) = {
-    val clash = df.columns.intersect(Seq("__pid", "__idx", "__pos"))
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.execution.graftbridge.StaticPlanBridge
+    require(numShards >= 1, s"contiguousShards: numShards $numShards")
+    val clash = df.columns.intersect(Seq("__pos", "shard"))
     require(clash.isEmpty,
-      s"orderedPositions: column(s) ${clash.mkString(", ")} already exist")
+      s"contiguousShards: column(s) ${clash.mkString(", ")} already exist")
     val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val pIn = df.persist(level)
-    val (sorted, counts) = try {
-      val sorted = pIn.repartitionByRange(order).sortWithinPartitions(order)
-        .select(col("*"), spark_partition_id().as("__pid"),
-          (monotonically_increasing_id() -
-            shiftleft(spark_partition_id().cast("long"), 33)).as("__idx"))
-        .persist(level)
-      // ONE RDD pass over the sorted cache counts its rows per stored
-      // pid (a groupBy would add an exchange and its own job)
-      val counts = try sorted.select(col("__pid")).rdd
-        .mapPartitions { it =>
-          val c = scala.collection.mutable.LongMap.empty[Long]
-          it.foreach { r =>
-            val p = r.getInt(0).toLong
-            c(p) = c.getOrElse(p, 0L) + 1L
+    def drop(rdd: org.apache.spark.rdd.RDD[_]): Unit = {
+      rdd.unpersist(blocking = true); ()
+    }
+    val (input, inputRows) = StaticPlanBridge.persisted(df, level)
+    val (sortedDf, sorted, counts) = try {
+      val (sortedDf, sorted) = StaticPlanBridge.persisted(
+        input.repartitionByRange(order).sortWithinPartitions(order), level)
+      val counts = try sorted.sparkContext.runJob(sorted,
+          (it: Iterator[InternalRow]) => {
+            var c = 0L
+            while (it.hasNext) { it.next(); c += 1L }
+            c
+          })
+        catch { case t: Throwable => drop(sorted); throw t }
+      (sortedDf, sorted, counts)
+    } finally drop(inputRows)
+    val base = counts.scanLeft(0L)(_ + _)
+    val n = base.last
+    val out = StaticPlanBridge.frame(df.sparkSession,
+      new ShardSliceRDD(sorted, base, numShards),
+      sortedDf.schema.add("__pos", "long", nullable = false)
+        .add("shard", "long", nullable = false))
+    (out, () => drop(sorted), n)
+  }
+
+  /** One run of a shard: local rows [from, until) of sorted partition
+    * `parent`, whose first row has global position `base`. */
+  private final case class SliceRun(parent: Int, from: Long, until: Long,
+                                    base: Long)
+
+  private final class ShardSlice(val index: Int, val runs: Array[SliceRun])
+    extends org.apache.spark.Partition
+
+  /** The shard partitions of [[contiguousShards]] over the persisted
+    * sorted partitions (`base` = their exclusive row-count prefix
+    * sums): partition k yields positions [k·block, (k+1)·block) with
+    * `__pos` and `shard` appended. Narrow: each shard depends only on
+    * the sorted partitions its block overlaps. */
+  private final class ShardSliceRDD(
+      sorted: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      base: Array[Long], numShards: Int)
+    extends org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow](
+      sorted.context, Nil) {
+    import org.apache.spark.sql.catalyst.InternalRow
+
+    private val runs: Array[Array[SliceRun]] = {
+      val n = base.last
+      val block = math.max(1L, (n + numShards - 1) / numShards)
+      Array.tabulate(numShards) { k =>
+        val lo = k * block
+        val hi = math.min(lo + block, n)
+        base.indices.init.filter(j => base(j) < hi && base(j + 1) > lo)
+          .map(j => SliceRun(j, math.max(lo, base(j)) - base(j),
+            math.min(hi, base(j + 1)) - base(j), base(j)))
+          .toArray
+      }
+    }
+
+    override protected def getDependencies
+        : Seq[org.apache.spark.Dependency[_]] = {
+      val r = runs
+      Seq(new org.apache.spark.NarrowDependency(sorted) {
+        override def getParents(k: Int): Seq[Int] = r(k).map(_.parent).toSeq
+      })
+    }
+
+    override protected def getPartitions: Array[org.apache.spark.Partition] =
+      Array.tabulate(numShards)(k => new ShardSlice(k, runs(k)))
+
+    override def compute(split: org.apache.spark.Partition,
+                         ctx: org.apache.spark.TaskContext)
+        : Iterator[InternalRow] = {
+      val slice = split.asInstanceOf[ShardSlice]
+      val parents = firstParent[InternalRow].partitions
+      // (__pos, shard), appended to each row; the frame's scan projects
+      // every row to an UnsafeRow before the next is read
+      val tail = new org.apache.spark.sql.catalyst.expressions
+        .GenericInternalRow(Array[Any](0L, slice.index.toLong))
+      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
+      slice.runs.iterator.flatMap { run =>
+        val it = firstParent[InternalRow].iterator(parents(run.parent), ctx)
+        var i = 0L
+        while (i < run.from && it.hasNext) { it.next(); i += 1L }
+        new Iterator[InternalRow] {
+          def hasNext: Boolean = i < run.until && it.hasNext
+          def next(): InternalRow = {
+            tail.setLong(0, run.base + i)
+            i += 1L
+            joined(it.next(), tail)
           }
-          c.iterator
-        }.collect()
-      catch { case t: Throwable => sorted.unpersist(); throw t }
-      (sorted, counts)
-    } finally pIn.unpersist()
-    val perPid = new Array[Long](
-      if (counts.isEmpty) 0 else counts.map(_._1).max.toInt + 1)
-    counts.foreach { case (p, c) => perPid(p.toInt) = c }
-    // base(p) = rows in every pid before p; the last entry is the total
-    val base = perPid.scanLeft(0L)(_ + _)
-    val out = sorted
-      .withColumn("__pos",
-        element_at(typedLit(base.toSeq), col("__pid") + 1) + col("__idx"))
-      .drop("__pid", "__idx")
-    (out, () => { sorted.unpersist(); () }, base.last)
+        }
+      }
+    }
   }
 
   /** Pack the corpus token stream (docs laid end-to-end in `id` order)
@@ -290,14 +364,23 @@ object Packing {
     * inside each shard. Ties in `orderCol` break on id (total order);
     * same distributed prefix-sum shape as [[orderedCumsum]]. */
   def orderedShards(df: DataFrame, id: Column, orderCol: Column,
-                    numShards: Int, partitions: Int = 32): DataFrame = {
+                    numShards: Int, partitions: Int = 32): DataFrame =
+    orderedShardsReleasable(df, id, orderCol, numShards, partitions)._1
+
+  /** [[orderedShards]] plus the RELEASE handle of its prefix-sum cache
+    * (see [[orderedCumsumsReleasable]]): a writer calls it once its
+    * write has run. */
+  def orderedShardsReleasable(df: DataFrame, id: Column, orderCol: Column,
+                              numShards: Int, partitions: Int = 32)
+      : (DataFrame, () => Unit) = {
     require(numShards >= 1, s"need numShards >= 1, got $numShards")
     val keyed = df.select(id.as("doc_id"), orderCol.as("__o"))
-    val pos = orderedCumsum(keyed, struct(col("__o"), col("doc_id")),
-      lit(1L), partitions, offsetName = "__pos")
-    pos.select(col("doc_id"),
+    val (pos, release) = orderedCumsumsReleasable(keyed,
+      struct(col("__o"), col("doc_id")), Seq("__pos" -> lit(1L)),
+      partitions)
+    (pos.select(col("doc_id"),
       (col("__pos") % numShards).as("shard"),
-      expr(s"__pos div $numShards").as("pos_in_shard"))
+      expr(s"__pos div $numShards").as("pos_in_shard")), release)
   }
 
   /** T5/UL2-style span-corruption manifest: for each document,

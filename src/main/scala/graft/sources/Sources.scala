@@ -243,12 +243,16 @@ object Sources {
                   textCol: String, path: String, numShards: Int,
                   seed: Long = 0L): DataFrame = {
     import org.apache.spark.sql.functions._
-    val assigned = graft.ops.Packing.shuffleShards(df, id, numShards, seed)
+    // shuffleShards' assignment, with the handle that drops its cache
+    // once the write has run
+    val (assigned, release) = graft.ops.Packing.orderedShardsReleasable(
+      df, id, graft.ops.Sampling.idHash(id, seed), numShards)
     val data = df.withColumn("__id", id)
       .join(assigned.withColumnRenamed("doc_id", "__id"), "__id")
       .drop("__id")
-    data.repartition(numShards, col("shard"))
+    try data.repartition(numShards, col("shard"))
       .write.mode("overwrite").partitionBy("shard").parquet(path)
+    finally release()
     // manifest from the FILES, not the lineage: recomputing `data`
     // would re-run the whole assignment pipeline (double cost) and
     // describe a recomputation rather than what a reader will find
@@ -466,8 +470,8 @@ object Sources {
     * foreachBatch replays.
     *
     * Shards are CONTIGUOUS RANGES of `orderCol` (ties broken by id —
-    * the [[graft.ops.Packing.orderedShards]] prefix-sum machinery, so
-    * no single-task global sort), which is what makes min/max pruning
+    * the [[graft.ops.Packing.contiguousShards]] range sort, so no
+    * single-task global sort), which is what makes min/max pruning
     * selective; a hash order degrades gracefully to "all shards
     * overlap" but never to a wrong answer. Old snapshots stay
     * readable after new writes (snapshot isolation for readers that
@@ -1554,7 +1558,7 @@ object Sources {
     // `__ord` are its position scaffolding: an input that already
     // carries one would be silently clobbered (its `shard` even
     // hijacked as the partition key and lost on readback) — the
-    // orderedPositions clash contract.
+    // contiguousShards clash contract.
     val clash = df.columns.intersect(Seq("shard", "__pos", "__ord"))
     require(clash.isEmpty, s"writeShardedTable: reserved column(s) " +
       s"${clash.mkString(", ")} already exist in the input")
@@ -1586,28 +1590,30 @@ object Sources {
       s"writeShardedTable: partition column(s) ${partCols
         .filterNot(df.columns.contains).mkString(",")} missing from " +
         "the input")
-    // checked BEFORE the position pass persists its frames: a failure
-    // after it would leave those caches pinned
+    // checked BEFORE the shard pass persists its sorted rows: a
+    // failure after it would leave that cache pinned
     require(statsCols.forall(df.columns.contains),
       s"writeShardedTable: stats column(s) ${statsCols
         .filterNot(df.columns.contains).mkString(",")} missing from " +
         "the input")
     // contiguous range shards: global position by (orderCol, id)
-    // computed DIRECTLY on the frame (orderedPositions carries every
+    // computed DIRECTLY on the frame (contiguousShards carries every
     // input column through), never via a join back on the id — a
     // duplicate-id input (e.g. a compaction folding overlapping
     // appends) would multiply through an id join, silently inflating
     // the snapshot. The row count that sizes the blocks falls out of
-    // the SAME count pass the positions need.
-    // The order key is MATERIALIZED as `__ord` before the pass: it is
-    // then computed once per row into the pre-shuffle cache, and the
-    // range sampler, the shuffle and the sort compare the stored
+    // the SAME sort job the positions come from, and the frame comes
+    // back with one partition per shard, cut from that job's cache: the
+    // payload is shuffled once, and the write below plans no exchange.
+    // The order key is MATERIALIZED as `__ord` before the sort: it is
+    // then computed once per row into the shard pass's input cache, and
+    // the range sampler, the shuffle and the sort compare the stored
     // value — a computed key (the z-order Morton interleave over
     // per-dimension quantile buckets) was otherwise re-evaluated in
     // every comparison. Same values, so the same positions.
-    val (withPos, releasePositions, n) = graft.ops.Packing
-      .orderedPositions(df.withColumn("__ord", orderCol),
-        struct(col("__ord"), id))
+    val (data, releaseShards, n) = graft.ops.Packing
+      .contiguousShards(df.withColumn("__ord", orderCol),
+        struct(col("__ord"), id), numShards)
     // An empty snapshot would write no part files (and a versioned
     // dir with no manifest is exactly the half-written state readers
     // must never see) — fail loudly before touching the directory
@@ -1616,7 +1622,7 @@ object Sources {
     // its input for an isEmpty probe: merge and update keep the
     // current version, compaction publishes a manifest-only version.
     if (n <= 0) {
-      releasePositions()
+      releaseShards()
       onEmpty match {
         case Some(f) => return f()
         case None => ()
@@ -1624,14 +1630,13 @@ object Sources {
     }
     require(n > 0, s"writeShardedTable: empty input — refusing to " +
       s"write snapshot v$baseV at $path")
-    val block = (n + numShards - 1) / numShards
-    val data = withPos.withColumn("shard", expr(s"__pos div $block"))
     // sort WITHIN each shard by the global position: parquet
     // row-group min/max stats on the order column stay tight, so a
     // reader's pushed-down predicate prunes row groups INSIDE the
     // shards the manifest could not exclude — the second level of
     // the same stats hierarchy, paid once at write as a per-
-    // partition (spill-aware) sort, no extra shuffle
+    // partition (spill-aware) sort over a shard that already arrives
+    // in position order
     val delInfo =
     try {
       // committer v2 (direct task-commit renames): the OUTPUT
@@ -1641,8 +1646,7 @@ object Sources {
       // so a failed job's partial files are unreachable garbage for
       // vacuum, exactly like v2's documented failure mode. Saves the
       // v1 job-commit rename pass per snapshot write.
-      data.repartition(numShards, col("shard"))
-        .sortWithinPartitions(col("shard") +:
+      data.sortWithinPartitions(col("shard") +:
           partCols.map(col) :+ col("__pos"): _*)
         .drop("__pos", "__ord")
         .write.mode("overwrite")
@@ -1660,13 +1664,16 @@ object Sources {
       // out of the same files either way; vacuum/expiry already pin
       // any dir a manifest row references). The duplicate-key guard
       // that used to ride the key file's distinct count is ONE
-      // aggregation over the already-cached position frame instead.
+      // aggregation over the cached shard frame instead, run without
+      // adaptive stages so its two exchanges feed one job (SQL's
+      // distinct, so floating keys compare as SQL compares them).
       // Gated on the key NOT being a partition column: a partition
       // key lives in directory names, and a tombstone reader's
       // partition-discovered type could diverge from the written one.
       deleteKeyCol.map { idName =>
         if (!partCols.contains(idName)) {
-          val delN = data.agg(countDistinct(col(idName)))
+          val delN = org.apache.spark.sql.execution.graftbridge
+            .StaticPlanBridge.collect(data.agg(countDistinct(col(idName))))
             .head.getLong(0)
           require(delN == n,
             s"mergeShardedTable: batch has ${n - delN} duplicate " +
@@ -1693,11 +1700,12 @@ object Sources {
           (delDir, idName, delN)
         }
       }
-    // the position pass's cache served its actions — drop it, or a
-    // session issuing many snapshot commits (streaming sinks, fuzz
-    // chains, any ingest loop) accumulates pinned full-frame cache
-    // entries that strangle executor memory for every later query
-    } finally releasePositions()
+    // the sorted cache served its actions — drop it (blocking: no
+    // block outlives the commit), or a session issuing many snapshot
+    // commits (streaming sinks, fuzz chains, any ingest loop)
+    // accumulates pinned full-frame blocks that strangle executor
+    // memory for every later query
+    } finally releaseShards()
     // MANIFEST STATS, one path for every commit: one recursive listing
     // of the dir just written, reading each part file's FOOTER
     // driver-side. Per leaf it yields the byte size (the manifest then
@@ -1809,9 +1817,9 @@ object Sources {
     // post-write COMMIT INVARIANTS (committer v2 ships without v1's
     // job-commit safety net), checked BEFORE the manifest publishes:
     // exactly one part file per leaf — each leaf is written by exactly
-    // one task of the explicit shard repartition, so a retried or
+    // one task (one partition per shard), so a retried or
     // speculative task's duplicate v2 output fails the commit loudly —
-    // and the files' TOTAL ROW COUNT equals the position pass's count
+    // and the files' TOTAL ROW COUNT equals the shard pass's count
     // (a torn or partial task left rows missing on disk).
     val multi = leaves.filter(_._2.files != 1L)
     require(multi.isEmpty,
@@ -2892,7 +2900,7 @@ object Sources {
     * O(rows in small dirs), which the threshold bounds, while the
     * read side goes from one-file-per-append back to O(1) files per
     * bounded range. The merged rows re-enter the same
-    * [[graft.ops.Packing.orderedShards]] prefix-sum layout (the k-way
+    * [[graft.ops.Packing.contiguousShards]] range layout (the k-way
     * merge of pre-sorted runs, expressed as a range shuffle of only
     * the small runs). No-op (returns the current version) when fewer
     * than two dirs qualify. Old versions stay readable until

@@ -36,7 +36,7 @@ class CommitBudgetSpec extends AnyFunSuite {
       Sources.compactShardedTable(spark, path, col("doc_id"),
         col("doc_id"), 4, Seq("doc_id"), smallDirRows = 10L)
     }
-    assert((append, merge, compact) == ((7, 10, 10)),
+    assert((append, merge, compact) == ((3, 4, 5)),
       s"jobs per commit (append, merge, compact) = " +
         s"${(append, merge, compact)}")
     assert(Sources.shardedVersions(spark, path) == Seq(1L, 2L, 3L, 4L))

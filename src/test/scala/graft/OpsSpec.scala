@@ -4247,15 +4247,52 @@ class OpsSpec extends AnyFunSuite {
     assert(out(2).getString(1).startsWith("unique"))
   }
 
-  test("orderedPositions releases its caches when the count pass fails") {
+  test("contiguousShards releases its caches when a job fails") {
+    import TestSpark.jobsDuring
     def pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val before = pinned
-    val df = spark.range(200).toDF("id")
-      .withColumn("c", raise_error(lit("forced count failure")))
-    intercept[Exception] {
-      Packing.orderedPositions(df, col("id"))
-    }
-    assert((pinned -- before).isEmpty,
+    def leftPinned() = assert((pinned -- before).isEmpty,
       s"left pinned: ${(pinned -- before).toSeq.sorted}")
+    def failsWith(msg: String, jobs: Int)(
+        df: => org.apache.spark.sql.DataFrame,
+        order: org.apache.spark.sql.Column) = {
+      var e: Throwable = null
+      val ran = jobsDuring {
+        e = intercept[Exception](Packing.contiguousShards(df, order, 3))
+      }
+      assert(e.toString.contains(msg) ||
+        Option(e.getCause).exists(_.toString.contains(msg)), e.toString)
+      assert(ran == jobs, s"$msg after $ran job(s)")
+      leftPinned()
+    }
+    // every input row throws: the range sample, job 1, fails with the
+    // input cache registered
+    failsWith("forced sample failure", 1)(spark.range(200).toDF("id")
+      .withColumn("c", raise_error(lit("forced sample failure"))),
+      col("id"))
+    // the order key passes the sample (200 evaluations) and throws on
+    // its next evaluation, in the shuffle of job 2, with both caches
+    // registered
+    ShardFailure.calls.set(0)
+    val failAfter = udf { (id: Long) =>
+      if (ShardFailure.calls.incrementAndGet() > 200)
+        throw new IllegalStateException("forced sort failure")
+      id
+    }
+    failsWith("forced sort failure", 2)(spark.range(200).toDF("id"),
+      failAfter(col("id")))
+    val (shards, release, n) =
+      Packing.contiguousShards(spark.range(200).toDF("id"), col("id"), 3)
+    assert(n == 200L && shards.count() == 200L)
+    assert((pinned -- before).size == 1, "the sorted cache is pinned")
+    release()
+    leftPinned()
   }
+}
+
+/** The evaluation counter of the forced sort-job failure above: the
+  * UDF reads it statically, so every task of the local session shares
+  * it. */
+object ShardFailure {
+  val calls = new java.util.concurrent.atomic.AtomicInteger(0)
 }

@@ -9,6 +9,22 @@ class SourcesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import TestSpark.sf0001
 
+  /** After each test: no RDD it persisted stays persisted. A commit's
+    * sorted cache is persisted at the RDD level, where the session's
+    * cache manager never sees it, so this is the check that does. */
+  override def withFixture(test: NoArgTest) = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    super.withFixture(test) match {
+      case org.scalatest.Succeeded =>
+        val left = spark.sparkContext.getPersistentRDDs.keySet.toSet --
+          before
+        if (left.isEmpty) org.scalatest.Succeeded
+        else org.scalatest.Failed(
+          s"left persisted after the test: ${left.toSeq.sorted}")
+      case other => other
+    }
+  }
+
   private def nation = spark.read.parquet(s"$sf0001/nation.parquet")
     .select("n_nationkey", "n_name", "n_regionkey")
 
