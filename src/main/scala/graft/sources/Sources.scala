@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.graftbridge
+  .ParquetWriteBridge
 import org.apache.spark.sql.types.StructType
 
 /** Source/sink surface. The reference has NO I/O at all — it transforms
@@ -154,16 +156,9 @@ object Sources {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     val fs = new org.apache.hadoop.fs.Path(inPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def parquetFiles(p: String): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val it = fs.listFiles(new org.apache.hadoop.fs.Path(p), true)
-      val buf = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.hadoop.fs.FileStatus]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet")) buf += st
-      }
-      buf.toSeq
-    }
+    def parquetFiles(p: String): Seq[org.apache.hadoop.fs.FileStatus] =
+      filesUnder(fs, new org.apache.hadoop.fs.Path(p))
+        .filter(_.getPath.getName.endsWith(".parquet"))
     val before = parquetFiles(inPath)
     val totalBytes = before.map(_.getLen).sum
     val nOut = math.max(1L,
@@ -1639,23 +1634,22 @@ object Sources {
     // in position order
     val delInfo =
     try {
-      // committer v2 (direct task-commit renames): the OUTPUT
-      // committer's job-level atomicity is redundant here — the dir is
-      // fresh and token-suffixed, and only the manifest commit (which
-      // happens strictly after a successful write) makes it visible,
-      // so a failed job's partial files are unreachable garbage for
-      // vacuum, exactly like v2's documented failure mode. Saves the
-      // v1 job-commit rename pass per snapshot write.
-      data.sortWithinPartitions(col("shard") +:
-          partCols.map(col) :+ col("__pos"): _*)
-        .drop("__pos", "__ord")
-        .write.mode("overwrite")
-        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-        // one part file per leaf is a commit invariant (checked below):
-        // a session-level spark.sql.files.maxRecordsPerFile must not
-        // split a leaf's file
-        .option("maxRecordsPerFile", "0")
-        .partitionBy(partCols :+ "shard": _*).parquet(dataDir)
+      // NO OUTPUT COMMITTER: the dir is fresh and token-suffixed, and
+      // only the manifest commit (strictly after a successful write)
+      // makes it visible, so a failed job's partial files are
+      // unreachable garbage for vacuum; a committer's job protocol
+      // (setup, attempt dirs, task-commit merges, _SUCCESS) would guard
+      // nothing and costs a forked chmod per dir and file it makes on a
+      // Hadoop without native IO. Task k writes the leaves of shard k,
+      // opening one file per leaf as this sort groups them (no
+      // maxRecordsPerFile split). The commit invariants after the write
+      // (one part file per leaf, footer rows == counted rows) are what
+      // catches duplicate or torn task output.
+      ParquetWriteBridge.write(
+        data.sortWithinPartitions(col("shard") +:
+            partCols.map(col) :+ col("__pos"): _*)
+          .drop("__pos", "__ord"),
+        dataDir, partCols :+ "shard")
       // MERGE tombstone AS A REFERENCE (r14): the merge batch's key
       // set IS the data dir's id column (unique keys are enforced
       // right below), so the manifest's delete row points at the
@@ -1682,17 +1676,9 @@ object Sources {
           (dataDir, idName, delN)
         } else {
           val delDir = s"$path/del-v$baseV-$token"
-          data.select(col(idName)).distinct()
-            .write.mode("overwrite")
-            .option("mapreduce.fileoutputcommitter.algorithm.version",
-              "2")
-            .parquet(delDir)
-          // count from the written key file (tiny, key-only); an
-          // Observation would be free here but its get() blocks on the
-          // ASYNC listener bus, which lags multi-second behind rapid
-          // action chains (measured 2-3x wall regressions on the fuzz
-          // chains) — a small read-back job is strictly cheaper
-          val delN = readDir(spark, delDir).count()
+          // the key count is what the write tasks wrote: no read-back
+          val delN = ParquetWriteBridge.write(
+            data.select(col(idName)).distinct(), delDir, Nil).sum
           require(delN == n,
             s"mergeShardedTable: batch has ${n - delN} duplicate " +
               s"key(s) ($n rows, $delN distinct) — upsert needs " +
@@ -1732,9 +1718,7 @@ object Sources {
       val hconf = spark.sparkContext.hadoopConfiguration
       val root = new org.apache.hadoop.fs.Path(dataDir)
       val rootPath = root.toUri.getPath
-      val it = root.getFileSystem(hconf).listFiles(root, true)
-      while (it.hasNext) {
-        val st = it.next()
+      filesUnder(root.getFileSystem(hconf), root).foreach { st =>
         val rel = st.getPath.toUri.getPath.stripPrefix(rootPath)
           .stripPrefix("/")
         val leafRel = rel.split('/').dropRight(1).mkString("/")
@@ -1814,13 +1798,13 @@ object Sources {
         (leaf, shard, partVals, a, statVals)
       }
     }
-    // post-write COMMIT INVARIANTS (committer v2 ships without v1's
-    // job-commit safety net), checked BEFORE the manifest publishes:
-    // exactly one part file per leaf — each leaf is written by exactly
-    // one task (one partition per shard), so a retried or
-    // speculative task's duplicate v2 output fails the commit loudly —
-    // and the files' TOTAL ROW COUNT equals the shard pass's count
-    // (a torn or partial task left rows missing on disk).
+    // post-write COMMIT INVARIANTS (the write runs no output
+    // committer, so nothing else vets task output), checked BEFORE the
+    // manifest publishes: exactly one part file per leaf — each leaf is
+    // written by exactly one task (one partition per shard), so a
+    // retried or speculative task's duplicate output fails the commit
+    // loudly — and the files' TOTAL ROW COUNT equals the shard pass's
+    // count (a torn or partial task left rows missing on disk).
     val multi = leaves.filter(_._2.files != 1L)
     require(multi.isEmpty,
       s"writeShardedTable: ${multi.size} leaf dir(s) at $dataDir " +
@@ -2014,8 +1998,8 @@ object Sources {
           val mf = mkManifest(version)
           val outSchema = mf.schema
           val outRows = mf.rows.toArray
-          org.apache.spark.sql.graftbridge.LocalParquetBridge
-            .writeSingleFile(spark, stage.toString, outSchema, mf.rows)
+          ParquetWriteBridge.writeSingleFile(spark, stage.toString,
+            outSchema, mf.rows)
           require(fs.rename(stage, new org.apache.hadoop.fs.Path(
               s"$path/_manifest/v$version")),
             s"manifest publish rename failed: $stage -> v$version")
@@ -2275,6 +2259,18 @@ object Sources {
           m.dataRows.map(_.getAs[String]("leaf")).distinct.toSeq).fields))
   }
 
+  /** Every file under `root` (itself, if a file), recursively — the
+    * files `fs.listFiles(root, true)` yields, checksum files skipped
+    * alike — through plain `listStatus`. The `LocatedFileStatus` of
+    * `listFiles` copies each file's permissions, and on a Hadoop
+    * without native IO loading them forks an `ls -ld` per file (about
+    * 4-5 ms each); a plain status loads them only when asked. */
+  private def filesUnder(fs: org.apache.hadoop.fs.FileSystem,
+                         root: org.apache.hadoop.fs.Path)
+      : Seq[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(root).toSeq.flatMap(st =>
+      if (st.isDirectory) filesUnder(fs, st.getPath) else Seq(st))
+
   /** The FILE schema of a data or delete dir — the columns its part
     * files store; partition and `shard` columns live in its directory
     * names — from ONE footer read on the driver, memoized by the
@@ -2300,17 +2296,9 @@ object Sources {
       def hidden(seg: String): Boolean =
         (seg.startsWith("_") && !seg.contains("=")) ||
           seg.startsWith(".") || seg.endsWith("._COPYING_")
-      val parts = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.hadoop.fs.FileStatus]
-      if (fs.exists(root)) {
-        val it = fs.listFiles(root, true)
-        while (it.hasNext) {
-          val st = it.next()
-          if (!st.getPath.toUri.getPath.stripPrefix(rootPath)
-                .split('/').exists(s => s.nonEmpty && hidden(s)))
-            parts += st
-        }
-      }
+      val parts = (if (fs.exists(root)) filesUnder(fs, root) else Nil)
+        .filterNot(_.getPath.toUri.getPath.stripPrefix(rootPath)
+          .split('/').exists(s => s.nonEmpty && hidden(s)))
       parts.sortBy(_.getPath.toString).headOption match {
         case Some(st) =>
           val footer = new org.apache.parquet.hadoop.Footer(st.getPath,
@@ -2980,13 +2968,10 @@ object Sources {
     val baseV = meta.version + 1
     val token = java.util.UUID.randomUUID().toString.take(8)
     val delDir = s"$path/del-v$baseV-$token"
-    keys.select(col(idName)).distinct()
-      .write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .parquet(delDir)
-    // read-back count, NOT an Observation: obs.get blocks on the
-    // async listener bus (see writeSnapshot's tombstone comment)
-    val n = readDir(spark, delDir).count()
+    // the key count is what the write tasks wrote: no read-back job
+    // (an Observation's get() would block on the async listener bus)
+    val n = ParquetWriteBridge.write(
+      keys.select(col(idName)).distinct(), delDir, Nil).sum
     // nothing-matched probe folded into THIS count (delete-where's
     // old isEmpty paid a full extra evaluation of the pruned read):
     // keep the current version, leave no trace

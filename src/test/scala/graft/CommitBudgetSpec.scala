@@ -45,4 +45,25 @@ class CommitBudgetSpec extends AnyFunSuite {
     assert(ids.length == 5002 && ids.toSet.size == 5002)
     Sources.dropShardedTable(spark, path)
   }
+  test("a 100-row delete-where of a 5,000-row, 4-shard table runs a " +
+       "fixed job budget") {
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_deletebudget").toString
+    Sources.writeShardedTable(spark.range(5000).select(
+        col("id").as("doc_id"), concat(lit("d"), col("id")).as("t")),
+      col("doc_id"), col("doc_id"), path, 4, Seq("doc_id"))
+    // the pruned key read plans no job of its own here, and the
+    // tombstone write is ONE job whose tasks return the key count: no
+    // separate shuffle-stage job, no read-back count
+    val delete = jobsDuring {
+      Sources.deleteWhereShardedTable(spark, path, "doc_id",
+        col("doc_id") < 100)
+    }
+    assert(delete == 1, s"jobs per delete-where = $delete")
+    assert(Sources.shardedVersions(spark, path) == Seq(1L, 2L))
+    val ids = Sources.readShardedTable(spark, path).select("doc_id")
+      .collect().map(_.getLong(0))
+    assert(ids.length == 4900 && ids.toSet == (100L until 5000L).toSet)
+    Sources.dropShardedTable(spark, path)
+  }
 }

@@ -2272,7 +2272,7 @@ class SourcesSpec extends AnyFunSuite {
     val v1 = vdir(path, "data-v1")
     assert(new java.io.File(v1).listFiles().map(_.getName)
       .filterNot(_.startsWith(".")).toSet ==
-      Set("src=s0", "src=s1", "src=s2", "src=s3", "_SUCCESS"))
+      Set("src=s0", "src=s1", "src=s2", "src=s3"))
     // appends INHERIT the partitioning with no caller plumbing
     Sources.appendShardedTable(batch(1000, 100), col("doc_id"),
       col("doc_id"), path, 2, Seq("doc_id"))
@@ -2622,6 +2622,89 @@ class SourcesSpec extends AnyFunSuite {
     assert(pr.inputFiles.length <
       Sources.readShardedTable(spark, path).inputFiles.length)
     // the audit recomputes cleanly through the escaped leaves
+    assert(Sources.auditShardedTable(spark, path).count() == 0L)
+    Sources.dropShardedTable(spark, path)
+  }
+
+  test("a commit lays out the leaves df.write.partitionBy does (escaped, " +
+       "date and timestamp values), one part file each, and leaves no " +
+       "_temporary, _SUCCESS or hidden file behind") {
+    import org.apache.spark.sql.functions._
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_leaves").toString
+    val df = spark.range(24).select(col("id").as("doc_id"),
+      when(col("id") % 2 === 0, lit("a=b c"))
+        .otherwise(lit("x:y%z")).as("s"),
+      date_add(to_date(lit("2024-02-28")), (col("id") % 3).cast("int"))
+        .as("d"),
+      timestamp_millis(lit(1704164645500L) + col("id") % 2 * 3601000L)
+        .as("ts"))
+    Sources.writeShardedTable(df, col("doc_id"), col("doc_id"), path, 2,
+      Seq("doc_id"), partitionCols = Seq("s", "d", "ts"))
+    def under(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f => f +: (if (f.isDirectory) under(f)
+        else Nil))
+    def leaves(root: java.io.File) = under(root)
+      .filter(_.getName.startsWith("part-"))
+      .map(f => root.toPath.relativize(f.getParentFile.toPath).toString)
+    val dataDir = new java.io.File(vdir(path, "data-v1"))
+    val written = under(dataDir).filterNot(_.isDirectory)
+    val parts = written.filter(_.getName.startsWith("part-"))
+    assert(parts.forall(_.getName.endsWith(".parquet")))
+    assert(leaves(dataDir).size == leaves(dataDir).toSet.size,
+      s"a leaf with more than one part file: ${leaves(dataDir)}")
+    // every other file is a part file's checksum
+    assert(written.filterNot(parts.contains).map(_.getName).toSet ==
+      parts.map(f => s".${f.getName}.crc").toSet,
+      written.map(_.getName).mkString(","))
+    assert(!under(dataDir).exists(_.getName == "_temporary"))
+    // Spark's own writer over the same rows, each with its shard
+    val ref = new java.io.File(s"$path-ref")
+    df.join(Sources.readShardedTable(spark, path)
+        .select("doc_id", "shard"), "doc_id")
+      .write.partitionBy("s", "d", "ts", "shard").parquet(ref.toString)
+    assert(leaves(dataDir).toSet == leaves(ref).toSet)
+    assert(leaves(dataDir).size == 12, leaves(dataDir).mkString(","))
+    assert(Sources.readShardedTable(spark, path).count() == 24L)
+    Sources.dropShardedTable(spark, path)
+    org.apache.commons.io.FileUtils.deleteDirectory(ref)
+  }
+
+  test("a write-task failure fails the commit in its write job: readers " +
+       "keep the previous version, nothing stays persisted, vacuum " +
+       "reclaims the orphan dir, and a retry commits") {
+    import org.apache.spark.sql.functions._
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_writefail").toString
+    def batch(lo: Long, n: Long) = spark.range(n)
+      .select((col("id") + lo).as("doc_id"),
+        concat(lit("d"), col("id") + lo).as("t"))
+    val v1 = Sources.writeShardedTable(batch(0, 100), col("doc_id"),
+      col("doc_id"), path, 2, Seq("doc_id"))
+    def append() = Sources.appendShardedTable(batch(100, 50),
+      col("doc_id"), col("doc_id"), path, 2, Seq("doc_id"))
+    val before = persistedRdds
+    // lzo is a codec name the write accepts whose codec class is
+    // absent: planning passes, and the task that opens a file fails
+    val codec = "spark.sql.parquet.compression.codec"
+    spark.conf.set(codec, "lzo")
+    var failure: Throwable = null
+    val jobs = try TestSpark.jobsDuring {
+      failure = intercept[org.apache.spark.SparkException](append())
+    } finally spark.conf.unset(codec)
+    // range sample, sort-and-count, then the write job that failed
+    assert(jobs == 3, s"jobs $jobs")
+    assert(Iterator.iterate(failure)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("LzoCodec")),
+      failure.toString)
+    assert(Sources.shardedVersions(spark, path) == Seq(v1))
+    assert(Sources.readShardedTable(spark, path).count() == 100L)
+    assert((persistedRdds -- before).isEmpty,
+      s"left persisted: ${(persistedRdds -- before).toSeq.sorted}")
+    assert(Sources.vacuumShardedTable(spark, path, graceMs = -60000L)
+      .map(vtag) == Seq("data-v2"))
+    assert(append() == v1 + 1)
+    assert(Sources.readShardedTable(spark, path).count() == 150L)
     assert(Sources.auditShardedTable(spark, path).count() == 0L)
     Sources.dropShardedTable(spark, path)
   }
